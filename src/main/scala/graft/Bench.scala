@@ -7,7 +7,13 @@ object Bench {
     // Warm every query once on the smallest SF so per-query times measure
     // the engine (plan + shuffle + compute), not first-call classloading
     // and whole-stage-codegen compilation — one-time JVM costs that a
-    // long-lived cluster amortizes to zero.
+    // long-lived cluster amortizes to zero. The compiled classes survive to
+    // the timed passes only while they fit Spark's generated-class cache
+    // (`spark.sql.codegen.cache.maxEntries`, 2000 in graft.Sessions; at
+    // Spark's default 100 they were evicted before pass 1 ran), so each
+    // pass reports its `codegen_compiles`. Pass 1 may still compile plans
+    // the sf0.001 warm-up did not make (AQE picks joins by size); pass 2
+    // at 0 means the cache held the whole workload.
     SparkEntry.queries.foreach { case (_, fn) =>
       try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
@@ -92,10 +98,18 @@ object Bench {
         false
       }
 
-    val pass1 = names.map { case (n, fn) => n -> once(n, fn) } :+
-      (streamName -> (if (streamSetupOk) timeStreamDrain() else None))
-    val pass2 = names.map { case (n, fn) => n -> once(n, fn) } :+
-      (streamName -> (if (streamSetupOk) timeStreamDrain() else None))
+    // classes compiled by whole-stage codegen during one pass (read
+    // outside the per-query timed region)
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def timedPass(): (Seq[(String, Option[Double])], Long) = {
+      val c0 = compiles()
+      val pass = names.map { case (n, fn) => n -> once(n, fn) } :+
+        (streamName -> (if (streamSetupOk) timeStreamDrain() else None))
+      (pass, compiles() - c0)
+    }
+    val (pass1, compiles1) = timedPass()
+    val (pass2, compiles2) = timedPass()
     Fs.deleteRecursively(streamRoot.toFile)
     // A query enters the timings only if BOTH passes succeeded — a
     // one-pass-failed query has no honest min-of-2.
@@ -165,7 +179,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = mins.map(_._2).sum
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"meters":$meters,"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"codegen_compiles":[$compiles1,$compiles2],"meters":$meters,"errors":$errs,"sf":"$sfDir"}"""
     println(json)
     // Stdout of the harness run is tail-truncated (rounds 3 and 4 both lost
     // the JSON line to it); the file copy is the durable record.

@@ -26,6 +26,15 @@ object Sessions {
       .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
+      // Generated-class cache (static conf, default 100 entries). The six
+      // read-only perfbench `queries` entries alone compile ~174 classes,
+      // so at 100 a warm session evicted its warm-up's classes and
+      // recompiled 74-110 of them every pass. 2000 holds that set and the
+      // lake entries'; the retained classes cost 1.8 MB of live heap on
+      // `queries`. It does not hold all 197 bench entries (a cold pass over
+      // them compiles ~2.4k classes at sf0.001); `Bench` reports
+      // `codegen_compiles` per pass.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
 

@@ -258,12 +258,25 @@ object Dedup {
     // is config (spark.graft.cc.localEdgeCap, edges; 0 disables) and the
     // distributed O(log diameter) loop below remains the scale path —
     // 100 TB near-dup edge lists exceed any driver and take it unchanged.
+    // Eligibility: both id columns (resolved BY NAME, wherever they sit in
+    // the schema) are LongType, the list holds at most `localCap` edges and
+    // no null id (a null would throw in the union-find; the loop below
+    // keeps its own null semantics). One bounded aggregate answers both:
+    // count and null-count over the first cap+1 rows, so a list over the
+    // cap is not counted in full.
     val localCap = pairs.sparkSession.conf
       .get("spark.graft.cc.localEdgeCap", "1048576").toLong
-    val longIds = p.schema.fields.take(2).forall(
+    val ids = p.select(col(aCol), col(bCol))
+    val longIds = ids.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (localCap > 0 && longIds && p.count() <= localCap) {
-      val es = p.select(col(aCol), col(bCol)).collect()
+    val localOk = localCap > 0 && longIds && {
+      val r = ids.limit(math.min(localCap, Int.MaxValue - 1L).toInt + 1)
+        .agg(count(lit(1)), count(when(col(aCol).isNull || col(bCol).isNull, 1)))
+        .head()
+      r.getLong(0) <= localCap && r.getLong(1) == 0
+    }
+    if (localOk) {
+      val es = ids.collect()
       val parent = new java.util.HashMap[Long, Long]()
       def find(x0: Long): Long = {
         var x = x0
@@ -755,8 +768,12 @@ object Dedup {
   def sourceOverlap(docs: DataFrame, srcCol: String, textCol: String,
                     n: Int = 5, maxSources: Int = 64): DataFrame = {
     require(maxSources >= 2, s"maxSources must be >= 2, got $maxSources")
-    val sh = Materialize.spread( // r17: shingle off the scan stage
-        docs.select(col(srcCol), col(textCol)), col(textCol))
+    // r17: shingle off the scan stage. Spread on a hash of (source, text),
+    // not the raw text: the corpora this diagnostic is for repeat texts
+    // across sources, and keyed on text alone every copy of a text lands
+    // on one task — the skew the spread exists to remove.
+    val sh = Materialize.spread(
+        docs.select(col(srcCol), col(textCol)), xxhash64(col(srcCol), col(textCol)))
       .select(col(srcCol).as("_src"),
         explode(Text.shinglesOfText(col(textCol), n)).as("shv"))
     // collect_set dedups sources per shingle itself (map-side combined) —

@@ -55,11 +55,14 @@ object Materialize {
     * ≥ numShufflePartitions splits, so this is a NO-OP there — it never
     * adds an exchange to a properly-parallel scan (shuffling a corpus
     * to "spread" a single-pass kernel would double its I/O, guide §8).
-    * The repartition hashes on `keys` (deterministic under retry —
-    * guide §2.5 warns off round-robin's sort + SPARK-38388 hazards;
-    * callers pass a unique id so the hash spreads evenly). */
+    * The repartition hashes on `keys`, which are required: hashing is
+    * deterministic under retry, where round-robin carries the sort +
+    * SPARK-38388 hazards guide §2.5 warns off. Callers pass a unique id
+    * (or a hash of the row's identifying columns) so the hash spreads
+    * evenly. */
   def spread(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._
+    require(keys.nonEmpty, "Materialize.spread needs hash keys (round-robin is not retry-deterministic)")
     // kill switch (spark.graft.spread.enabled): deployments whose inputs
     // always arrive well-split can skip even the plan-shape probe; also
     // the lever for same-binary A/B evidence (plans/r17)
@@ -79,7 +82,6 @@ object Materialize {
     if (!scanShaped) return df
     val n = df.sparkSession.sessionState.conf.numShufflePartitions
     if (df.rdd.getNumPartitions >= n) df
-    else if (keys.isEmpty) df.repartition(n)
     else df.repartition(n, keys: _*)
   }
 }

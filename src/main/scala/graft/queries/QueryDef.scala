@@ -1,6 +1,8 @@
 package graft.queries
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** One verifiable query: the Spark implementation plus (when the semantics
   * are ANSI-SQL-expressible) the equivalent DuckDB oracle SQL. Queries with
@@ -17,7 +19,7 @@ object Tables {
   val timeColumns: Set[String] = Set("ts", "o_orderdate", "l_shipdate")
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = SchemaCatalog.read(spark, s"$dir/$name.parquet")
     // Normalize every time column to TimestampType (micro precision) so
     // downstream epoch arithmetic is uniform, whatever parquet flavor the
     // generator emitted. Two flavors have been observed across testdata
@@ -40,4 +42,71 @@ object Tables {
   /** Register temp views so `spark.sql` queries can use bare table names. */
   def views(spark: SparkSession, dir: String, tables: String*): Unit =
     tables.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
+}
+
+/** The session's schema catalog for [[Tables.t]]: what a metastore keeps
+  * for a path-addressed table. Inferring a Parquet schema runs one Spark
+  * job per read (footer scan), ~0.1 s each and one job per table per
+  * query; a warm session resolves each table once and then reads it with
+  * `spark.read.schema(resolved)`, which runs no job.
+  *
+  * Metadata only — never data or results: the read itself is the same
+  * Parquet scan, listing included. An entry is valid while
+  *  - the table's recursive file listing (relative name, length, mtime)
+  *    is unchanged, so a rewritten or regenerated table re-infers;
+  *  - the session's Parquet inference confs (e.g. `nanosAsLong`) read as
+  *    they did at inference.
+  * Entries are per `SparkSession` and held weakly: a sibling session
+  * (`newSession()`) with other confs never sees this one's schemas, and a
+  * stopped, unreferenced session takes its entries with it. A path that
+  * cannot be listed is not cached; the plain inferring read then raises
+  * Spark's own error. */
+private[graft] object SchemaCatalog {
+  /** Session confs that change what Parquet inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema", "spark.sql.caseSensitive")
+
+  private final case class Entry(fingerprint: Seq[(String, Long, Long)],
+                                 confs: Seq[String], schema: StructType)
+
+  private val bySession = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, Entry]]())
+
+  private def entries(spark: SparkSession) = bySession.computeIfAbsent(spark,
+    _ => new java.util.concurrent.ConcurrentHashMap[String, Entry]())
+
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val confs = inferenceConfs.map(k => spark.conf.getOption(k).getOrElse(""))
+    // listed BEFORE inference: a rewrite racing the inference leaves an
+    // entry whose fingerprint is already stale, so the next read re-infers
+    fingerprint(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(fp) =>
+        val known = entries(spark)
+        Option(known.get(path)).filter(e => e.fingerprint == fp && e.confs == confs) match {
+          case Some(e) => spark.read.schema(e.schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            known.put(path, Entry(fp, confs, df.schema))
+            df
+        }
+    }
+  }
+
+  private def fingerprint(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
+    try {
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      val base = fs.makeQualified(root).toUri.getPath
+      val it = fs.listFiles(root, true)
+      val files = Vector.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toUri.getPath.stripPrefix(base), f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    } catch { case _: java.io.IOException => None }
 }

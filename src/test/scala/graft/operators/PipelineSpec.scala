@@ -249,6 +249,50 @@ class PipelineSpec extends SparkSuite {
       "the two paths must produce the identical min-id labeling")
   }
 
+  test("connected components: fast path finds Long ids by name, not position") {
+    import spark.implicits._
+    // id columns at positions 2-3 behind a double and a string: the fast
+    // path must still take them (it once probed the first two columns)
+    val rnd = new scala.util.Random(11)
+    val pairs = (0 until 200).map { i =>
+      (i * 0.5, s"e$i", rnd.nextInt(80).toLong, rnd.nextInt(80).toLong)
+    }.toDF("score", "note", "src", "dst")
+    val (local, lr) = Dedup.connectedComponentsWithRounds(pairs, "src", "dst")
+    assert(lr == 0, "Long ids anywhere in the schema take the fast path")
+    val localMap = local.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    spark.conf.set("spark.graft.cc.localEdgeCap", "0")
+    val distMap = try {
+      val (dist, dr) = Dedup.connectedComponentsWithRounds(pairs, "src", "dst")
+      assert(dr > 0)
+      dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    } finally spark.conf.unset("spark.graft.cc.localEdgeCap")
+    assert(localMap == distMap)
+  }
+
+  test("connected components: null ids and over-cap lists take the distributed loop") {
+    import spark.implicits._
+    val withNull = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (None, Some(4L)), (Some(5L), None))
+      .toDF("a_id", "b_id")
+    val (nul, nr) = Dedup.connectedComponentsWithRounds(withNull, "a_id", "b_id")
+    assert(nr > 0, "a null id must not reach the union-find")
+    val labels = nul.collect().filter(!_.isNullAt(0)).map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(Seq(1L, 2L, 3L).forall(labels.get(_).contains(1L)))
+    spark.conf.set("spark.graft.cc.localEdgeCap", "3")
+    try {
+      val four = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a_id", "b_id")
+      val (over, or) = Dedup.connectedComponentsWithRounds(four, "a_id", "b_id")
+      assert(or > 0, "4 edges over a cap of 3 take the loop")
+      assert(over.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+    } finally spark.conf.unset("spark.graft.cc.localEdgeCap")
+  }
+
+  test("Materialize.spread requires hash keys") {
+    val df = spark.range(10).toDF("id")
+    intercept[IllegalArgumentException](Materialize.spread(df))
+  }
+
   test("exact dedup groups byte-identical docs") {
     import spark.implicits._
     val df = Seq((1L, "aaa"), (2L, "aaa"), (3L, "bbb")).toDF("doc_id", "text")
