@@ -131,9 +131,9 @@ object Bench {
     // meters cover the WHOLE QueryDef — for the lake queries that
     // includes the in-query fixture write — so they detect deltas
     // (fixture cost is constant run-to-run) rather than isolate the
-    // scan; the isolated pruned-scan byte evidence lives in the
-    // rehearsal drivers (RehearsalR11.metered), which measure the scan
-    // alone on a prebuilt lake.
+    // scan; the isolated pruned-scan byte evidence came from the round-11
+    // driver `graft.examples.RehearsalR11.metered` (commit 57b8149),
+    // which measured the scan alone on a prebuilt lake.
     val meterSet = Seq("l06_lake_pruned_read", "l13_lake_bloom_eq",
       "l14_lake_semi_join", "l15_lake_dsv2_scan", "l16_lake_semi_join_multi",
       "l18_lake_dsv2_runtime_prune", "l19_lake_dsv2_agg_pushdown",

@@ -162,11 +162,12 @@ object BenchGates {
     "l46_lake_recluster" -> Ceiling(Some(60 * MB), None,
       maxStoreOps = Some(600)),
     // 4.0 MB in / 11.4 MB shuffled / ~588 store RPCs (round 20): the
-    // rollback itself is ~40 RPCs and ZERO data bytes (RehearsalR20,
-    // flat at 100x) — the meter here is fixture + three DMLs + two
-    // rollbacks + the four exceptAll equivalence gates. A rollback that
-    // rewrote data (instead of re-pointing the chain) or a time-travel
-    // read that lost key resolution multiplies input and RPCs together
+    // rollback itself is ~40 RPCs and ZERO data bytes (flat at 100x;
+    // `graft.examples.RehearsalR20`, commit 57b8149) — the meter here
+    // is fixture + three DMLs + two rollbacks + the four exceptAll
+    // equivalence gates. A rollback that rewrote data (instead of
+    // re-pointing the chain) or a time-travel read that lost key
+    // resolution multiplies input and RPCs together
     "l47_lake_rollback" -> Ceiling(Some(12 * MB), Some(40 * MB),
       maxStoreOps = Some(1500)),
     // 37.4 MB in / 22.9 MB shuffled / ~331 store RPCs (round 20): the

@@ -37,12 +37,13 @@ import org.apache.spark.sql.functions._
   * into an already-resolved entity table; the corpus contributes only
   * k+1 slim segment rows per record and never self-joins.
   *
-  * Measured (RehearsalR9, local[32]): one planted 120k-record viral
-  * block — the blocked path's guard raises in 1.9 s (refusing 7.2·10⁹ DP
-  * evaluations); the q-gram-indexed path completes the exact planted
-  * clustering (1200 clusters × 100 members) in ~19 s and the segment
-  * (PassJoin) generator in ~13 s, because one hot block is just 120k
-  * more rows through either index. On the tiny-vocab oracle corpus the
+  * Measured (local[32], driver `graft.examples.RehearsalR9` as of
+  * commit 57b8149): one planted 120k-record viral block — the blocked
+  * path's guard raises in 1.9 s (refusing 7.2·10⁹ DP evaluations); the
+  * q-gram-indexed path completes the exact planted clustering (1200
+  * clusters × 100 members) in ~19 s and the segment (PassJoin)
+  * generator in ~13 s, because one hot block is just 120k more rows
+  * through either index. On the tiny-vocab oracle corpus the
   * ordering is the same and wider (e03 segment 2.5 s vs e02 q-gram
   * 3.5 s at sf0.1; 109k vs 545k candidates) — segments are the default
   * recommendation when key entropy is low.
@@ -156,9 +157,10 @@ object Entity {
     *
     * Selectivity caveat, measured: the index's pruning power is the gram
     * frequency distribution's rare TAIL. On high-entropy keys (random or
-    * real-world names/URLs — the RehearsalR9 corpus) pruning is near
-    * total. On keys drawn from a tiny vocabulary every gram is viral and
-    * candidates degrade toward per-gram-quadratic — raise `q` until grams
+    * real-world names/URLs — the `RehearsalR9` corpus as of commit
+    * 57b8149) pruning is near total. On keys drawn from a tiny
+    * vocabulary every gram is viral and candidates degrade toward
+    * per-gram-quadratic — raise `q` until grams
     * clear the vocabulary's combinatorics (the e02 query uses q=4 against
     * word-salad text; q=2 there generates 3× the candidates), or switch
     * to [[segmentCandidates]], whose exact-aligned-substring keys stay
@@ -342,27 +344,21 @@ object Entity {
     * i matches with ≤ i edits before and ≤ k − i after — so segment i
     * claims only σ ∈ [max(−i, Δ−(k−i)), min(i, Δ+(k−i))] and the union
     * over i stays complete. Measured on the e03 corpus (sf0.1
-    * documents.head(24), k=2, RehearsalR10): probe rows 275,000 →
-    * 95,000 (2.9×), distinct join candidates 109,639 → 60,748 (1.8×),
-    * verified-pair sets identical (287 pairs both ways) — the
-    * brute-force completeness spec additionally covers q∈{1,2}×k∈{1,2,3}.
-    * `multiMatchAware = false` keeps the plain symmetric ±k window —
-    * the rehearsal driver measures both. */
-  private[graft] def segProbeRows(base: DataFrame, k: Int,
-                                  multiMatchAware: Boolean = true): DataFrame = {
+    * documents.head(24), k=2, against the plain symmetric ±k window;
+    * driver `graft.examples.RehearsalR10` as of commit 57b8149): probe
+    * rows 275,000 → 95,000 (2.9×), distinct join candidates 109,639 →
+    * 60,748 (1.8×), verified-pair sets identical (287 pairs both ways) —
+    * the brute-force completeness spec additionally covers
+    * q∈{1,2}×k∈{1,2,3}. */
+  private[graft] def segProbeRows(base: DataFrame, k: Int): DataFrame = {
     val m = k + 1
     val stI = s"(i * (La div $m) + least(i, La % $m))"
     val liI = s"((La div $m) + if(i < La % $m, 1, 0))"
     val dlt = s"(int(_len) - La)"
     // lower/upper bounds on st, inclusive; both already fold in the
     // probe-key clip [0, len − liI]
-    val (lo, hi) =
-      if (multiMatchAware)
-        (s"greatest(0, $stI + greatest(-i, $dlt - ($k - i)))",
-         s"least(int(_len) - $liI, $stI + least(i, $dlt + ($k - i)))")
-      else
-        (s"greatest(0, $stI - $k)",
-         s"least(int(_len) - $liI, $stI + $k)")
+    val lo = s"greatest(0, $stI + greatest(-i, $dlt - ($k - i)))"
+    val hi = s"least(int(_len) - $liI, $stI + least(i, $dlt + ($k - i)))"
     base.filter(col("_len") >= 1)
       .select(col("_id"), col("_len"), explode(expr(
         s"""flatten(flatten(
@@ -407,8 +403,9 @@ object Entity {
     * Output: the TOTAL mapping `(idCol, cluster_id, is_canonical,
     * n_members)` over corpus ∪ batch.
     *
-    * Measured (RehearsalR9 step 4, local[32]): folding a 12k-record
-    * batch into the resolved 120k-record viral-block corpus runs in
+    * Measured (local[32], `graft.examples.RehearsalR9` step 4 as of
+    * commit 57b8149): folding a 12k-record batch into the resolved
+    * 120k-record viral-block corpus runs in
     * ~7 s (vs ~12 s to re-resolve the corpus from scratch with the same
     * generator) with the planted cluster growth exact — and the gap
     * widens with corpus size, since the corpus side only ever emits

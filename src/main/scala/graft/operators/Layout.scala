@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   * in one or both dimensions. With P files there are at most ~P boundary
   * crossings ACROSS ALL SCALES but only the ~log₂P coarsest ones are wide,
   * so all but a handful of files stay inside one aligned superblock —
-  * LayoutSpec and RehearsalR8 assert exactly that shape (≥ 90% of
-  * partitions tight, the rest are the documented crossers).
+  * LayoutSpec asserts exactly that shape, as did the round-8 driver
+  * `graft.examples.RehearsalR8` (commit 57b8149): ≥ 90% of partitions
+  * tight, the rest are the documented crossers.
   *
   * Keys must land in [0, 2^31): ids and epoch-seconds already do; ranks,
   * buckets, or rolling-hash values normalize anything else. The interleave

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** One place for the operators' "materialize this multi-consumer /
   * iterative intermediate" decision (r16 ADVICE: gate the mechanism
@@ -24,10 +23,6 @@ import org.apache.spark.storage.StorageLevel
   *                                       (required) — survives executor
   *                                       loss; right for spot fleets and
   *                                       multi-hour pipelines
-  *                             persist   MEMORY_AND_DISK persist — lineage
-  *                                       kept (recomputable on loss), plan
-  *                                       NOT truncated, so huge-plan sites
-  *                                       still pay planning cost
   *
   * Every operator cut point calls [[cut]]; the per-site comments at the
   * call sites say WHY that subtree must run once (self-join, N consumers,
@@ -38,9 +33,8 @@ object Materialize {
     df.sparkSession.conf.get("spark.graft.materialize", "local") match {
       case "local"    => df.localCheckpoint()
       case "reliable" => df.checkpoint()
-      case "persist"  => df.persist(StorageLevel.MEMORY_AND_DISK)
       case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize must be local|reliable|persist, got '$other'")
+        s"spark.graft.materialize must be local|reliable, got '$other'")
     }
 
   /** Raise `df`'s partition count to the session's shuffle parallelism
@@ -63,11 +57,6 @@ object Materialize {
   def spread(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._
     require(keys.nonEmpty, "Materialize.spread needs hash keys (round-robin is not retry-deterministic)")
-    // kill switch (spark.graft.spread.enabled): deployments whose inputs
-    // always arrive well-split can skip even the plan-shape probe; also
-    // the lever for same-binary A/B evidence (plans/r17)
-    if (df.sparkSession.conf.get("spark.graft.spread.enabled", "true") != "true")
-      return df
     // Only scan-shaped plans (projections/filters over a leaf) can be
     // partition-starved by an unsplittable input; anything containing a
     // join/aggregate/window/etc. is downstream of an exchange and already

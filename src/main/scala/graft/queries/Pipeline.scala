@@ -2123,10 +2123,10 @@ object Pipeline {
     // leaves one index-side segment appearing as an exact aligned
     // substring of the other key) instead of q-gram prefixes. Measured
     // on this corpus's tiny word vocabulary at sf0.1: 61k candidates at
-    // k=2 (109k before the multi-match-aware start-window selection —
-    // RehearsalR10 measures both) where the q-gram index (q=4)
-    // generates 545k — exact-substring matching stays selective where
-    // short grams go viral. The oracle is
+    // k=2 (109k before the multi-match-aware start-window selection,
+    // measured by `graft.examples.RehearsalR10` at commit 57b8149) where
+    // the q-gram index (q=4) generates 545k — exact-substring matching
+    // stays selective where short grams go viral. The oracle is
     // e02's full-quadratic recursive CTE verbatim: hash-exactness proves
     // THIS generator, too, produces every true candidate.
     "e03_entity_canonical_segment" -> QueryDef(
