@@ -23,67 +23,11 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
   import Tables.t
+  import Fixtures.{EventsVc, eventsVc, freshDir, freshLake, lakeCatalog, slot}
 
   private val ShingleN = 3
   private val JaccardThreshold = 0.8
 
-  /** Per-(sf, pid) output slot for the round-trip queries (l01/l02/l03):
-    * overwrite-mode reuses the slot within one process; the pid keeps
-    * concurrent processes disjoint; the one-time shutdown hook deletes
-    * this pid's slots (the q47 pattern) so repeated harness processes
-    * don't accumulate corpus copies in tmpdir forever. */
-  private val rtRoots = Seq("graft-jsonl-rt", "graft-lake-rt", "graft-orc-rt", "graft-lake-evo")
-  private def tmpdir: String = System.getProperty("java.io.tmpdir")
-  private lazy val rtCleanup: Unit = {
-    val pid = ProcessHandle.current().pid()
-    def sweep(keep: String => Boolean): Unit =
-      for (root <- rtRoots) {
-        val d = new java.io.File(s"$tmpdir/$root")
-        Option(d.listFiles())
-          .foreach(_.filterNot(f => keep(f.getName)).foreach(graft.Fs.deleteRecursively))
-      }
-    // Startup: reap slots whose owning process is gone (a kill -9 skips
-    // shutdown hooks; without this, orphans accumulate forever). The pid
-    // liveness probe can false-positive when the OS recycles a dead
-    // owner's pid for an unrelated process, so a week-old slot is reaped
-    // regardless. The age bound is safe for LIVE owners because rtSlot
-    // touches the slot root's mtime on every access (writes land in
-    // nested dirs and would NOT refresh it) — a live harness is never
-    // week-stale, so stale + "live pid" can only mean a recycled pid.
-    val maxAgeMs = 7L * 24 * 3600 * 1000
-    val now = System.currentTimeMillis()
-    def youngEnough(name: String): Boolean =
-      rtRoots.exists { root =>
-        val f = new java.io.File(new java.io.File(tmpdir, root), name)
-        f.exists() && now - f.lastModified() < maxAgeMs
-      }
-    sweep { name =>
-      name.lastIndexOf('-') match {
-        case -1 => true // unrecognized layout: leave it alone
-        case i => scala.util.Try(name.substring(i + 1).toLong).toOption
-          .forall(p => ProcessHandle.of(p).isPresent && youngEnough(name))
-      }
-    }
-    sys.addShutdownHook(sweep(name => !name.endsWith(s"-$pid")))
-    ()
-  }
-  private def rtSlot(root: String, dir: String): String = {
-    rtCleanup
-    val slot = new java.io.File(new java.io.File(tmpdir, root),
-      s"${new java.io.File(dir).getName}-${ProcessHandle.current().pid()}")
-    // keep the slot root's mtime fresh on every access — the liveness
-    // contract the startup reaper's age bound relies on (writes land in
-    // nested dirs and would not refresh the root)
-    if (slot.exists()) { slot.setLastModified(System.currentTimeMillis()); () }
-    // File.toURI, not string interpolation: a tmpdir containing spaces or
-    // URI-special characters must still yield a valid Hadoop URI
-    slot.toURI.toString.stripSuffix("/")
-  }
-
-  /** Tear `dataKey`'s zone-map sidecar to a valid PREFIX of itself — the
-    * l11/l12 fault fixture (what a hard-killed writer or a ranged-GET
-    * cutoff leaves), one definition so "torn" means the same bytes
-    * wherever the contract is pinned. */
   /** Order-insensitive multiset signature of a DataFrame — (row count,
     * sum of per-row xxhash64, xor of per-row xxhash64) — the CHEAP
     * stream≡batch equality gate for the metered streaming queries.
@@ -109,6 +53,10 @@ object Pipeline {
         sum(col("__h").cast("decimal(38,0)")).as("hsum"),
         expr("bit_xor(__h)").as("hxor")).head()
 
+  /** Tear `dataKey`'s zone-map sidecar to a valid PREFIX of itself — the
+    * l11/l12 fault fixture (what a hard-killed writer or a ranged-GET
+    * cutoff leaves), one definition so "torn" means the same bytes
+    * wherever the contract is pinned. */
   private def tearSidecar(store: graft.lake.Store, dataKey: String): Unit = {
     val zk = graft.lake.ZoneMaps.statsKey(dataKey)
     val whole = {
@@ -1459,22 +1407,18 @@ object Pipeline {
     // three generations exist and the current table differs.
     "p12_reproducible_corpus" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeVersions}
+        import graft.lake.LakeVersions
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("docs_rc", Seq(
           "doc_id" -> ColType.CInteger, "lang" -> ColType.CString,
           "n_chars" -> ColType.CInteger))
-        val root = rtSlot("graft-reprocorpus-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-reprocorpus-lake", dir)
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars"))
         graft.lake.LakeWriter.write(
           docs.repartitionByRange(4, col("doc_id")), schema, root,
           java.time.Instant.parse("2024-06-01T00:00:00Z"), zoneMaps = true)
-        val cat = s"p12cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "p12cat", root)
         s.sql(s"CALL $cat.system.set_retention(table => 'docs_rc', " +
           "retain => true)") // gen 1: the raw corpus
         s.sql(s"DELETE FROM $cat.docs_rc WHERE n_chars < 100") // gen 2: TRAINED ON
@@ -1527,23 +1471,19 @@ object Pipeline {
     // surviving documents.
     "p14_incremental_curation" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeWriter}
+        import graft.lake.LakeWriter
         import graft.types.{ColType, TableSchema}
         val corpusSchema = TableSchema("docs_ic", Seq(
           "doc_id" -> ColType.CInteger, "text" -> ColType.CString))
         val curSchema = TableSchema("docs_cur", Seq(
           "doc_id" -> ColType.CInteger, "text" -> ColType.CString))
-        val root = rtSlot("graft-inccur-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-inccur-lake", dir)
         val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
         val hour0 = java.time.Instant.parse("2024-06-01T00:00:00Z")
         // half A is the baseline corpus; half B arrives later
         LakeWriter.write(docs.where(pmod(col("doc_id"), lit(2)) === 0)
           .repartitionByRange(2, col("doc_id")), corpusSchema, root, hour0)
-        val cat = s"p14cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "p14cat", root)
         s.sql(s"CALL $cat.system.set_retention(table => 'docs_ic', " +
           "retain => true)").collect()                             // gen 1
         // the curated table SEEDS from the baseline snapshot the feed
@@ -1564,8 +1504,7 @@ object Pipeline {
         s.sql(s"DELETE FROM $cat.docs_ic WHERE doc_id % 13 = 7")   // gen 3
         // ---- the incremental maintainer: one MERGE per CDF batch
         var changeRows = 0L
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft-p14-ckpt").toFile.getAbsolutePath
+        val ckpt = freshDir("graft-p14-ckpt", dir)
         val q = s.readStream.format("graft-lake-cdf")
           .option("table", "docs_ic").option("startingVersion", "1")
           .load(root).writeStream
@@ -1660,22 +1599,17 @@ object Pipeline {
 
     "p13_corpus_diff" -> QueryDef(
       (s, dir) => {
-        import graft.lake.LakeCatalog
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("docs_cd", Seq(
           "doc_id" -> ColType.CInteger, "lang" -> ColType.CString,
           "n_chars" -> ColType.CInteger))
-        val root = rtSlot("graft-corpusdiff-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-corpusdiff-lake", dir)
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars"))
         graft.lake.LakeWriter.write(
           docs.repartitionByRange(4, col("doc_id")), schema, root,
           java.time.Instant.parse("2024-06-01T00:00:00Z"), zoneMaps = true)
-        val cat = s"p13cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "p13cat", root)
         s.sql(s"CALL $cat.system.set_retention(table => 'docs_cd', " +
           "retain => true)")
         s.sql(s"DELETE FROM $cat.docs_cd WHERE n_chars < 100") // gen 2
@@ -1795,7 +1729,7 @@ object Pipeline {
     "l08_parquet_merge_schema" -> QueryDef(
       (s, dir) => {
         val ev = t(s, dir, "events")
-        val out = rtSlot("graft-pqmerge", dir)
+        val out = slot("graft-pqmerge", dir)
         ev.select(col("event_id"), col("user_id"))
           .write.mode("overwrite").parquet(s"$out/v=1")
         ev.select(col("event_id"),
@@ -2460,9 +2394,8 @@ object Pipeline {
     "l05_binaryfile_source" -> QueryDef(
       (s, dir) => {
         val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        val out = rtSlot("graft-binfile-src", dir)
+        val out = freshDir("graft-binfile-src", dir)
         val outPath = java.nio.file.Paths.get(new java.net.URI(out))
-        graft.Fs.deleteRecursively(outPath.toFile)
         java.nio.file.Files.createDirectories(outPath)
         docs.collect().foreach { r =>
           java.nio.file.Files.write(outPath.resolve(f"doc_${r.getLong(0)}%06d.bin"),
@@ -2633,7 +2566,7 @@ object Pipeline {
     "l02_jsonl_roundtrip" -> QueryDef(
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val out = rtSlot("graft-jsonl-rt", dir)
+        val out = slot("graft-jsonl-rt", dir)
         docs.repartition(4).write.mode("overwrite").option("compression", "gzip").json(out)
         s.read.schema(docs.schema).json(out)
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
@@ -2652,7 +2585,7 @@ object Pipeline {
     "l03_orc_roundtrip" -> QueryDef(
       (s, dir) => {
         val ev = t(s, dir, "events")
-        val out = rtSlot("graft-orc-rt", dir)
+        val out = slot("graft-orc-rt", dir)
         ev.repartition(4).write.mode("overwrite").orc(out)
         s.read.schema(ev.schema).orc(out)
           .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
@@ -2676,14 +2609,10 @@ object Pipeline {
     "l06_lake_pruned_read" -> QueryDef(
       (s, dir) => {
         import graft.lake.{LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_z", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-zmap-lake", dir)
-        new graft.lake.HadoopStore(root).deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.types.TableSchema
+        val schema = TableSchema("events_z", EventsVc)
+        val (root, _) = freshLake("graft-zmap-lake", dir)
+        val ev = eventsVc(s, dir)
         LakeWriter.write(ev.repartitionByRange(8, col("vc")), schema, root,
           zoneMaps = true)
         val (df, report) = LakeReader.readPruned(s, root, "events_z", "vc",
@@ -2716,9 +2645,7 @@ object Pipeline {
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("events_s", Seq(
           "event_id" -> ColType.CInteger, "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-stats-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-stats-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"),
           when(col("event_id") % 7 === 0, lit(null))
             .otherwise(floor(col("value") * 100 + 0.5)).cast("long").as("vc"))
@@ -2761,12 +2688,9 @@ object Pipeline {
     "l10_lake_zorder_prune" -> QueryDef(
       (s, dir) => {
         import graft.lake.{LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_zz", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-zorder-lake", dir)
-        new graft.lake.HadoopStore(root).deletePrefix("")
+        import graft.types.TableSchema
+        val schema = TableSchema("events_zz", EventsVc)
+        val (root, store) = freshLake("graft-zorder-lake", dir)
         // vc takes the cents' LOW 10 bits: the raw value distribution is
         // exponential-ish (median ~3.5k, max ~49k), so a mid-RANGE band
         // would hold almost no rows and z-order could show no 2D win;
@@ -2807,9 +2731,8 @@ object Pipeline {
         // the 2D-vs-1D comparison reads each sidecar ONCE and derives all
         // three kept-counts from it — three readPrunedMulti calls would
         // triple the metadata walk just to discard two DataFrames
-        val store2 = new graft.lake.HadoopStore(root)
-        val stats = LakeReader.listTableKeys(store2, "events_zz", None)
-          .map(k => graft.lake.ZoneMaps.read(store2, k))
+        val stats = LakeReader.listTableKeys(store, "events_zz", None)
+          .map(k => graft.lake.ZoneMaps.read(store, k))
         def kept(bands: (String, java.math.BigDecimal, java.math.BigDecimal)*) =
           stats.count(st => bands.forall { case (c, lo, hi) =>
             graft.lake.ZoneMaps.mayContain(st, c, lo, hi) })
@@ -2858,9 +2781,7 @@ object Pipeline {
         import java.time.Instant
         val schema = TableSchema("events_h", Seq(
           "event_id" -> ColType.CInteger, "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-hour-stats-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-hour-stats-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"),
           when(col("event_id") % 7 === 0, lit(null))
             .otherwise(floor(col("value") * 100 + 0.5)).cast("long").as("vc"))
@@ -2924,9 +2845,7 @@ object Pipeline {
         import java.time.Instant
         val schema = TableSchema("events_hh", Seq(
           "event_id" -> ColType.CInteger, "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-hybrid-stats-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-hybrid-stats-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"),
           when(col("event_id") % 7 === 0, lit(null))
             .otherwise(floor(col("value") * 100 + 0.5)).cast("long").as("vc"))
@@ -2982,9 +2901,7 @@ object Pipeline {
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("events_bl", Seq(
           "event_id" -> ColType.CInteger, "etype" -> ColType.CString))
-        val root = rtSlot("graft-bloom-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-bloom-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"),
           concat(lit("e"), (col("user_id") % 7).cast("string")).as("etype"))
         LakeWriter.write(ev.repartition(4, col("etype")), schema, root,
@@ -3031,9 +2948,7 @@ object Pipeline {
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("events_sj", Seq(
           "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger))
-        val root = rtSlot("graft-semijoin-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-semijoin-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
         val n = ev.count() // sizes the rolled write: ~16 user-ranged objects
         LakeWriter.write(ev.orderBy("user_id", "event_id").coalesce(1),
@@ -3076,9 +2991,7 @@ object Pipeline {
         val schema = TableSchema("events_ds", Seq(
           "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
           "etype" -> ColType.CString))
-        val root = rtSlot("graft-dsv2-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-dsv2-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
           concat(lit("e"), pmod(col("user_id"), lit(7)).cast("string")).as("etype"))
         LakeWriter.write(ev.repartitionByRange(8, col("etype"), col("event_id")),
@@ -3118,15 +3031,10 @@ object Pipeline {
     "l17_lake_dsv2_write" -> QueryDef(
       (s, dir) => {
         import graft.lake.{LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_dw", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-dsv2-write-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.types.TableSchema
+        val schema = TableSchema("events_dw", EventsVc)
+        val (root, store) = freshLake("graft-dsv2-write-lake", dir)
+        val ev = eventsVc(s, dir)
         val evenHalf = ev.filter(pmod(col("event_id"), lit(2)) === 0)
         val oddHalf = ev.filter(pmod(col("event_id"), lit(2)) === 1)
         LakeWriter.write(evenHalf.repartition(4), schema, root,
@@ -3177,9 +3085,7 @@ object Pipeline {
         val schema = TableSchema("events_cj", Seq(
           "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
           "etype" -> ColType.CString))
-        val root = rtSlot("graft-semijoin-multi-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-semijoin-multi-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
           concat(lit("e"), pmod(col("event_id"), lit(5)).cast("string")).as("etype"))
         val n = ev.count() // sizes the rolled write: ~16 user-ranged objects
@@ -3226,9 +3132,7 @@ object Pipeline {
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("events_dp", Seq(
           "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger))
-        val root = rtSlot("graft-dsv2-dpp-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-dsv2-dpp-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
         val n = ev.count() // sizes the rolled write: ~16 user-ranged objects
         LakeWriter.write(ev.orderBy("user_id", "event_id").coalesce(1),
@@ -3286,9 +3190,7 @@ object Pipeline {
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("events_ag", Seq(
           "event_id" -> ColType.CInteger, "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-dsv2-agg-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-dsv2-agg-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"),
           when(pmod(col("event_id"), lit(7)) === 0, lit(null))
             .otherwise(floor(col("value") * 100 + 0.5)).cast("long").as("vc"))
@@ -3338,19 +3240,11 @@ object Pipeline {
     "l20_lake_sql_catalog" -> QueryDef(
       (s, dir) => {
         import graft.lake.LakeWriter
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_sc", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-sql-catalog-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val cat = s"graftlake${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.lake.LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.types.TableSchema
+        val schema = TableSchema("events_sc", EventsVc)
+        val (root, store) = freshLake("graft-sql-catalog-lake", dir)
+        val cat = lakeCatalog(s, "graftlake", root)
+        val ev = eventsVc(s, dir)
         LakeWriter.write(ev.filter(pmod(col("event_id"), lit(2)) === 0)
           .repartition(4), schema, root,
           java.time.Instant.parse("2024-06-01T08:00:00Z"), zoneMaps = true)
@@ -3393,9 +3287,7 @@ object Pipeline {
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("events_tn", Seq(
           "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger))
-        val root = rtSlot("graft-dsv2-topn-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-dsv2-topn-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
         Seq(0, 1, 2).foreach { h =>
           LakeWriter.write(
@@ -3437,15 +3329,10 @@ object Pipeline {
     "l22_lake_hour_clustered_agg" -> QueryDef(
       (s, dir) => {
         import graft.lake.LakeWriter
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_hc", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-hour-clustered-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.types.TableSchema
+        val schema = TableSchema("events_hc", EventsVc)
+        val (root, store) = freshLake("graft-hour-clustered-lake", dir)
+        val ev = eventsVc(s, dir)
         Seq(0, 1, 2).foreach { h =>
           LakeWriter.write(
             ev.filter(pmod(col("event_id"), lit(3)) === h).repartition(2),
@@ -3496,11 +3383,8 @@ object Pipeline {
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("events_ms", Seq(
           "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger))
-        val root = rtSlot("graft-stream-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ckptRoot = rtSlot("graft-stream-ckpt", dir)
-        new graft.lake.HadoopStore(ckptRoot).deletePrefix("")
+        val (root, store) = freshLake("graft-stream-lake", dir)
+        val (ckptRoot, _) = freshLake("graft-stream-ckpt", dir)
         val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
         Seq(0, 1, 2).foreach { h =>
           LakeWriter.write(
@@ -3559,8 +3443,7 @@ object Pipeline {
         val v3 = TableSchema("docs_evo2", Seq(
           "doc_id" -> ColType.CInteger, "lang" -> ColType.CString,
           "source" -> ColType.CString, "n_chars" -> ColType.CInteger))
-        val root = rtSlot("graft-lake-evo-dsv2", dir)
-        new graft.lake.HadoopStore(root).deletePrefix("")
+        val (root, store) = freshLake("graft-lake-evo-dsv2", dir)
         val docs = t(s, dir, "documents")
         for ((schema, m) <- Seq(v1 -> 0, v2 -> 1, v3 -> 2))
           LakeWriter.write(
@@ -3582,8 +3465,7 @@ object Pipeline {
           "connector reconcile must be row-identical to readReconciled")
         // zone-map bands recorded under three different headers still
         // prune the widened doc_id scan through plain Catalyst filters
-        val total = LakeReader.listTableKeys(
-          new graft.lake.HadoopStore(root), "docs_evo2", None).size
+        val total = LakeReader.listTableKeys(store, "docs_evo2", None).size
         val narrow = df.where(col("doc_id") < 60L)
         val scan = narrow.queryExecution.executedPlan.collectFirst {
           case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
@@ -3619,9 +3501,7 @@ object Pipeline {
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("events_mf", Seq(
           "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger))
-        val root = rtSlot("graft-manifest-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-manifest-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
         Seq(0, 1, 2).foreach { h =>
           LakeWriter.write(
@@ -3683,9 +3563,7 @@ object Pipeline {
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("events_pk", Seq(
           "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger))
-        val root = rtSlot("graft-objkey-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-objkey-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
         LakeWriter.write(ev.orderBy("event_id").coalesce(1), schema, root,
           maxRecordsPerObject = 2500L)
@@ -3740,16 +3618,11 @@ object Pipeline {
     "l27_lake_stream_pruned_backfill" -> QueryDef(
       (s, dir) => {
         import graft.lake.LakeWriter
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_sp", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-stream-prune-lake", dir)
-        new graft.lake.HadoopStore(root).deletePrefix("")
-        val ckptRoot = rtSlot("graft-stream-prune-ckpt", dir)
-        new graft.lake.HadoopStore(ckptRoot).deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.types.TableSchema
+        val schema = TableSchema("events_sp", EventsVc)
+        val (root, _) = freshLake("graft-stream-prune-lake", dir)
+        val (ckptRoot, _) = freshLake("graft-stream-prune-ckpt", dir)
+        val ev = eventsVc(s, dir)
         for (h <- 0 until 6)
           LakeWriter.write(
             ev.filter(pmod(col("event_id"), lit(6)) === h)
@@ -3816,15 +3689,10 @@ object Pipeline {
     "l28_lake_delete_where" -> QueryDef(
       (s, dir) => {
         import graft.lake.{LakeMaintenance, LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_dw", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-delete-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.types.TableSchema
+        val schema = TableSchema("events_dw", EventsVc)
+        val (root, store) = freshLake("graft-delete-lake", dir)
+        val ev = eventsVc(s, dir)
         // two hours, each user-RANGE-banded into 4 objects: the victims'
         // narrow user range lives in ~1 object per hour
         for (h <- 0 until 2)
@@ -3875,28 +3743,18 @@ object Pipeline {
     // oracle replays both complements from the original parquet.
     "l29_lake_sql_delete" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_sd", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-sqldelete-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeReader, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_sd", EventsVc)
+        val (root, store) = freshLake("graft-sqldelete-lake", dir)
+        val ev = eventsVc(s, dir)
         for (h <- 0 until 2)
           LakeWriter.write(
             ev.filter(pmod(col("event_id"), lit(2)) === h)
               .repartitionByRange(4, col("user_id")),
             schema, root, java.time.Instant.parse(f"2024-06-01T0$h%d:00:00Z"),
             zoneMaps = true)
-        // root-HASHED catalog name: Spark caches the catalog INSTANCE at
-        // first use, so a fixed name would pin the warm-up run's root for
-        // the whole JVM (TimeQuery warms at sf0.001, then times sf0.1)
-        val cat = s"l29cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l29cat", root)
         val before = LakeReader.listTableKeys(store, "events_sd", None)
         val d1 = s.sql(s"DELETE FROM $cat.events_sd WHERE user_id IN (3, 4, 5)")
         val p1 = d1.queryExecution.executedPlan.toString
@@ -3933,28 +3791,18 @@ object Pipeline {
     // original parquet.
     "l30_lake_sql_update" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_su", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-sqlupdate-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeReader, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_su", EventsVc)
+        val (root, store) = freshLake("graft-sqlupdate-lake", dir)
+        val ev = eventsVc(s, dir)
         for (h <- 0 until 2)
           LakeWriter.write(
             ev.filter(pmod(col("event_id"), lit(2)) === h)
               .repartitionByRange(4, col("user_id")),
             schema, root, java.time.Instant.parse(f"2024-06-01T0$h%d:00:00Z"),
             zoneMaps = true)
-        // root-HASHED catalog name: Spark caches the catalog INSTANCE at
-        // first use, so a fixed name would pin the warm-up run's root for
-        // the whole JVM (TimeQuery warms at sf0.001, then times sf0.1)
-        val cat = s"l30cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l30cat", root)
         val before = LakeReader.listTableKeys(store, "events_su", None)
         val u = s.sql(
           s"UPDATE $cat.events_su SET vc = vc + 1000000 WHERE user_id BETWEEN 3 AND 5")
@@ -3990,25 +3838,15 @@ object Pipeline {
     // DELTA write (LakeDelta): only the changed rows ship through it.
     "l31_lake_sql_merge" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_sm", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-sqlmerge-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeReader, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_sm", EventsVc)
+        val (root, store) = freshLake("graft-sqlmerge-lake", dir)
+        val ev = eventsVc(s, dir)
         LakeWriter.write(ev.repartitionByRange(8, col("event_id")),
           schema, root, java.time.Instant.parse("2024-06-01T00:00:00Z"),
           zoneMaps = true)
-        // root-HASHED catalog name: Spark caches the catalog INSTANCE at
-        // first use, so a fixed name would pin the warm-up run's root for
-        // the whole JVM (TimeQuery warms at sf0.001, then times sf0.1)
-        val cat = s"l31cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l31cat", root)
         val hot = java.sql.Timestamp.from(
           java.time.Instant.parse("2024-06-01T05:00:00Z"))
         ev.filter(pmod(col("event_id"), lit(10)) === 0)
@@ -4053,25 +3891,18 @@ object Pipeline {
     // the repair recomputed from the original parquet.
     "l32_lake_sql_overwrite" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_so", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-sqloverwrite-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeReader, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_so", EventsVc)
+        val (root, store) = freshLake("graft-sqloverwrite-lake", dir)
+        val ev = eventsVc(s, dir)
         for (h <- 0 until 2)
           LakeWriter.write(
             ev.filter(pmod(col("event_id"), lit(2)) === h)
               .repartitionByRange(4, col("user_id")),
             schema, root, java.time.Instant.parse(f"2024-06-01T0$h%d:00:00Z"),
             zoneMaps = true)
-        val cat = s"l32cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l32cat", root)
         val h1 = java.sql.Timestamp.from(
           java.time.Instant.parse("2024-06-01T01:00:00Z"))
         val before0 = LakeReader.listTableKeys(store, "events_so", None)
@@ -4109,16 +3940,11 @@ object Pipeline {
     // id list as a subquery.
     "l33_lake_sql_delete_multicol" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_mc", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-sqldelmc-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeReader, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_mc", EventsVc)
+        val (root, store) = freshLake("graft-sqldelmc-lake", dir)
+        val ev = eventsVc(s, dir)
         for (h <- 0 until 2)
           LakeWriter.write(
             ev.filter(pmod(col("event_id"), lit(2)) === h)
@@ -4132,9 +3958,7 @@ object Pipeline {
           .select("event_id").orderBy("event_id").limit(20)
           .collect().map(_.getLong(0))
         require(ids.nonEmpty, "fixture: users 3..5 must have events")
-        val cat = s"l33cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l33cat", root)
         val before = LakeReader.listTableKeys(store, "events_mc", None)
         val d = s.sql(s"DELETE FROM $cat.events_mc WHERE user_id IN (3, 4, 5) " +
           s"AND event_id IN (${ids.mkString(", ")})")
@@ -4169,25 +3993,18 @@ object Pipeline {
     // the as-of read must plan a strict subset of its objects.
     "l34_lake_time_travel" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_tt", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-timetravel-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeReader, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_tt", EventsVc)
+        val (root, store) = freshLake("graft-timetravel-lake", dir)
+        val ev = eventsVc(s, dir)
         for (h <- 0 until 2)
           LakeWriter.write(
             ev.filter(pmod(col("event_id"), lit(2)) === h)
               .repartitionByRange(4, col("event_id")),
             schema, root, java.time.Instant.parse(f"2024-06-01T0$h%d:00:00Z"),
             zoneMaps = true)
-        val cat = s"l34cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l34cat", root)
         s.sql(s"CALL $cat.system.set_retention(table => 'events_tt', " +
           "retain => true)") // gen 1: the baseline snapshot
         s.sql(s"UPDATE $cat.events_tt SET vc = vc + 1000000 " +
@@ -4234,25 +4051,18 @@ object Pipeline {
     // post-images + the MERGE's new rows).
     "l35_lake_changes_feed" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeChanges, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_cf", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-changes-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeChanges, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_cf", EventsVc)
+        val (root, store) = freshLake("graft-changes-lake", dir)
+        val ev = eventsVc(s, dir)
         for (h <- 0 until 2)
           LakeWriter.write(
             ev.filter(pmod(col("event_id"), lit(2)) === h)
               .repartitionByRange(4, col("event_id")),
             schema, root, java.time.Instant.parse(f"2024-06-01T0$h%d:00:00Z"),
             zoneMaps = true)
-        val cat = s"l35cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l35cat", root)
         s.sql(s"CALL $cat.system.set_retention(table => 'events_cf', " +
           "retain => true)")
         s.sql(s"CALL $cat.system.tag(table => 'events_cf', name => 'run-x')")
@@ -4320,22 +4130,15 @@ object Pipeline {
     // aggregates folded closed-form over the original parquet.
     "l36_lake_schema_evolution" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_se", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-evolve-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeReader, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_se", EventsVc)
+        val (root, store) = freshLake("graft-evolve-lake", dir)
+        val ev = eventsVc(s, dir)
         LakeWriter.write(ev.repartitionByRange(8, col("event_id")),
           schema, root, java.time.Instant.parse("2024-06-01T00:00:00Z"),
           zoneMaps = true)
-        val cat = s"l36cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l36cat", root)
         val preKeys = LakeReader.listTableKeys(store, "events_se", None)
         s.sql(s"ALTER TABLE $cat.events_se ADD COLUMN score DOUBLE")
         // metadata-only: the ALTER rewrote nothing
@@ -4388,25 +4191,18 @@ object Pipeline {
     // UPDATE folded closed-form over the original parquet.
     "l37_lake_mor_dml" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeVersions, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_mr", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-mor-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeReader, LakeVersions, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_mr", EventsVc)
+        val (root, store) = freshLake("graft-mor-lake", dir)
+        val ev = eventsVc(s, dir)
         for (h <- 0 until 2)
           LakeWriter.write(
             ev.filter(pmod(col("event_id"), lit(2)) === h)
               .repartitionByRange(4, col("event_id")),
             schema, root, java.time.Instant.parse(f"2024-06-01T0$h%d:00:00Z"),
             zoneMaps = true)
-        val cat = s"l37cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l37cat", root)
         s.sql(s"CALL $cat.system.set_dml_mode(table => 'events_mr', " +
           "mode => 'merge-on-read')").collect()
         val before = LakeReader.listTableKeys(store, "events_mr", None).toSet
@@ -4457,11 +4253,9 @@ object Pipeline {
     // closed-form from the parquet + the synthetic batch.
     "l41_lake_txn" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeWriter}
+        import graft.lake.{LakeReader, LakeWriter}
         import graft.types.{ColType, TableSchema}
-        val root = rtSlot("graft-txn-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-txn-lake", dir)
         val ev = t(s, dir, "events").select(col("user_id"),
           floor(col("value") * 100 + 0.5).cast("long").as("vc"))
         // base state: the corpus and its per-user additive stats table
@@ -4475,9 +4269,7 @@ object Pipeline {
           TableSchema("evstats_tx", Seq("user_id" -> ColType.CInteger,
             "n" -> ColType.CInteger, "sum_vc" -> ColType.CInteger)),
           root, java.time.Instant.parse("2024-06-01T00:00:00Z"))
-        val cat = s"l41cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l41cat", root)
         // the day's batch: 200 corpus rows + their per-user partials,
         // STAGED on both tables under one audit id
         val hot = java.sql.Timestamp.from(
@@ -4541,25 +4333,18 @@ object Pipeline {
     // post-delete insert added back).
     "l39_lake_eq_delete" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeEqDeletes, LakeReader, LakeVersions, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_eq", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-eq-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeEqDeletes, LakeReader, LakeVersions, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_eq", EventsVc)
+        val (root, store) = freshLake("graft-eq-lake", dir)
+        val ev = eventsVc(s, dir)
         for (h <- 0 until 2)
           LakeWriter.write(
             ev.filter(pmod(col("event_id"), lit(2)) === h)
               .repartitionByRange(4, col("event_id")),
             schema, root, java.time.Instant.parse(f"2024-06-01T0$h%d:00:00Z"),
             zoneMaps = true, bloomColumns = Seq("user_id"))
-        val cat = s"l39cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l39cat", root)
         s.sql(s"CALL $cat.system.set_dml_mode(table => 'events_eq', " +
           "mode => 'merge-on-read')").collect()
         val before = LakeReader.listTableKeys(store, "events_eq", None).toSet
@@ -4607,15 +4392,10 @@ object Pipeline {
     "l44_lake_auto_compact" -> QueryDef(
       (s, dir) => {
         import graft.lake.{LakeMaintenance, LakeReader, LakeVersions, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_ac", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-ac-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.types.TableSchema
+        val schema = TableSchema("events_ac", EventsVc)
+        val (root, store) = freshLake("graft-ac-lake", dir)
+        val ev = eventsVc(s, dir)
         // hours 00/01: 8 small objects each (debt); hour 02: one (clean)
         for (h <- 0 until 3)
           LakeWriter.write(
@@ -4662,15 +4442,10 @@ object Pipeline {
     "l46_lake_recluster" -> QueryDef(
       (s, dir) => {
         import graft.lake.{LakeMaintenance, LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_rc", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-rc-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.types.TableSchema
+        val schema = TableSchema("events_rc", EventsVc)
+        val (root, store) = freshLake("graft-rc-lake", dir)
+        val ev = eventsVc(s, dir)
         // scrambled: every object spans both full ranges
         LakeWriter.write(ev.repartition(8), schema, root,
           java.time.Instant.parse("2024-06-01T00:00:00Z"), zoneMaps = true)
@@ -4718,22 +4493,15 @@ object Pipeline {
     // rollback restores.
     "l47_lake_rollback" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeVersions, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_rb", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-rb-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeVersions, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_rb", EventsVc)
+        val (root, store) = freshLake("graft-rb-lake", dir)
+        val ev = eventsVc(s, dir)
         LakeWriter.write(ev.repartitionByRange(4, col("event_id")),
           schema, root, java.time.Instant.parse("2024-06-01T00:00:00Z"),
           zoneMaps = true, bloomColumns = Seq("user_id"))
-        val cat = s"l47cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l47cat", root)
         val n = ev.count()
         s.sql(s"CALL $cat.system.set_retention(table => 'events_rb', " +
           "retain => true)").collect()                             // gen 1
@@ -4808,22 +4576,15 @@ object Pipeline {
     // truth computed by DuckDB on the raw parquet.
     "l49_lake_objects_meta" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeObjectsMeta, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_om", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-om-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeObjectsMeta, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_om", EventsVc)
+        val (root, store) = freshLake("graft-om-lake", dir)
+        val ev = eventsVc(s, dir)
         LakeWriter.write(ev.repartitionByRange(4, col("event_id")),
           schema, root, java.time.Instant.parse("2024-06-01T00:00:00Z"),
           zoneMaps = true, bloomColumns = Seq("user_id"))
-        val cat = s"l49cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l49cat", root)
         s.sql(s"CALL $cat.system.set_dml_mode(table => 'events_om', " +
           "mode => 'merge-on-read')").collect()
         // a position delete: every object holds in-range ids → vectors
@@ -4861,29 +4622,21 @@ object Pipeline {
     // insert(post), a delete is its pre-images.
     "l48_lake_cdf_stream" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeChanges, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_cf", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-cf-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeChanges, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_cf", EventsVc)
+        val (root, store) = freshLake("graft-cf-lake", dir)
+        val ev = eventsVc(s, dir)
         LakeWriter.write(ev.repartitionByRange(4, col("event_id")),
           schema, root, java.time.Instant.parse("2024-06-01T00:00:00Z"),
           zoneMaps = true)
-        val cat = s"l48cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l48cat", root)
         s.sql(s"CALL $cat.system.set_retention(table => 'events_cf', " +
           "retain => true)").collect()                             // gen 1
         s.sql(s"UPDATE $cat.events_cf SET vc = vc + 1000 " +
           "WHERE user_id = 3")                                     // gen 2
         s.sql(s"DELETE FROM $cat.events_cf WHERE user_id = 5")     // gen 3
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft-cf-ckpt").toFile.getAbsolutePath
+        val ckpt = freshDir("graft-cf-ckpt", dir)
         def drainOnce(): Seq[org.apache.spark.sql.DataFrame] = {
           val got =
             new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]
@@ -4960,22 +4713,15 @@ object Pipeline {
     // arms applied, plus the inserted rows.
     "l45_lake_branch_merge" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeVersions, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_bm", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-bm-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeReader, LakeVersions, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_bm", EventsVc)
+        val (root, store) = freshLake("graft-bm-lake", dir)
+        val ev = eventsVc(s, dir)
         LakeWriter.write(ev.repartitionByRange(4, col("event_id")),
           schema, root, java.time.Instant.parse("2024-06-01T00:00:00Z"),
           zoneMaps = true)
-        val cat = s"l45cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l45cat", root)
         val n = ev.count()
         // stage the day's batch (validated-before-visible)
         val hot = java.sql.Timestamp.from(
@@ -5070,22 +4816,15 @@ object Pipeline {
     // + UPDATE applied, plus the staged batch.
     "l43_lake_branch_live_dml" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeVersions, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_xb", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-xb-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeReader, LakeVersions, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_xb", EventsVc)
+        val (root, store) = freshLake("graft-xb-lake", dir)
+        val ev = eventsVc(s, dir)
         LakeWriter.write(ev.repartitionByRange(4, col("event_id")),
           schema, root, java.time.Instant.parse("2024-06-01T00:00:00Z"),
           zoneMaps = true)
-        val cat = s"l43cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l43cat", root)
         val n = ev.count()
         // stage the day's batch (validated-before-visible)
         val hot = java.sql.Timestamp.from(
@@ -5149,23 +4888,19 @@ object Pipeline {
     // complement from the parquet + the post-delete same-tuple insert.
     "l42_lake_eq_delete_multi" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeEqDeletes, LakeReader, LakeVersions, LakeWriter}
+        import graft.lake.{LakeEqDeletes, LakeReader, LakeVersions, LakeWriter}
         import graft.types.{ColType, TableSchema}
         val schema = TableSchema("events_mc", Seq(
           "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
           "etype" -> ColType.CString, "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-eqmc-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
+        val (root, store) = freshLake("graft-eqmc-lake", dir)
         val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
           col("event_type").as("etype"),
           floor(col("value") * 100 + 0.5).cast("long").as("vc"))
         LakeWriter.write(ev.repartitionByRange(4, col("event_id")),
           schema, root, java.time.Instant.parse("2024-06-01T00:00:00Z"),
           zoneMaps = true, bloomColumns = Seq("user_id", "etype"))
-        val cat = s"l42cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l42cat", root)
         s.sql(s"CALL $cat.system.set_dml_mode(table => 'events_mc', " +
           "mode => 'merge-on-read')").collect()
         val before = LakeReader.listTableKeys(store, "events_mc", None).toSet
@@ -5212,22 +4947,15 @@ object Pipeline {
     // Oracle: the parquet + the batch as scrubbed, closed-form.
     "l40_lake_wap_branch" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeVersions, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_wb", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-wapbr-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeVersions, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_wb", EventsVc)
+        val (root, store) = freshLake("graft-wapbr-lake", dir)
+        val ev = eventsVc(s, dir)
         LakeWriter.write(ev.repartitionByRange(4, col("event_id")),
           schema, root, java.time.Instant.parse("2024-06-01T00:00:00Z"),
           zoneMaps = true)
-        val cat = s"l40cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l40cat", root)
         // the audited batch: 100 good rows + 50 poison rows (vc = -777)
         val hot = java.sql.Timestamp.from(
           java.time.Instant.parse("2024-06-01T03:00:00Z"))
@@ -5281,22 +5009,15 @@ object Pipeline {
     // parquet + the published batch, closed-form.
     "l38_lake_wap" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeCatalog, LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_wap", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-wap-lake", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.lake.{LakeReader, LakeWriter}
+        import graft.types.TableSchema
+        val schema = TableSchema("events_wap", EventsVc)
+        val (root, store) = freshLake("graft-wap-lake", dir)
+        val ev = eventsVc(s, dir)
         LakeWriter.write(ev.repartitionByRange(4, col("event_id")),
           schema, root, java.time.Instant.parse("2024-06-01T00:00:00Z"),
           zoneMaps = true)
-        val cat = s"l38cat${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+        val cat = lakeCatalog(s, "l38cat", root)
         val n = ev.count()
         val hot = java.sql.Timestamp.from(
           java.time.Instant.parse("2024-06-01T03:00:00Z"))
@@ -5346,15 +5067,10 @@ object Pipeline {
     "l07_compact_roundtrip" -> QueryDef(
       (s, dir) => {
         import graft.lake.{LakeMaintenance, LakeReader, LakeWriter}
-        import graft.types.{ColType, TableSchema}
-        val schema = TableSchema("events_c", Seq(
-          "event_id" -> ColType.CInteger, "user_id" -> ColType.CInteger,
-          "vc" -> ColType.CInteger))
-        val root = rtSlot("graft-compact-rt", dir)
-        val store = new graft.lake.HadoopStore(root)
-        store.deletePrefix("")
-        val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+        import graft.types.TableSchema
+        val schema = TableSchema("events_c", EventsVc)
+        val (root, store) = freshLake("graft-compact-rt", dir)
+        val ev = eventsVc(s, dir)
         val n = ev.count()
         LakeWriter.write(ev.repartition(16), schema, root)
         val rep = LakeMaintenance.compact(s, store, "events_c",
@@ -5383,8 +5099,7 @@ object Pipeline {
         // wiped before writing: lake writes append uniquely-named objects,
         // so reuse without the wipe would feed stale objects into the
         // read-back
-        val root = rtSlot("graft-lake-rt", dir)
-        new graft.lake.HadoopStore(root).deletePrefix("")
+        val (root, _) = freshLake("graft-lake-rt", dir)
         LakeWriter.write(t(s, dir, "events").repartition(4), schema, root)
         LakeReader.read(s, root, "events_rt")
           .groupBy(col("event_type"))
@@ -5420,8 +5135,7 @@ object Pipeline {
         val v3 = TableSchema("docs_evo", Seq(
           "doc_id" -> ColType.CInteger, "lang" -> ColType.CString,
           "source" -> ColType.CString, "n_chars" -> ColType.CInteger))
-        val root = rtSlot("graft-lake-evo", dir)
-        new graft.lake.HadoopStore(root).deletePrefix("")
+        val (root, _) = freshLake("graft-lake-evo", dir)
         val docs = t(s, dir, "documents")
         for ((schema, m) <- Seq(v1 -> 0, v2 -> 1, v3 -> 2))
           LakeWriter.write(

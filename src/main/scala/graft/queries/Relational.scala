@@ -23,20 +23,6 @@ import org.apache.spark.sql.expressions.Window
 object Relational {
   import Tables.t
 
-  /** This process's root for q47's bucketed-table copies. */
-  private lazy val bucketPidRoot: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_bucketed/" +
-      s"pid_${ProcessHandle.current().pid()}"
-
-  /** One-time shutdown hook deleting [[bucketPidRoot]]: per-(pid, thread)
-    * slots keep concurrent runs disjoint, so without this every process
-    * run would leave its bucketed table copies in tmpdir forever. */
-  private lazy val bucketCleanup: Unit = {
-    val root = new java.io.File(bucketPidRoot)
-    sys.addShutdownHook(graft.Fs.deleteRecursively(root))
-    ()
-  }
-
   def defs: Map[String, QueryDef] = Map(
 
     // ---------------------------------------------------------------------
@@ -1090,13 +1076,12 @@ object Relational {
         // pattern, plus the thread id for same-JVM concurrency): concurrent
         // sessions — bench + verify processes, or two threads of one
         // harness JVM — must not clobber each other's bucket files or
-        // catalog entries mid-read. The whole per-pid subtree is deleted at
-        // JVM exit (bucketCleanup), so repeated runs don't grow tmpdir.
+        // catalog entries mid-read. The directory is a fixture slot, so
+        // it goes with this process's slot tree.
         val slot = (s"${new java.io.File(dir).getName}_" +
           s"${ProcessHandle.current().pid()}_t${Thread.currentThread().getId}")
           .replaceAll("[^A-Za-z0-9_]", "_")
-        val base = s"$bucketPidRoot/$slot"
-        bucketCleanup
+        val base = Fixtures.slot("graft-bucketed", slot)
         graft.operators.Bucketing.writeBucketed(s,
           t(s, dir, "customer").select($"c_custkey", $"c_mktsegment"),
           s"graft_bkt_customer_$slot", s"$base/customer", buckets = 8, key = "c_custkey")
