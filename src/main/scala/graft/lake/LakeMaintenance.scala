@@ -2,7 +2,8 @@ package graft.lake
 
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lake maintenance: small-file compaction.
   *
@@ -258,12 +259,14 @@ object LakeMaintenance {
             LakeReader.readKeysAligned(spark, store, table, hourKeys, d,
               dvMap, eqMap))
             .drop("_event_hour").localCheckpoint()
-          val n = df.count()
-          val parts = math.max(1L, (n + targetRecords - 1) / targetRecords).toInt
-          LakeWriter.write(
-            shaped(df, parts), schema, store.rootUri, hour, gzip,
-            maxRecordsPerObject = targetRecords, keyPrefix = s"$staging/",
-            zoneMaps = zoneMaps, bloomColumns = bloomColumns)
+          try {
+            val n = df.count()
+            val parts = math.max(1L, (n + targetRecords - 1) / targetRecords).toInt
+            LakeWriter.write(
+              shaped(df, parts), schema, store.rootUri, hour, gzip,
+              maxRecordsPerObject = targetRecords, keyPrefix = s"$staging/",
+              zoneMaps = zoneMaps, bloomColumns = bloomColumns)
+          } finally releaseCheckpoint(df)
           // staged only: the publish is ONE statement-level commit below
           // (all hours at once) — heavy rewrite work stays concurrent,
           // the cheap renames serialize behind it
@@ -548,6 +551,15 @@ object LakeMaintenance {
     (if (excl.isEmpty) raw else raw.filterNot(excl), cutoff)
   }
 
+  /** Free a `localCheckpoint()` snapshot's blocks once its last job has
+    * run. The checkpointed RDD stays persisted until released, and
+    * `Dataset.unpersist` only consults the cache manager, which never saw
+    * it; a statement that snapshots every kept object would otherwise
+    * leave one persisted RDD per object in the session. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+
   /** Retire one data object and its zone-map sidecar (no-op when absent;
     * a sidecar fault signals, never fails — [[ZoneMaps.deleteSidecarSignaled]]). */
   private def deleteWithSidecar(store: Store, k: String): Unit = {
@@ -699,30 +711,32 @@ object LakeMaintenance {
             LakeReader.readKeysAligned(spark, store, table, Seq(key), d,
               dvMap, eqMap2))
             .drop("_event_hour").localCheckpoint()
-          val n = df.count()
-          val matches = matchRule
-          val keepDf = df.filter(not(matches)) // NULL rows never match: kept
-          val nKeep = keepDf.count()
-          val nDel = n - nKeep
-          if (nDel == 0L) (key, nDel, nKeep, Seq.empty[(String, String)])
-          else if (nKeep == 0L) (key, nDel, nKeep, Seq.empty[(String, String)])
-          else {
-            val staged = LakeWriter.write(keepDf.coalesce(1), schema,
-              store.rootUri, hour, gzip, maxRecordsPerObject = 0L,
-              keyPrefix = s"$staging/", zoneMaps = zoneMaps,
-              bloomColumns = bloomColumns)
-            // FRESH replacement names (the staged uuids), never derived
-            // from the original: the generation pointer owns crash
-            // healing now (a pre-CAS crash leaves intent-hidden orphans
-            // the janitor sweeps; tombstones cover post-CAS), and
-            // deterministic names were actively UNSAFE under
-            // concurrency — two statements scanning the same original
-            // derive the same destination, so the loser's publish or
-            // cleanup could overwrite or delete the winner's live object
-            val pairs = staged.map(w =>
-              (w.key, w.key.stripPrefix(s"$staging/")))
-            (key, nDel, nKeep, pairs)
-          }
+          try {
+            val n = df.count()
+            val matches = matchRule
+            val keepDf = df.filter(not(matches)) // NULL rows never match: kept
+            val nKeep = keepDf.count()
+            val nDel = n - nKeep
+            if (nDel == 0L) (key, nDel, nKeep, Seq.empty[(String, String)])
+            else if (nKeep == 0L) (key, nDel, nKeep, Seq.empty[(String, String)])
+            else {
+              val staged = LakeWriter.write(keepDf.coalesce(1), schema,
+                store.rootUri, hour, gzip, maxRecordsPerObject = 0L,
+                keyPrefix = s"$staging/", zoneMaps = zoneMaps,
+                bloomColumns = bloomColumns)
+              // FRESH replacement names (the staged uuids), never derived
+              // from the original: the generation pointer owns crash
+              // healing now (a pre-CAS crash leaves intent-hidden orphans
+              // the janitor sweeps; tombstones cover post-CAS), and
+              // deterministic names were actively UNSAFE under
+              // concurrency — two statements scanning the same original
+              // derive the same destination, so the loser's publish or
+              // cleanup could overwrite or delete the winner's live object
+              val pairs = staged.map(w =>
+                (w.key, w.key.stripPrefix(s"$staging/")))
+              (key, nDel, nKeep, pairs)
+            }
+          } finally releaseCheckpoint(df)
         }
       }
       val results = futures.map(Await.result(_, Duration.Inf))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -82,7 +83,7 @@ private[graft] object SchemaCatalog {
     val confs = inferenceConfs.map(k => spark.conf.getOption(k).getOrElse(""))
     // listed BEFORE inference: a rewrite racing the inference leaves an
     // entry whose fingerprint is already stale, so the next read re-infers
-    fingerprint(spark, path) match {
+    fingerprint(spark.sessionState.newHadoopConf(), path) match {
       case None => spark.read.parquet(path)
       case Some(fp) =>
         val known = entries(spark)
@@ -96,17 +97,22 @@ private[graft] object SchemaCatalog {
     }
   }
 
-  private def fingerprint(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
+  /** Sorted (relative name, length, mtime) of every file under `path`,
+    * None when it cannot be listed. */
+  private[graft] def fingerprint(conf: Configuration, path: String): Option[Seq[(String, Long, Long)]] =
     try {
       val root = new Path(path)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = root.getFileSystem(conf)
       val base = fs.makeQualified(root).toUri.getPath
-      val it = fs.listFiles(root, true)
       val files = Vector.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toUri.getPath.stripPrefix(base), f.getLen, f.getModificationTime))
+      // listStatus, not listFiles: a FileStatus already carries length
+      // and mtime, and the LocatedFileStatus listFiles builds per file
+      // forks `ls -ld` on the local filesystem without native Hadoop
+      def walk(dir: Path): Unit = fs.listStatus(dir).foreach { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else files += ((f.getPath.toUri.getPath.stripPrefix(base), f.getLen, f.getModificationTime))
       }
+      walk(root)
       Some(files.result().sorted)
     } catch { case _: java.io.IOException => None }
 }

@@ -3,8 +3,6 @@ package graft
 import graft.lake.LakeWriter
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** The bench's asserted byte-meter ceilings ([[BenchGates]]): the point
@@ -17,7 +15,7 @@ import org.apache.spark.sql.functions._
 class BenchGatesSpec extends SparkSuite {
 
   test("losing the aggregate pushdown blows l19's input-byte ceiling; keeping it passes") {
-    val root = s"file://${Files.createTempDirectory("graft-gates").toFile.getAbsolutePath}"
+    val root = tempUri("graft-gates")
     val schema = TableSchema("gates", Seq(
       "id" -> ColType.CInteger, "v" -> ColType.CInteger))
     import spark.implicits._
@@ -71,7 +69,7 @@ class BenchGatesSpec extends SparkSuite {
     assert(BenchGates.violations(Map.empty).isEmpty)
   }
   test("losing the COW read bound blows l30's input-byte ceiling; the bounded plan passes") {
-    val root = s"file://${Files.createTempDirectory("graft-gates-dml").toFile.getAbsolutePath}"
+    val root = tempUri("graft-gates-dml")
     val schema = TableSchema("gatesup", Seq(
       "id" -> ColType.CInteger, "v" -> ColType.CInteger))
     import spark.implicits._

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (the same code path getOrCreate feeds config-loaded classes into).
   * The prior default session is cleared first and restored after; the
   * underlying SparkContext is shared. */
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends AnyFunSuite with TempDirs {
 
   test("GraftExtensions installs the SQL functions via SparkSessionExtensions") {
     val prior = SparkSession.getDefaultSession
@@ -75,8 +75,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .getOrCreate()
     try {
       import spark.implicits._
-      val root = s"file://${java.nio.file.Files
-        .createTempDirectory("graft-ext-zorder").toFile.getAbsolutePath}"
+      val root = tempUri("graft-ext-zorder")
       val schema = TableSchema("zt", Seq(
         "x" -> ColType.CInteger, "y" -> ColType.CInteger))
       LakeWriter.write(Seq((1000000L, 1000000L)).toDF("x", "y"), schema,

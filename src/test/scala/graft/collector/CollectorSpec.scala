@@ -4,7 +4,6 @@ import graft.lake.{HadoopStore, LakeReader}
 import graft.types.ColType
 import graft.SparkSuite
 
-import java.nio.file.Files
 import java.util.zip.GZIPInputStream
 import scala.collection.mutable
 
@@ -14,7 +13,7 @@ import scala.collection.mutable
 class CollectorSpec extends SparkSuite {
 
   private def freshStore() = {
-    val dir = Files.createTempDirectory("graft-collector-spec").toFile
+    val dir = tempDir("graft-collector-spec").toFile
     (new HadoopStore(s"file://${dir.getAbsolutePath}"), dir)
   }
 

@@ -3,15 +3,13 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
 
 class BloomMapsSpec extends SparkSuite {
 
-  private def freshRoot() =
-    s"file://${Files.createTempDirectory("graft-bloom-spec").toFile.getAbsolutePath}"
+  private def freshRoot() = tempUri("graft-bloom-spec")
 
   private val schema = TableSchema("bt", Seq(
     "id" -> ColType.CInteger, "tag" -> ColType.CString))

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -17,8 +16,7 @@ class DeleteWhereSpec extends SparkSuite {
   private val schema = TableSchema("dw", Seq(
     "id" -> ColType.CInteger, "user" -> ColType.CString))
 
-  private def freshRoot() =
-    s"file://${Files.createTempDirectory("graft-delete-spec").toFile.getAbsolutePath}"
+  private def freshRoot() = tempUri("graft-delete-spec")
 
   /** One object at `hour` holding `rows` (id, user), bloomed on user. */
   private def land(root: String, hour: String,
@@ -36,6 +34,23 @@ class DeleteWhereSpec extends SparkSuite {
 
   private def readAll(root: String) =
     spark.read.format("graft-lake").option("table", "dw").load(root)
+
+  test("delete_where and compaction release their per-object snapshots") {
+    val root = freshRoot()
+    val store = new HadoopStore(root)
+    land(root, "2024-07-01T08:00:00Z", (0L until 20L).map(i => (i, if (i < 5) "uA" else "uB")))
+    land(root, "2024-07-01T08:00:00Z", (20L until 40L).map(i => (i, "uB")))
+    land(root, "2024-07-01T09:00:00Z", (40L until 60L).map(i => (i, "uA")))
+    val persisted0 = spark.sparkContext.getPersistentRDDs.keySet
+    LakeMaintenance.deleteWhere(spark, store, "dw", "user", Seq("uA"),
+      zoneMaps = true, bloomColumns = Seq("user"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted0,
+      "each kept object's localCheckpoint must be released after its rewrite")
+    LakeMaintenance.compact(spark, store, "dw", zoneMaps = true, bloomColumns = Seq("user"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted0,
+      "each hour's localCheckpoint must be released after its write")
+    assert(readAll(root).count() == 35L)
+  }
 
   test("planted rows vanish; non-matching objects stay byte-identical; all-match objects retire") {
     val root = freshRoot()

@@ -4,7 +4,6 @@ import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
 import java.io.{InputStream, OutputStream}
-import java.nio.file.Files
 import java.time.Instant
 
 import scala.collection.mutable.ArrayBuffer
@@ -32,8 +31,7 @@ class EnsureIndexesSpec extends SparkSuite {
 
   private def freshLake(): (String, Seq[String]) = {
     import spark.implicits._
-    val root =
-      s"file://${Files.createTempDirectory("graft-ensure-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-ensure-spec")
     val df = (0 until 1000).map(i => (i.toLong, s"t${i / 250}"))
       .toDF("id", "tag").orderBy("id").coalesce(1)
     LakeWriter.write(df, schema, root, Instant.parse("2024-06-10T08:00:00Z"),

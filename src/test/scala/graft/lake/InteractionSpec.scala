@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -19,8 +18,7 @@ class InteractionSpec extends SparkSuite {
   private val schema = TableSchema("ix", Seq(
     "id" -> ColType.CInteger, "v" -> ColType.CInteger))
 
-  private def freshRoot() =
-    s"file://${Files.createTempDirectory("graft-interact-spec").toFile.getAbsolutePath}"
+  private def freshRoot() = tempUri("graft-interact-spec")
 
   private def land(root: String, hour: String, ids: Range,
                    sch: TableSchema = schema): Unit = {
@@ -78,7 +76,7 @@ class InteractionSpec extends SparkSuite {
 
   test("stream × seal: a seal landing mid-stream changes discovery, never delivery") {
     val root = freshRoot()
-    val ckpt = Files.createTempDirectory("ix-ckpt").toFile.getAbsolutePath
+    val ckpt = tempDir("ix-ckpt").toFile.getAbsolutePath
     land(root, "2024-06-10T08:00:00Z", 0 until 20)
     val got = new scala.collection.mutable.ArrayBuffer[Long]
     val q = spark.readStream.format("graft-lake").option("table", "ix").load(root)

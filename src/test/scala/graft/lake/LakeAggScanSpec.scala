@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.DataFrame
@@ -14,8 +13,7 @@ import org.apache.spark.sql.functions._
   * exactness when a sidecar is missing or its bounds are poisoned. */
 class LakeAggScanSpec extends SparkSuite {
 
-  private def freshRoot() =
-    s"file://${Files.createTempDirectory("graft-agg-spec").toFile.getAbsolutePath}"
+  private def freshRoot() = tempUri("graft-agg-spec")
 
   private val schema = TableSchema("at", Seq(
     "id" -> ColType.CInteger, "score" -> ColType.CFloat,

@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
 class LakeCatalogSpec extends SparkSuite {
 
   private def freshCatalog(): (String, String) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-cat-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-cat-spec")
     val name = s"lakecat${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$name", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root)
@@ -65,7 +64,7 @@ class LakeCatalogSpec extends SparkSuite {
     val (cat, root) = freshCatalog()
     land(root, "ev", 500)
     spark.catalog.dropTempView("cat_drain")
-    val ckpt = Files.createTempDirectory("graft-cat-ckpt").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-cat-ckpt").toFile.getAbsolutePath
     val q = spark.readStream.table(s"$cat.ev")
       .writeStream.format("memory").queryName("cat_drain")
       .outputMode("append").option("checkpointLocation", ckpt)

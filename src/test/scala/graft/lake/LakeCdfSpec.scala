@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.DataFrame
@@ -26,8 +25,7 @@ class LakeCdfSpec extends SparkSuite {
     "vc" -> ColType.CInteger))
 
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-cdf-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-cdf-spec")
     val cat = s"cdf${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -69,7 +67,7 @@ class LakeCdfSpec extends SparkSuite {
   }
 
   private def freshCkpt(): String =
-    Files.createTempDirectory("graft-cdf-ckpt").toFile.getAbsolutePath
+    tempDir("graft-cdf-ckpt").toFile.getAbsolutePath
 
   test("per-commit attribution: each change row carries its exact generation; an update is delete+insert; the feed equals the batch diff") {
     val (cat, root, _) = fixture()

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -18,8 +17,7 @@ class LakeChangesSpec extends SparkSuite {
     "v" -> ColType.CFloat))
 
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-changes-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-changes-spec")
     val cat = s"chg${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -196,8 +194,7 @@ class LakeChangesSpec extends SparkSuite {
 
   test("a table whose columns collide with the diff's working names still feeds exactly") {
     import spark.implicits._
-    val root =
-      s"file://${Files.createTempDirectory("graft-changes-collide").toFile.getAbsolutePath}"
+    val root = tempUri("graft-changes-collide")
     val cat = s"chc${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.DataFrame
@@ -12,8 +11,7 @@ import org.apache.spark.sql.functions._
 
 class LakeDataSourceSpec extends SparkSuite {
 
-  private def freshRoot() =
-    s"file://${Files.createTempDirectory("graft-dsv2-spec").toFile.getAbsolutePath}"
+  private def freshRoot() = tempUri("graft-dsv2-spec")
 
   private val schema = TableSchema("dt", Seq(
     "id" -> ColType.CInteger, "tag" -> ColType.CString,
@@ -581,7 +579,7 @@ class LakeDataSourceSpec extends SparkSuite {
     // ---- end-to-end: writeStream.format("graft-lake") -------------------
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Long, String)]
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-stream-ckpt").toFile.getAbsolutePath
     val q = ms.toDF().toDF("id", "tag")
       .withColumn("_event_hour",
         lit(java.sql.Timestamp.from(Instant.parse("2024-07-01T23:00:00Z"))))
@@ -802,7 +800,7 @@ class LakeDataSourceSpec extends SparkSuite {
     val q = spark.readStream.format("graft-lake").option("table", "ev")
       .option("reconcile", "true").load(root)
       .writeStream.format("memory").queryName("rec_drain").outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("rec-ckpt")
+      .option("checkpointLocation", tempDir("rec-ckpt")
         .toFile.getAbsolutePath)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination(60000)

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -23,8 +22,7 @@ class LakeDmlSpec extends SparkSuite {
 
   /** Catalog + four bloomed/zone-mapped objects per hour over two hours. */
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-dml-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-dml-spec")
     val cat = s"dml${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -22,8 +21,7 @@ class LakeEqDeletesSpec extends SparkSuite {
     "tag" -> ColType.CString, "v" -> ColType.CFloat))
 
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-eq-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-eq-spec")
     val cat = s"eq${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -207,7 +205,7 @@ class LakeEqDeletesSpec extends SparkSuite {
     morOn(cat)
     // delete BEFORE first delivery: the stream must never emit the rows
     spark.sql(s"DELETE FROM $cat.ev WHERE uid = 9")
-    val ckpt = Files.createTempDirectory("graft-eq-ckpt").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-eq-ckpt").toFile.getAbsolutePath
     spark.catalog.dropTempView("eq_stream")
     val q = spark.readStream.format("graft-lake").option("table", "ev")
       .load(root)
@@ -237,8 +235,7 @@ class LakeEqDeletesSpec extends SparkSuite {
     land(root)
     val was = GuardedLakeFs.probeMemoMs
     GuardedLakeFs.probeMemoMs = 0L
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-eq-guard-ckpt").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-eq-guard-ckpt").toFile.getAbsolutePath
     val q = LakeReader.readStreamOf(spark, root, "ev", schema)
       .writeStream.option("checkpointLocation", ckpt)
       .format("noop").start()

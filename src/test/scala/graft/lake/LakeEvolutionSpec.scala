@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -20,8 +19,7 @@ class LakeEvolutionSpec extends SparkSuite {
     "vc" -> ColType.CInteger))
 
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-evo-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-evo-spec")
     val cat = s"evo${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -371,7 +369,7 @@ class LakeEvolutionSpec extends SparkSuite {
   test("a RUNNING stream adopts post-ALTER objects restart-free: evolved headers resolve by name onto the stream's start-time schema; genuine drift still fails") {
     val (cat, root, store) = fixture()
     land(root, "2024-07-01T08:00:00Z", 0, 200)
-    val ckpt = Files.createTempDirectory("graft-evo-ckpt").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-evo-ckpt").toFile.getAbsolutePath
     val q = spark.readStream.format("graft-lake").option("table", "ev2")
       .load(root)
       .writeStream.format("memory").queryName("evo_stream")
@@ -405,8 +403,7 @@ class LakeEvolutionSpec extends SparkSuite {
     // genuine drift — a mismatching header on a table with NO declared
     // schema — still fails the stream loudly (adoption requires the
     // schema record)
-    val root2 =
-      s"file://${Files.createTempDirectory("graft-evo-drift").toFile.getAbsolutePath}"
+    val root2 = tempUri("graft-evo-drift")
     land(root2, "2024-07-01T08:00:00Z", 0, 100)
     import spark.implicits._
     LakeWriter.write(
@@ -414,7 +411,7 @@ class LakeEvolutionSpec extends SparkSuite {
       TableSchema("ev2", Seq("id" -> ColType.CInteger,
         "other" -> ColType.CFloat)),
       root2, Instant.parse("2024-07-01T09:00:00Z"))
-    val ckpt2 = Files.createTempDirectory("graft-evo-ckpt2").toFile.getAbsolutePath
+    val ckpt2 = tempDir("graft-evo-ckpt2").toFile.getAbsolutePath
     val q2 = spark.readStream.format("graft-lake").option("table", "ev2")
       .load(root2)
       .writeStream.format("memory").queryName("evo_stream_drift")

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -24,8 +23,7 @@ class LakeMorSpec extends SparkSuite {
     "v" -> ColType.CFloat))
 
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-mor-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-mor-spec")
     val cat = s"mor${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -502,7 +500,7 @@ class LakeMorSpec extends SparkSuite {
     morOn(cat)
     // vector BEFORE first delivery: the stream must never emit the rows
     spark.sql(s"DELETE FROM $cat.ev WHERE v < 100.0")
-    val ckpt = Files.createTempDirectory("graft-mor-ckpt").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-mor-ckpt").toFile.getAbsolutePath
     val q = spark.readStream.format("graft-lake").option("table", "ev")
       .load(root)
       .writeStream.format("memory").queryName("mor_stream")
@@ -588,7 +586,7 @@ class LakeMorSpec extends SparkSuite {
     land(root)
     val was = GuardedLakeFs.probeMemoMs
     GuardedLakeFs.probeMemoMs = 0L // every trigger probes
-    val ckpt = Files.createTempDirectory("graft-mor-guard-ckpt")
+    val ckpt = tempDir("graft-mor-guard-ckpt")
       .toFile.getAbsolutePath
     var delivered = 0L
     val q = LakeReader.readStreamOf(spark, root, "ev", schema)

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -23,8 +22,7 @@ class LakeObjectsMetaSpec extends SparkSuite {
     "vc" -> ColType.CInteger))
 
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-om-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-om-spec")
     val cat = s"om${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -21,8 +20,7 @@ class LakeOverwriteSpec extends SparkSuite {
     "id" -> ColType.CInteger, "v" -> ColType.CInteger))
 
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-ovw-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-ovw-spec")
     val cat = s"ovw${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)

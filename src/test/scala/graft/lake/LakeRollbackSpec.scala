@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
@@ -30,8 +29,7 @@ class LakeRollbackSpec extends SparkSuite {
     "vc" -> ColType.CInteger))
 
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-rb-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-rb-spec")
     val cat = s"rb${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -360,7 +358,7 @@ class LakeRollbackSpec extends SparkSuite {
       n.get()
     }
     def freshCkpt(): String =
-      Files.createTempDirectory("graft-rb-ckpt").toFile.getAbsolutePath
+      tempDir("graft-rb-ckpt").toFile.getAbsolutePath
     // stream A delivers all 500 rows, checkpointed
     val ckptA = freshCkpt()
     assert(drain(ckptA) == 500)

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -17,8 +16,7 @@ class LakeSchemasSpec extends SparkSuite {
     "id" -> ColType.CInteger, "tag" -> ColType.CString))
 
   private def freshRoot(): (String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-schemas").toFile.getAbsolutePath}"
+    val root = tempUri("graft-schemas")
     (root, new HadoopStore(root))
   }
 
@@ -91,7 +89,7 @@ class LakeSchemasSpec extends SparkSuite {
          |SELECT id + 100 AS id, 'n' AS tag, 4.5 AS score,
          |  TIMESTAMP '2024-07-01 09:00:00+00:00' AS _event_hour
          |FROM range(10)""".stripMargin)
-    val ckpt = Files.createTempDirectory("graft-schemas-ckpt").toString
+    val ckpt = tempDir("graft-schemas-ckpt").toString
     val name = s"evo_stream_${math.abs(root.hashCode)}"
     val q = spark.readStream.format("graft-lake").option("table", "sv")
       .load(root)

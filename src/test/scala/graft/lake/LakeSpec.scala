@@ -3,15 +3,13 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
 
 class LakeSpec extends SparkSuite {
 
-  private def freshRoot() =
-    s"file://${Files.createTempDirectory("graft-lake-spec").toFile.getAbsolutePath}"
+  private def freshRoot() = tempUri("graft-lake-spec")
 
   private val schema = TableSchema("ev", Seq(
     "id" -> ColType.CInteger, "v" -> ColType.CFloat, "tag" -> ColType.CString))

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.connector.read.streaming.ReadLimit
@@ -20,10 +19,9 @@ class LakeStreamSpec extends SparkSuite {
   private val schema = TableSchema("st", Seq(
     "id" -> ColType.CInteger, "tag" -> ColType.CString))
 
-  private def freshRoot() =
-    s"file://${Files.createTempDirectory("graft-stream-spec").toFile.getAbsolutePath}"
+  private def freshRoot() = tempUri("graft-stream-spec")
   private def freshCkpt() =
-    Files.createTempDirectory("graft-stream-ckpt").toFile.getAbsolutePath
+    tempDir("graft-stream-ckpt").toFile.getAbsolutePath
 
   /** n rows landed at `hour` as ~`objects` rolled objects. */
   private def land(root: String, hour: String, ids: Range, objects: Int = 2): Unit = {

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
@@ -20,8 +19,7 @@ class LakeVersionsSpec extends SparkSuite {
     "id" -> ColType.CInteger, "vc" -> ColType.CInteger))
 
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-ver-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-ver-spec")
     val cat = s"ver${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -346,8 +344,7 @@ class LakeVersionsSpec extends SparkSuite {
   }
 
   test("a LARGE retire self-prunes the chain: the head record's tombstones do not carry the million-key retention pass forever") {
-    val root =
-      s"file://${Files.createTempDirectory("graft-ver-prune").toFile.getAbsolutePath}"
+    val root = tempUri("graft-ver-prune")
     val store = new HadoopStore(root)
     import spark.implicits._
     LakeWriter.write(
@@ -375,8 +372,7 @@ class LakeVersionsSpec extends SparkSuite {
   }
 
   test("generation records round-trip exactly (seeded randomized), and torn prefixes parse as ABSENT, never as wrong data") {
-    val root =
-      s"file://${Files.createTempDirectory("graft-ver-wire").toFile.getAbsolutePath}"
+    val root = tempUri("graft-ver-wire")
     val store = new HadoopStore(root)
     val rnd = new scala.util.Random(20260815L)
     def key() = f"2024/07/${1 + rnd.nextInt(28)}%02d/${rnd.nextInt(24)}%02d/" +
@@ -423,8 +419,7 @@ class LakeVersionsSpec extends SparkSuite {
   }
 
   test("intents round-trip exactly — v1 lists and v2 branch state (seeded randomized); torn prefixes parse as ABSENT") {
-    val root =
-      s"file://${Files.createTempDirectory("graft-intent-wire").toFile.getAbsolutePath}"
+    val root = tempUri("graft-intent-wire")
     val store = new HadoopStore(root)
     val rnd = new scala.util.Random(20260816L)
     def key() = f"2024/07/${1 + rnd.nextInt(28)}%02d/${rnd.nextInt(24)}%02d/" +

@@ -3,7 +3,6 @@ package graft.lake
 import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -23,8 +22,7 @@ class LakeWapSpec extends SparkSuite {
     "v" -> ColType.CFloat))
 
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-wap-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-wap-spec")
     val cat = s"wap${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -113,7 +111,7 @@ class LakeWapSpec extends SparkSuite {
         .option("withAudit", "bad-batch").load(root)
         .writeStream.format("memory").queryName("wap_refuse")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft-wap-rc").toFile.getAbsolutePath)
+          tempDir("graft-wap-rc").toFile.getAbsolutePath)
         .start()
       try {
         val se = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -167,7 +165,7 @@ class LakeWapSpec extends SparkSuite {
         s"staged $k's sidecar must survive the orphan sweep")
     }
 
-    val ckpt = Files.createTempDirectory("graft-wap-ckpt").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-wap-ckpt").toFile.getAbsolutePath
     val q = spark.readStream.format("graft-lake").option("table", "ev")
       .load(root)
       .writeStream.format("memory").queryName("wap_stream")
@@ -246,8 +244,7 @@ class LakeWapSpec extends SparkSuite {
   test("BRANCH MERGE, all four arms: matched UPDATE/DELETE patch the branch view across lineages, NOT-MATCHED inserts take BATCH lineage; plain readers isolated; publish is one CAS with the exact CDC split; the stream delivers batch+inserts once, never live rewrites") {
     val (cat, root, store) = fixture()
     land(root) // ids 0..499 as two 250-row objects (hour 08)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-wap-bm-ckpt").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-wap-bm-ckpt").toFile.getAbsolutePath
     val got = new scala.collection.mutable.ArrayBuffer[Long]
     val q = spark.readStream.format("graft-lake").option("table", "ev")
       .load(root).writeStream.option("checkpointLocation", ckpt)
@@ -342,8 +339,7 @@ class LakeWapSpec extends SparkSuite {
     land(root) // ids 0..499 as two 250-row objects
     // a stream watches throughout: branch work must deliver NOTHING,
     // the publish exactly the batch (live rewrites are CDC-skippable)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-wap-xb-ckpt").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-wap-xb-ckpt").toFile.getAbsolutePath
     val got = new scala.collection.mutable.ArrayBuffer[Long]
     val q = spark.readStream.format("graft-lake").option("table", "ev")
       .load(root).writeStream.option("checkpointLocation", ckpt)

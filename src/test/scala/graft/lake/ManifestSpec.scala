@@ -4,7 +4,6 @@ import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
 import java.io.{InputStream, OutputStream}
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -38,8 +37,7 @@ class ManifestSpec extends SparkSuite {
   private val schema = TableSchema("mt", Seq(
     "id" -> ColType.CInteger, "tag" -> ColType.CString))
 
-  private def freshRoot() =
-    s"file://${Files.createTempDirectory("graft-manifest-spec").toFile.getAbsolutePath}"
+  private def freshRoot() = tempUri("graft-manifest-spec")
 
   private def land(root: String, hour: String, ids: Range): Unit = {
     import spark.implicits._
@@ -356,7 +354,7 @@ class ManifestSpec extends SparkSuite {
     val q = spark.readStream.format("graft-lake").option("table", "mt").load(root)
       .writeStream.format("memory").queryName("mt_drain").outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("mt-ckpt").toFile.getAbsolutePath)
+        tempDir("mt-ckpt").toFile.getAbsolutePath)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
     assert(spark.table("mt_drain").count() == 60)

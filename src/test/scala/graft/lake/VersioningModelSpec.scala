@@ -4,7 +4,6 @@ import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
 import java.io.{InputStream, OutputStream}
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -26,8 +25,7 @@ class VersioningModelSpec extends SparkSuite {
   private val HourB = Instant.parse("2024-07-01T09:00:00Z")
 
   test("seeded randomized DML/maintenance sequences: the versioned table equals the model after every step") {
-    val root =
-      s"file://${Files.createTempDirectory("graft-vmodel").toFile.getAbsolutePath}"
+    val root = tempUri("graft-vmodel")
     val store = new HadoopStore(root)
     val cat = s"vm${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
@@ -313,8 +311,7 @@ class VersioningModelSpec extends SparkSuite {
   }
 
   test("the commit protocol under S3-like semantics: copy+delete publish commits exactly; a torn CAS aborts with the table intact and the re-run reclaims the slot") {
-    val root =
-      s"file://${Files.createTempDirectory("graft-vs3").toFile.getAbsolutePath}"
+    val root = tempUri("graft-vs3")
     val store = new S3ishStore(new HadoopStore(root))
     import spark.implicits._
     LakeWriter.write(

@@ -4,15 +4,13 @@ import graft.SparkSuite
 import graft.types.{ColType, TableSchema}
 
 import java.math.BigDecimal
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
 
 class ZoneMapsSpec extends SparkSuite {
 
-  private def freshRoot() =
-    s"file://${Files.createTempDirectory("graft-zmap-spec").toFile.getAbsolutePath}"
+  private def freshRoot() = tempUri("graft-zmap-spec")
 
   private val schema = TableSchema("zt", Seq(
     "id" -> ColType.CInteger, "v" -> ColType.CFloat,

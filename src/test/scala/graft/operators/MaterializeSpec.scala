@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class MaterializeSpec extends SparkSuite {
 
   private def withTempDir[T](f: java.nio.file.Path => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("materialize-spec")
+    val dir = tempDir("materialize-spec")
     try f(dir)
     finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }

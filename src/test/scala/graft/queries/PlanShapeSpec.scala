@@ -218,7 +218,7 @@ class PlanShapeSpec extends SparkSuite {
   test("partitioned parquet scans prune to exactly the filtered partitions") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ppart").toString
+    val dir = tempDir("graft-ppart").toString
     try {
       Tables.t(spark, sf("sf0.001"), "events")
         .withColumn("event_date", date_format(col("ts"), "yyyy-MM-dd"))
@@ -433,7 +433,7 @@ class PlanShapeSpec extends SparkSuite {
       "spark.sql.optimizer.runtime.bloomFilter.enabled",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
       .map(k => k -> spark.conf.getOption(k)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-rtbloom").toString
+    val dir = tempDir("graft-rtbloom").toString
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")

@@ -24,7 +24,7 @@ class TablesCatalogSpec extends SparkSuite {
   }
 
   private def withTempDir(body: String => Unit): Unit = {
-    val d = java.nio.file.Files.createTempDirectory("graft-catalog")
+    val d = tempDir("graft-catalog")
     try body(d.toString) finally Fs.deleteRecursively(d.toFile)
   }
 

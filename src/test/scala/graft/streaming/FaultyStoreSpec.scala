@@ -5,7 +5,6 @@ import graft.lake.{HadoopStore, LakeReader, Store}
 import graft.types.{ColType, TableSchema}
 
 import java.io.{InputStream, OutputStream}
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** The epoch-publish protocol under S3-LIKE store semantics, with no S3
@@ -91,7 +90,7 @@ class FaultyStoreSpec extends SparkSuite {
   test("sidecar faulting MID-READ collapses the metadata aggregate to None, never garbage") {
     import graft.lake.ZoneMaps
     import spark.implicits._
-    val root = s"file://${Files.createTempDirectory("graft-s3ish-torn").toFile.getAbsolutePath}"
+    val root = tempUri("graft-s3ish-torn")
     val hs = new HadoopStore(root)
     val df = (0 until 250).map(i => Ev(i, ts("2024-07-01T00:00:00Z"), i % 3, i * 1.0))
       .toDF("event_id", "ts", "user_id", "value")
@@ -119,7 +118,7 @@ class FaultyStoreSpec extends SparkSuite {
   }
 
   test("a full epoch publishes exactly under copy+delete rename (no atomic rename anywhere)") {
-    val root = s"file://${Files.createTempDirectory("graft-s3ish").toFile.getAbsolutePath}"
+    val root = tempUri("graft-s3ish")
     val faulty = new FaultyStore(new HadoopStore(root))
     land(root, faulty, 250) // 3 objects, all renamed via copy+delete
     assert(faulty.puts >= 3, "publish must have routed through copy+delete")
@@ -130,7 +129,7 @@ class FaultyStoreSpec extends SparkSuite {
 
   test("mid-publish put failure: replay heals the partial publish to exactly-once") {
     avoidHourBoundary() // two land calls must share one UTC flush hour
-    val root = s"file://${Files.createTempDirectory("graft-s3ish-heal").toFile.getAbsolutePath}"
+    val root = tempUri("graft-s3ish-heal")
     val faulty = new FaultyStore(new HadoopStore(root))
     // 250 rows → 3 objects; fail the SECOND publish-rename's copy, after
     // its destination began receiving bytes (the worst S3 partial state):

@@ -4,7 +4,6 @@ import graft.SparkSuite
 import graft.lake._
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -28,8 +27,7 @@ class LakeSinkDmlSpec extends SparkSuite {
     "v" -> ColType.CFloat))
 
   private def fixture(): (String, String, HadoopStore) = {
-    val root =
-      s"file://${Files.createTempDirectory("graft-sinkdml").toFile.getAbsolutePath}"
+    val root = tempUri("graft-sinkdml")
     val cat = s"sd${math.abs(root.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -67,7 +65,7 @@ class LakeSinkDmlSpec extends SparkSuite {
     // a DOWNSTREAM stream starting now (its 'next trigger') reads the
     // sink table vector-applied
     spark.catalog.dropTempView("sinkdml_down")
-    val ckpt = Files.createTempDirectory("graft-sinkdml-ckpt").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-sinkdml-ckpt").toFile.getAbsolutePath
     val down = spark.readStream.format("graft-lake").option("table", "sink_out")
       .load(root)
       .writeStream.format("memory").queryName("sinkdml_down")

@@ -6,7 +6,6 @@ import graft.lake.LakeReader
 import graft.operators.Scoring
 import graft.types.{ColType, TableSchema}
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -28,7 +27,7 @@ class StreamingSpec extends SparkSuite {
   test("LakeSink lands micro-batches as lake objects with FlushInfo") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val root = s"file://${Files.createTempDirectory("graft-sink-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-sink-spec")
     val schema = TableSchema("stream_ev", Seq(
       "event_id" -> ColType.CInteger, "ts" -> ColType.CTime,
       "user_id" -> ColType.CInteger, "value" -> ColType.CFloat))
@@ -63,7 +62,7 @@ class StreamingSpec extends SparkSuite {
     avoidHourBoundary()
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val root = s"file://${Files.createTempDirectory("graft-replay-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-replay-spec")
     val schema = TableSchema("replay_ev", Seq(
       "event_id" -> ColType.CInteger, "ts" -> ColType.CTime,
       "user_id" -> ColType.CInteger, "value" -> ColType.CFloat))
@@ -86,7 +85,7 @@ class StreamingSpec extends SparkSuite {
   test("replay with fewer objects deletes the first attempt's leftovers") {
     avoidHourBoundary()
     import spark.implicits._
-    val root = s"file://${Files.createTempDirectory("graft-shrink-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-shrink-spec")
     val schema = TableSchema("shrink_ev", Seq(
       "event_id" -> ColType.CInteger, "ts" -> ColType.CTime,
       "user_id" -> ColType.CInteger, "value" -> ColType.CFloat))
@@ -107,7 +106,7 @@ class StreamingSpec extends SparkSuite {
   test("streamed-then-pruned: sink sidecars skip objects with NO compaction; replay keeps them fresh") {
     avoidHourBoundary()
     import spark.implicits._
-    val root = s"file://${Files.createTempDirectory("graft-zm-sink-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-zm-sink-spec")
     val schema = TableSchema("zm_ev", Seq(
       "event_id" -> ColType.CInteger, "ts" -> ColType.CTime,
       "user_id" -> ColType.CInteger, "value" -> ColType.CFloat))
@@ -166,7 +165,7 @@ class StreamingSpec extends SparkSuite {
 
   test("intermediate-seed leftovers are healed even when a sinkId is newly configured") {
     import spark.implicits._
-    val root = s"file://${Files.createTempDirectory("graft-heal-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-heal-spec")
     val schema = TableSchema("heal_ev", Seq(
       "event_id" -> ColType.CInteger, "ts" -> ColType.CTime,
       "user_id" -> ColType.CInteger, "value" -> ColType.CFloat))
@@ -197,7 +196,7 @@ class StreamingSpec extends SparkSuite {
   test("concurrent writers with distinct sinkIds never overwrite each other") {
     avoidHourBoundary()
     import spark.implicits._
-    val root = s"file://${Files.createTempDirectory("graft-sinkid-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-sinkid-spec")
     val schema = TableSchema("dual_ev", Seq(
       "event_id" -> ColType.CInteger, "ts" -> ColType.CTime,
       "user_id" -> ColType.CInteger, "value" -> ColType.CFloat))
@@ -234,7 +233,7 @@ class StreamingSpec extends SparkSuite {
   test("sink volume: 200k rows roll into record-limit-bounded objects") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val root = s"file://${Files.createTempDirectory("graft-vol-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-vol-spec")
     val schema = TableSchema("vol_ev", Seq(
       "event_id" -> ColType.CInteger, "ts" -> ColType.CTime,
       "user_id" -> ColType.CInteger, "value" -> ColType.CFloat))
@@ -256,7 +255,7 @@ class StreamingSpec extends SparkSuite {
   test("routed sink splits a wildcard-family stream into per-table objects") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val root = s"file://${Files.createTempDirectory("graft-routed-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-routed-spec")
     def schemaFor(t: String) = TableSchema(t, Seq(
       "event_id" -> ColType.CInteger, "v" -> ColType.CFloat))
     val ms = MemoryStream[REv]
@@ -279,7 +278,7 @@ class StreamingSpec extends SparkSuite {
   test("routed sink lands null-route records in the dead-letter table") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val root = s"file://${Files.createTempDirectory("graft-dlq-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-dlq-spec")
     def schemaFor(t: String) = TableSchema(t, Seq(
       "event_id" -> ColType.CInteger, "v" -> ColType.CFloat))
     val ms = MemoryStream[REv]
@@ -298,7 +297,7 @@ class StreamingSpec extends SparkSuite {
   test("routed sink reports null-route drops through onDropped") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val root = s"file://${Files.createTempDirectory("graft-drop-spec").toFile.getAbsolutePath}"
+    val root = tempUri("graft-drop-spec")
     def schemaFor(t: String) = TableSchema(t, Seq(
       "event_id" -> ColType.CInteger, "v" -> ColType.CFloat))
     val ms = MemoryStream[REv]
@@ -445,7 +444,7 @@ class StreamingSpec extends SparkSuite {
   test("lake as streaming source: new objects discovered incrementally") {
     import graft.lake.LakeWriter
     import spark.implicits._
-    val root = s"file://${Files.createTempDirectory("graft-lake-src").toFile.getAbsolutePath}"
+    val root = tempUri("graft-lake-src")
     val schema = TableSchema("events_s", Seq(
       "event_id" -> ColType.CInteger, "ts" -> ColType.CTime,
       "user_id" -> ColType.CInteger, "value" -> ColType.CFloat))
@@ -472,14 +471,14 @@ class StreamingSpec extends SparkSuite {
   test("lake glob stream resumes from its checkpoint across a restart: guarded-scheme offsets re-resolve, nothing replays") {
     import graft.lake.LakeWriter
     import spark.implicits._
-    val root = s"file://${Files.createTempDirectory("graft-lake-rs").toFile.getAbsolutePath}"
+    val root = tempUri("graft-lake-rs")
     val schema = TableSchema("events_r", Seq(
       "event_id" -> ColType.CInteger, "ts" -> ColType.CTime,
       "user_id" -> ColType.CInteger, "value" -> ColType.CFloat))
     def batch(from: Int, n: Int) = (from until from + n)
       .map(i => Ev(i, ts("2024-07-01T00:00:00Z"), i % 5, i * 1.0)).toDF()
     LakeWriter.write(batch(0, 100), schema, root)
-    val ckpt = Files.createTempDirectory("graft-lake-rs-ckpt")
+    val ckpt = tempDir("graft-lake-rs-ckpt")
       .toFile.getAbsolutePath
     // incarnation 1: drains the first flush, checkpoints graftlake://
     // offsets (the r19 guarded scheme), stops
@@ -686,7 +685,7 @@ class StreamingSpec extends SparkSuite {
   test("streaming funnel state survives a query restart from its checkpoint") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft-funnel-ckpt").toString
+    val ckpt = tempDir("graft-funnel-ckpt").toString
     val ms = MemoryStream[TypedEvent]
     val out = StreamOps.funnelResults(ms.toDS(), "10 minutes",
       Seq("view", "buy"), quietMs = 30L * 60 * 1000)
