@@ -30,8 +30,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // AppendData.write, so on this path ZOrderWriteLayout matches the
     // lake relation's raw options instead of the built LakeWrite (the
     // rule reads both faces — see its scaladoc). GraftExtensionsSpec
-    // proves the z-layout lands through THIS registration, not just
-    // Sessions.local's extraOptimizations.
+    // proves the z-layout lands through this registration, the one
+    // Sessions.builder installs.
     ext.injectOptimizerRule(_ => org.apache.spark.sql.graft.ZOrderWriteLayout)
   }
 }

@@ -37,18 +37,13 @@ object Sessions {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
+      // the engine's SQL functions and advisory optimizer rules, installed
+      // when getOrCreate makes the session
+      .withExtensions(new GraftExtensions)
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the engine's advisory optimizer rules (see GraftExtensions for the
-    // declarative path); idempotent across getOrCreate reuse
-    val rules = Seq(org.apache.spark.sql.graft.StreamLakePrune,
-      org.apache.spark.sql.graft.ZOrderWriteLayout)
-    val missing = rules.filterNot(spark.experimental.extraOptimizations.contains)
-    if (missing.nonEmpty)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations ++ missing
     spark
   }
 }

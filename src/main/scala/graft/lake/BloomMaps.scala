@@ -262,7 +262,7 @@ object BloomMaps {
       // (l13's report-identity gate), so every listed key is seeded with a
       // null marker row that contributes nothing to the fold.
       val seeds = spark.sparkContext
-        .parallelize(keys.map(_.split('/').last), LakeReader.walkPartitions(keys.length))
+        .parallelize(keys.map(_.split('/').last), KeyWalk.tasks(keys.length))
         .map(name => name -> (null: org.apache.spark.sql.Row))
       rows
         .map(r => r.getString(0).split('/').last -> r)

@@ -190,8 +190,8 @@ final class LakeCatalog extends TableCatalog with ProcedureCatalog {
       // column IDs, so if any live object's header still carries the
       // name, the by-name reader would resurrect the OLD values under
       // the new column instead of NULL (or refuse the whole table on a
-      // type change). Exact check, distributed above the walk
-      // threshold; compaction (which rewrites onto the current header)
+      // type change). Exact check, a [[KeyWalk]] like every metadata
+      // walk; compaction (which rewrites onto the current header)
       // is the remedy.
       val readded = changes.collect {
         case a: TableChange.AddColumn if a.fieldNames().length == 1 =>
@@ -200,8 +200,7 @@ final class LakeCatalog extends TableCatalog with ProcedureCatalog {
         .filter(LakeSchemas.historicalColumns(store, table).contains)
       if (readded.nonEmpty) {
         val keys = LakeReader.listTableKeys(store, table, None)
-        val carrying = LakeReader.groupKeysByHeader(SparkSession.active,
-          store, table, keys)
+        val carrying = LakeReader.groupKeysByHeader(store, table, keys)
           .filter { case (sch, _) => readded.exists(sch.columnNames.contains) }
         require(carrying.isEmpty,
           s"graft-lake ALTER TABLE: column(s) ${readded.mkString(", ")} " +
@@ -462,8 +461,7 @@ private[lake] object LakeProcedures {
     override def parameters(): Array[ProcedureParameter] = Array(
       ProcedureParameter.in("table", StringType).build())
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val rep = LakeMaintenance.tableStats(SparkSession.active, root,
-        input.getUTF8String(0).toString)
+      val rep = LakeMaintenance.tableStats(root, input.getUTF8String(0).toString)
       result(StructType(Seq(
         StructField("objects", IntegerType, nullable = false),
         StructField("hours", IntegerType, nullable = false),
@@ -509,7 +507,7 @@ private[lake] object LakeProcedures {
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val olderThan = java.time.Instant.ofEpochSecond(0L)
         .plusNanos(input.getLong(1) * 1000L)
-      val rep = LakeMaintenance.expireDistributed(SparkSession.active, root,
+      val rep = LakeMaintenance.expire(new HadoopStore(root),
         input.getUTF8String(0).toString, olderThan)
       result(StructType(Seq(
         StructField("deleted", IntegerType, nullable = false),
@@ -669,8 +667,7 @@ private[lake] object LakeProcedures {
       // retention)
       if (st.removedKeys.nonEmpty &&
           !LakeVersions.isRetained(store, table)) {
-        LakeMaintenance.physicalRetireDistributed(
-          SparkSession.active, root, st.removedKeys)
+        LakeMaintenance.physicalRetire(store, st.removedKeys)
         LakeVersions.pruneChainIfLarge(store, table, st.removedKeys.size)
       }
       // a seal run while the audit PENDED captured the hidden keys (seal
@@ -799,8 +796,7 @@ private[lake] object LakeProcedures {
         if (hours.nonEmpty)
           Manifests.invalidateIfCovers(store, p.table, hours.min)
         if (p.removed.nonEmpty && !LakeVersions.isRetained(store, p.table)) {
-          LakeMaintenance.physicalRetireDistributed(
-            SparkSession.active, root, p.removed)
+          LakeMaintenance.physicalRetire(store, p.removed)
           LakeVersions.pruneChainIfLarge(store, p.table, p.removed.size)
         }
       }

@@ -358,8 +358,8 @@ final class LakeTable(rootUri: String, tableName: String,
       "graft-lake: TRUNCATE under a WAP branch session is not a branch " +
         "operation — abort_audit drops the staged batch; truncate the " +
         "table outside the branch")
-    LakeMaintenance.expireDistributed(SparkSession.active, rootUri,
-      tableName, Instant.parse("9999-01-01T00:00:00Z"))
+    LakeMaintenance.expire(new HadoopStore(rootUri), tableName,
+      Instant.parse("9999-01-01T00:00:00Z"))
     true
   }
 
@@ -846,8 +846,7 @@ final class LakeWrite(rootUri: String, lakeSchema: TableSchema,
         }
         if (doomed.nonEmpty &&
             !LakeVersions.isRetained(store, lakeSchema.name)) {
-          LakeMaintenance.physicalRetireDistributed(
-            SparkSession.active, rootUri, doomed)
+          LakeMaintenance.physicalRetire(store, doomed)
           LakeVersions.pruneChainIfLarge(store, lakeSchema.name, doomed.size)
         }
       }
@@ -1293,9 +1292,8 @@ final class LakeScan(rootUri: String, table: String, lakeSchema: TableSchema,
     * (optimizer time) and [[planInputPartitions]] (execution time) both
     * consume this. Rows are exact-or-absent (the metadata-aggregate
     * contract): None when any kept object lacks a readable sidecar, or
-    * when the candidate set is past the driver-walk threshold — the
-    * executor fan-out decides keeps there, and optimizer time is no
-    * place for a second metadata job. */
+    * when [[KeyWalk]] fans the walk out to executors — they decide keeps
+    * only, and optimizer time is no place for a second metadata job. */
   private def computePlanned(): PlannedScan = {
     val store = new HadoopStore(rootUri)
     val pred = LakePrune.compile(pushed ++ runtime, lakeSchema)
@@ -1411,7 +1409,11 @@ final class LakeScan(rootUri: String, table: String, lakeSchema: TableSchema,
       }
       PlannedScan(kept.result(), if (allKnown) Some(known) else None,
         dvMap, eqCompiled)
-    } else if (keys.length <= LakeReader.DefaultSidecarDistributeAbove) {
+    } else if (KeyWalk.fansOut(keys.length)) {
+      // executor walk: the kept keys only, so the row estimate is unknown
+      val kept = if (pred.trivial) keys else KeyWalk.filter(store, keys)(pred.keeps)
+      PlannedScan(kept, None, dvMap, eqCompiled)
+    } else {
       var rows: Option[Long] = Some(0L)
       val kept = keys.filter { k =>
         val (keep, rec) = pred.keepsAndRecords(store, k)
@@ -1421,12 +1423,6 @@ final class LakeScan(rootUri: String, table: String, lakeSchema: TableSchema,
         keep
       }
       PlannedScan(kept, rows, dvMap, eqCompiled)
-    } else {
-      val kept =
-        if (pred.trivial) keys
-        else LakeReader.walkKeys(SparkSession.active, rootUri, keys,
-          LakeReader.DefaultSidecarDistributeAbove)(pred.keeps)
-      PlannedScan(kept, None, dvMap, eqCompiled)
     }
   }
 
@@ -1835,8 +1831,8 @@ private[lake] object LakePrune {
 
   /** The compiled per-object decision: an optional hour range (listing-
     * level prune) plus equality probes and open bands (sidecar-level).
-    * Serializable with precomputed hashes so the distributed walk ships
-    * bit tests, not values. */
+    * Serializable with precomputed hashes so the executor walk
+    * ([[KeyWalk]]) ships bit tests, not values. */
   final case class Compiled(
       hourRange: Option[(Instant, Instant)],
       hourSet: Option[Set[Instant]],

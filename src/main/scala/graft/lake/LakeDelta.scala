@@ -671,8 +671,7 @@ final class LakeDeltaWrite(rootUri: String, lakeSchema: TableSchema,
       throw e
     }
     if (removed.nonEmpty && !LakeVersions.isRetained(store, table)) {
-      LakeMaintenance.physicalRetireDistributed(
-        SparkSession.active, rootUri, removed)
+      LakeMaintenance.physicalRetire(store, removed)
       LakeVersions.pruneChainIfLarge(store, table, removed.size)
     }
     if (hours.nonEmpty)
@@ -753,8 +752,7 @@ final class LakeDeltaWrite(rootUri: String, lakeSchema: TableSchema,
       throw e
     }
     if (removed.nonEmpty && !LakeVersions.isRetained(store, table)) {
-      LakeMaintenance.physicalRetireDistributed(
-        SparkSession.active, rootUri, removed)
+      LakeMaintenance.physicalRetire(store, removed)
       LakeVersions.pruneChainIfLarge(store, table, removed.size)
     }
     if (hours.nonEmpty)

@@ -433,7 +433,7 @@ object LakeMaintenance {
     def perHeader(keys: Seq[String])(
         build: (graft.types.TableSchema, Seq[String]) => Int): Int =
       if (keys.isEmpty) 0
-      else LakeReader.groupKeysByHeader(spark, store, table, keys)
+      else LakeReader.groupKeysByHeader(store, table, keys)
         .map { case (sch, ks) => build(sch, ks) }.sum
     EnsureReport(
       perHeader(missingStats)((_, ks) =>
@@ -473,8 +473,12 @@ object LakeMaintenance {
     * which objects exist), so an expiry over a lake with years of history
     * lists only in-horizon directories — never the retained tail, never
     * other tables' objects, never `_staging/`. Idempotent and safe to
-    * re-run: per-object deletes, no staging, no rename. Driver-only
-    * metadata op (keys, not data). */
+    * re-run: per-object deletes, no staging, no rename. The listing
+    * stays on the driver (it is already the pruned level walk —
+    * O(retired hour dirs)); the per-object deletes are a [[KeyWalk]]
+    * delete walk, so a month of retired hours on a million-object table
+    * fans out to executors (delete of a missing key is a no-op, so a
+    * task retry never fails on its own earlier progress). */
   def expire(store: Store, table: String, olderThan: Instant): ExpiryReport = {
     val (doomed, cutoff) = doomedKeys(store, table, olderThan)
     // version-commit BEFORE the deletes: the doomed keys tombstone at
@@ -492,42 +496,8 @@ object LakeMaintenance {
     if (doomed.nonEmpty)
       Manifests.invalidateIfCovers(store, table,
         doomed.map(LakeKeys.hourPrefixOf).min)
-    doomed.foreach(deleteWithSidecar(store, _))
+    KeyWalk.foreach(store, doomed, KeyWalk.Delete)(deleteWithSidecar)
     if (doomed.nonEmpty) { // again after the deletes: a racing seal heals
-      Manifests.invalidateIfCovers(store, table,
-        doomed.map(LakeKeys.hourPrefixOf).min)
-      LakeVersions.pruneChainIfLarge(store, table, doomed.size)
-    }
-    ExpiryReport(doomed.size, cutoff)
-  }
-
-  /** [[expire]] with the per-object deletes shipped to executors — the
-    * retention analogue of the distributed sidecar walks: a month of
-    * retired hours on a million-object table is a million delete calls,
-    * which a driver loop serializes but a few hundred tasks absorb. The
-    * hour-level listing walk stays on the driver (it is already the
-    * pruned level walk — O(retired hour dirs)); only the per-object
-    * delete fan-out distributes. Deletes are idempotent (delete of a
-    * missing key is a no-op), so a task retry can never double-count or
-    * fail on its own earlier progress. */
-  def expireDistributed(spark: org.apache.spark.sql.SparkSession, rootUri: String,
-                        table: String, olderThan: Instant,
-                        partitions: Int = 0): ExpiryReport = {
-    val store = new HadoopStore(rootUri)
-    val (doomed, cutoff) = doomedKeys(store, table, olderThan)
-    if (doomed.nonEmpty) {
-      LakeVersions.commit(store, table, op = "expire", removed = doomed,
-        validateLive = false) // see expire(): tombstone-first discipline
-      Manifests.invalidateIfCovers(store, table,
-        doomed.map(LakeKeys.hourPrefixOf).min)
-      val parts = if (partitions > 0) partitions
-                  else LakeReader.walkPartitions(doomed.length)
-      spark.sparkContext.parallelize(doomed, parts)
-        .foreachPartition { ks =>
-          val st = new HadoopStore(rootUri) // per-executor store
-          ks.foreach(deleteWithSidecar(st, _))
-        }
-      // again after the deletes: a racing seal heals
       Manifests.invalidateIfCovers(store, table,
         doomed.map(LakeKeys.hourPrefixOf).min)
       LakeVersions.pruneChainIfLarge(store, table, doomed.size)
@@ -640,7 +610,7 @@ object LakeMaintenance {
     def matchRule: org.apache.spark.sql.Column = probes.map { case (c, vs) =>
       coalesce(col(c).isin(vs: _*), lit(false))
     }.reduce(_ && _)
-    val (allKeys, kept) = LakeReader.prunedEqAnyMultiKeys(spark, store, table,
+    val (allKeys, kept) = LakeReader.prunedEqAnyMultiKeys(store, table,
       probes, hourRange, declared = declared)
     if (kept.isEmpty)
       return DeleteReport(0, 0, 0, 0L, 0L, allKeys.size)
@@ -816,19 +786,22 @@ object LakeMaintenance {
           removed = ks, validateLive = false)
       case (None, _) => () // physicalRetire's parse guard reports these
     }
-    val n = physicalRetire(store, rawKeys)
+    physicalRetire(store, rawKeys)
     existing.groupBy(k => LakeKeys.parseKey(k).map(_._2)).foreach {
       case (Some(table), ks) =>
         LakeVersions.pruneChainIfLarge(store, table, ks.size)
       case _ => ()
     }
-    n
+    existing.size
   }
 
   /** The PHYSICAL half of retirement — manifest discipline + idempotent
     * deletes, NO version record (the caller has already committed one;
-    * [[retireObjects]] is the statement-level op). */
-  private[lake] def physicalRetire(store: Store, rawKeys: Seq[String]): Int = {
+    * [[retireObjects]] is the statement-level op). The deletes are a
+    * [[KeyWalk]] delete walk: the SQL copy-on-write commit retires one
+    * original per rewritten group, and a broad UPDATE/MERGE can name
+    * 100k of them, which fan out to executors. */
+  private[lake] def physicalRetire(store: Store, rawKeys: Seq[String]): Unit = {
     val keys = rawKeys.distinct // a key named twice is one retirement
     val parsed = keys.map(k => k -> LakeKeys.parseKey(k))
     val bad = parsed.collect { case (k, None) => k }
@@ -839,73 +812,11 @@ object LakeMaintenance {
       Manifests.invalidateIfCovers(store, table,
         ks.map(t => LakeKeys.hourPrefixOf(t._2)).min)
     }
-    val existed = keys.count(store.exists)
-    keys.foreach(deleteWithSidecar(store, _))
+    KeyWalk.foreach(store, keys, KeyWalk.Delete)(deleteWithSidecar)
     byTable.foreach { case (table, ks) => // again after: a racing seal heals
       Manifests.invalidateIfCovers(store, table,
         ks.map(t => LakeKeys.hourPrefixOf(t._2)).min)
     }
-    existed
-  }
-
-  /** [[retireObjects]] with the per-object deletes fanned to executors
-    * above `distributeAbove` — the retention pattern
-    * ([[expireDistributed]]) on the EXPLICIT-key path, because the SQL
-    * copy-on-write commit retires one original per rewritten group and
-    * a broad UPDATE/MERGE can name 100k of them: a driver loop
-    * serializes that at store-call latency, a few hundred tasks absorb
-    * it. Same manifest discipline; the existence count is skipped above
-    * the threshold (it would double the store calls for a number nobody
-    * acts on — deletes are idempotent either way), so the return value
-    * is the DISTINCT keys retired. */
-  def retireObjectsDistributed(spark: org.apache.spark.sql.SparkSession,
-                               rootUri: String, rawKeys: Seq[String],
-                               distributeAbove: Int = 256): Int = {
-    val store = new HadoopStore(rootUri)
-    val existing = rawKeys.distinct.filter(store.exists)
-    existing.groupBy(k => LakeKeys.parseKey(k).map(_._2)).foreach {
-      case (Some(table), ks) =>
-        LakeVersions.commit(store, table, op = "retire_objects",
-          removed = ks, validateLive = false)
-      case (None, _) => ()
-    }
-    val n = physicalRetireDistributed(spark, rootUri, rawKeys, distributeAbove)
-    existing.groupBy(k => LakeKeys.parseKey(k).map(_._2)).foreach {
-      case (Some(table), ks) =>
-        LakeVersions.pruneChainIfLarge(store, table, ks.size)
-      case _ => ()
-    }
-    n
-  }
-
-  /** The physical half of [[retireObjectsDistributed]] (no version
-    * record — the caller commits). */
-  private[lake] def physicalRetireDistributed(
-      spark: org.apache.spark.sql.SparkSession,
-      rootUri: String, rawKeys: Seq[String],
-      distributeAbove: Int = 256): Int = {
-    val store = new HadoopStore(rootUri)
-    val keys = rawKeys.distinct
-    if (keys.length <= distributeAbove) return physicalRetire(store, keys)
-    val parsed = keys.map(k => k -> LakeKeys.parseKey(k))
-    val bad = parsed.collect { case (k, None) => k }
-    require(bad.isEmpty,
-      s"not lake object keys (YYYY/MM/DD/HH/table/uuid): ${bad.mkString(", ")}")
-    val byTable = parsed.map { case (k, p) => (p.get._2, k) }.groupBy(_._1)
-    byTable.foreach { case (table, ks) =>
-      Manifests.invalidateIfCovers(store, table,
-        ks.map(t => LakeKeys.hourPrefixOf(t._2)).min)
-    }
-    spark.sparkContext.parallelize(keys, LakeReader.walkPartitions(keys.length))
-      .foreachPartition { ks =>
-        val st = new HadoopStore(rootUri) // per-executor store
-        ks.foreach(deleteWithSidecar(st, _))
-      }
-    byTable.foreach { case (table, ks) => // again after: a racing seal heals
-      Manifests.invalidateIfCovers(store, table,
-        ks.map(t => LakeKeys.hourPrefixOf(t._2)).min)
-    }
-    keys.length
   }
 
   final case class TableStats(objects: Int, hours: Int,
@@ -920,12 +831,8 @@ object LakeMaintenance {
     * sidecar makes the total None rather than a wrong number — and
     * sidecar COVERAGE (how many objects carry stats / blooms), which is
     * what `ensure_indexes` planning wants to know. The per-object
-    * sidecar probes fan to executors above the same threshold as every
-    * metadata walk. */
-  def tableStats(spark: org.apache.spark.sql.SparkSession, rootUri: String,
-                 table: String,
-                 distributeAbove: Int = LakeReader.DefaultSidecarDistributeAbove)
-      : TableStats = {
+    * sidecar probes are a [[KeyWalk]] like every metadata walk. */
+  def tableStats(rootUri: String, table: String): TableStats = {
     val store = new HadoopStore(rootUri)
     val view = LakeVersions.tableView(store, table)
     val keys = LakeReader.listTableKeys(store, table, None, Some(view))
@@ -938,14 +845,7 @@ object LakeMaintenance {
       (stats.map(_.records - dvDead.getOrElse(k, 0L)), stats.isDefined,
         BloomMaps.read(st, k).isDefined)
     }
-    val probed: Seq[(Option[Long], Boolean, Boolean)] =
-      if (keys.length <= distributeAbove) keys.map(probe(store, _))
-      else spark.sparkContext
-        .parallelize(keys, LakeReader.walkPartitions(keys.length))
-        .mapPartitions { ks =>
-          val st = new HadoopStore(rootUri) // per-executor store
-          ks.map(probe(st, _))
-        }.collect().toSeq
+    val probed = KeyWalk.map(store, keys)(probe)
     val rows = probed.foldLeft(Option(0L)) {
       case (acc, (r, _, _)) => for (a <- acc; v <- r) yield a + v
     }

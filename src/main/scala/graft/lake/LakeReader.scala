@@ -495,27 +495,17 @@ object LakeReader {
     * the unit an EVOLVED table's bulk paths operate at: each group is
     * single-header, so [[readKeys]]' strict CSV read applies per group.
     * Cheap relative to what callers do next (they open every key's data
-    * anyway) — and above the same threshold as every sidecar walk the
-    * peeks FAN OUT to executors (the payload shipped back is one
-    * (header, key) pair per object, metadata-sized), so a broad
-    * compact/delete on a million-object evolved table never serializes
-    * a million GETs through the driver. */
-  private[lake] def groupKeysByHeader(spark: SparkSession, store: Store,
-                                      table: String, keys: Seq[String],
-                                      distributeAbove: Int =
-                                        DefaultSidecarDistributeAbove)
+    * anyway) — and, like every sidecar walk, the peeks go through
+    * [[KeyWalk]] (the payload shipped back is one (header, key) pair per
+    * object, metadata-sized), so a broad compact/delete on a
+    * million-object evolved table never serializes a million GETs
+    * through the driver. */
+  private[lake] def groupKeysByHeader(store: Store, table: String,
+                                      keys: Seq[String])
       : Seq[(TableSchema, Seq[String])] = {
-    val pairs: Seq[(Seq[(String, graft.types.ColType)], String)] =
-      if (keys.size <= distributeAbove)
-        keys.map(k => (peekSchema(store, k, table).columns, k))
-      else {
-        val rootUri = store.rootUri
-        spark.sparkContext
-          .parallelize(keys, math.max(1, keys.size / 256))
-          .map { k =>
-            (peekSchema(new HadoopStore(rootUri), k, table).columns, k)
-          }.collect().toSeq
-      }
+    val pairs = KeyWalk.map(store, keys) { (st, k) =>
+      (peekSchema(st, k, table).columns, k)
+    }
     pairs.groupBy(_._1).toSeq
       .map { case (cols, ps) => (TableSchema(table, cols), ps.map(_._2).sorted) }
       .sortBy(_._2.head)
@@ -559,7 +549,7 @@ object LakeReader {
     val dvMap = Some(dvs.getOrElse(LakeVersions.currentDvs(store, table)))
     val eqs = Some(eq.getOrElse(LakeEqDeletes.compile(store, table,
       LakeVersions.currentEqdels(store, table))))
-    val groups = groupKeysByHeader(spark, store, table, keys)
+    val groups = groupKeysByHeader(store, table, keys)
     groups match {
       case Seq((one, ks)) if one.columns == target.columns =>
         readKeys(spark, store, table, ks, dvMap, eqs)
@@ -631,55 +621,24 @@ object LakeReader {
     val view = LakeVersions.tableView(store, table)
     val keys = listTableKeys(store, table, hourRange, Some(view))
     val dvSet = statDirtySet(store, table, view, keys)
-    // lazy walk: the first unreadable sidecar decides the answer — no
-    // point paying the remaining N metadata reads to return None
-    val stats = keys.view.map(k => statRead(store, dvSet, k))
-      .takeWhile(_.nonEmpty).toSeq
-    if (keys.isEmpty || stats.length < keys.length) None
-    else Some(mergeObjectStats(stats.map(_.get)))
-  }
-
-  /** [[statsSummary]] with the sidecar reads DISTRIBUTED over executors —
-    * the warehouse-scale variant: a million-object table is a million
-    * ~100-byte reads, which one driver thread serializes but a few
-    * hundred tasks absorb (the same arrangement the compactor uses for
-    * its rewrites). Identical semantics to the driver-side walk,
-    * spec-pinned: per-partition partial merges are associative under the
-    * same poison/all-null/drift lattice, and ANY unreadable sidecar
-    * anywhere still collapses the whole answer to None (the partials
-    * can't short-circuit each other across executors — the price of the
-    * parallel walk). */
-  def statsSummaryDistributed(spark: SparkSession, rootUri: String, table: String,
-                              hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-                              partitions: Int = 0)
-      : Option[StatsSummary] = {
-    val store = new HadoopStore(rootUri)
-    val view = LakeVersions.tableView(store, table)
-    val keys = listTableKeys(store, table, hourRange, Some(view))
-    val dvSet = statDirtySet(store, table, view, keys)
-    if (keys.isEmpty) None
-    else {
-      val parts = if (partitions > 0) partitions
-                  else walkPartitions(keys.length)
-      // each partition merges ITS objects on the executor and ships one
-      // partial summary (or the outer None when any sidecar was
-      // unreadable — which poisons the whole answer; inner None = the
-      // partition held no keys and contributes nothing)
-      val partials = spark.sparkContext.parallelize(keys, parts)
-        .mapPartitions { ks =>
-          val st = new HadoopStore(rootUri) // per-executor store
-          val read = ks.map(k => statRead(st, dvSet, k)).toSeq
-          Iterator.single(
-            if (read.exists(_.isEmpty)) None
-            else if (read.isEmpty) Some(None)
-            else Some(Some(mergeObjectStats(read.map(_.get)))))
-        }.collect()
-      if (partials.exists(_.isEmpty)) None
-      else {
-        val ps = partials.toSeq.flatMap(_.get)
-        if (ps.isEmpty) None else Some(ps.reduce(mergeSummaries))
-      }
+    // each partial merges ITS objects (or is the outer None once any
+    // sidecar is unreadable — which poisons the whole answer; inner None
+    // = an executor task that held no keys). On the driver the one
+    // partial walks lazily: the first unreadable sidecar decides the
+    // answer, no point paying the remaining N metadata reads. Partials
+    // merge exactly under the same poison/all-null/drift lattice
+    // ([[mergeSummaries]]); across executors they can't short-circuit
+    // each other — the price of the parallel walk.
+    val partials = KeyWalk.partials(store, keys) { (st, it) =>
+      val ks = it.toVector
+      val stats = ks.view.map(k => statRead(st, dvSet, k))
+        .takeWhile(_.nonEmpty).toSeq
+      if (stats.length < ks.length) None
+      else if (ks.isEmpty) Some(None)
+      else Some(Some(mergeObjectStats(stats.map(_.get))))
     }
+    if (keys.isEmpty || partials.exists(_.isEmpty)) None
+    else partials.flatMap(_.get).reduceOption(mergeSummaries)
   }
 
   /** PER-HOUR metadata rollup — the dashboard primitive the key layout
@@ -694,8 +653,7 @@ object LakeReader {
                   hourRange: Option[(java.time.Instant, java.time.Instant)] = None)
       : Seq[(java.time.Instant, Option[StatsSummary])] = {
     val view = LakeVersions.tableView(store, table)
-    hourDriverWalk(store,
-      groupKeysByHour(listTableKeys(store, table, hourRange, Some(view))),
+    hourWalk(store, listTableKeys(store, table, hourRange, Some(view)),
       view.dvs.keySet)
   }
 
@@ -705,54 +663,23 @@ object LakeReader {
       : Seq[(java.time.Instant, Seq[String])] =
     keys.groupBy(k => LakeKeys.parseKey(k).get._1).toSeq.sortBy(_._1)
 
-  private def hourDriverWalk(store: Store,
-      byHour: Seq[(java.time.Instant, Seq[String])],
-      dvSet: Set[String] = Set.empty)
+  /** The per-hour sidecar walk: each [[KeyWalk]] partial folds its
+    * objects into per-hour summaries, lazily within an hour (the first
+    * unreadable sidecar decides it, None). Partials of one hour merge
+    * through [[mergeSummaries]] — associative, and None absorbs — so the
+    * executor walk gives the driver walk's per-hour answers exactly. */
+  private def hourWalk(store: Store, keys: Seq[String], dvSet: Set[String])
       : Seq[(java.time.Instant, Option[StatsSummary])] =
-    byHour.map { case (hour, ks) =>
-      // lazy within the hour: the first unreadable sidecar decides it
-      val stats = ks.view.map(k => statRead(store, dvSet, k))
-        .takeWhile(_.nonEmpty).toSeq
-      hour -> (if (stats.length < ks.length) None
-               else Some(mergeObjectStats(stats.map(_.get))))
-    }
-
-  /** [[statsByHour]] with the sidecar reads distributed over executors —
-    * the same arrangement as [[statsSummaryDistributed]], keyed by hour:
-    * each task folds its objects into per-hour partials (a single
-    * object's stats ARE a one-object [[StatsSummary]], and
-    * [[mergeSummaries]] is associative, so partials combine exactly);
-    * an unreadable sidecar poisons its hour's partial to None, which
-    * absorbs through the merge — identical per-hour answers to the
-    * driver walk, spec-pinned. */
-  def statsByHourDistributed(spark: SparkSession, rootUri: String, table: String,
-                             hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-                             partitions: Int = 0)
-      : Seq[(java.time.Instant, Option[StatsSummary])] = {
-    val store = new HadoopStore(rootUri)
-    val view = LakeVersions.tableView(store, table)
-    val keys = listTableKeys(store, table, hourRange, Some(view))
-    hourDistributedWalk(spark, rootUri, keys, partitions, view.dvs.keySet)
-  }
-
-  private def hourDistributedWalk(spark: SparkSession, rootUri: String,
-      keys: Seq[String], partitions: Int = 0, dvSet: Set[String] = Set.empty)
-      : Seq[(java.time.Instant, Option[StatsSummary])] =
-    if (keys.isEmpty) Seq.empty
-    else {
-      val parts = if (partitions > 0) partitions else walkPartitions(keys.length)
-      spark.sparkContext.parallelize(keys, parts)
-        .mapPartitions { ks =>
-          val st = new HadoopStore(rootUri) // per-executor store
-          ks.map { k =>
-            val hour = LakeKeys.parseKey(k).get._1.toEpochMilli
-            hour -> statRead(st, dvSet, k).map(objectSummary)
-          }
-        }
-        .reduceByKey((a, b) => for (x <- a; y <- b) yield mergeSummaries(x, y))
-        .collect().toSeq
-        .map { case (h, s) => java.time.Instant.ofEpochMilli(h) -> s }
-        .sortBy(_._1)
+    KeyWalk.partials(store, keys) { (st, ks) =>
+      groupKeysByHour(ks.toVector).map { case (hour, hks) =>
+        val stats = hks.view.map(k => statRead(st, dvSet, k))
+          .takeWhile(_.nonEmpty).toSeq
+        hour -> (if (stats.length < hks.length) None
+                 else Some(mergeObjectStats(stats.map(_.get))))
+      }
+    }.flatten.groupBy(_._1).toSeq.sortBy(_._1).map { case (hour, ps) =>
+      hour -> ps.map(_._2).reduce((a, b) =>
+        for (x <- a; y <- b) yield mergeSummaries(x, y))
     }
 
   /** [[statsByHour]] completed into the dashboard path its contract
@@ -769,25 +696,19 @@ object LakeReader {
     * (exactly what [[ZoneMaps.Tracker]] poisons at write time); STRING/
     * BOOLEAN/UUID columns carry exact null counts with no bounds. */
   def statsByHourHybrid(spark: SparkSession, rootUri: String, table: String,
-                        hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-                        sidecarDistributeAbove: Int = DefaultSidecarDistributeAbove)
+                        hourRange: Option[(java.time.Instant, java.time.Instant)] = None)
       : Seq[(java.time.Instant, StatsSummary, Boolean)] = {
     val store = new HadoopStore(rootUri)
     // ONE key snapshot drives both halves: torn hours scan exactly the
     // keys the metadata walk saw — a re-listing would race retention/
     // compaction between the walks (an hour emptied in between would
     // crash the scan half instead of failing the read loudly). The
-    // metadata half distributes above the same threshold as the pruned
-    // reads; below it a Spark job costs more than the driver walk saves.
+    // metadata half is the [[statsByHour]] walk.
     val view = LakeVersions.tableView(store, table)
     val keys = listTableKeys(store, table, hourRange, Some(view))
     val byHour = groupKeysByHour(keys)
     val meta: Map[java.time.Instant, Option[StatsSummary]] =
-      (if (keys.length <= sidecarDistributeAbove)
-         hourDriverWalk(store, byHour, statDirtySet(store, table, view, keys))
-       else hourDistributedWalk(spark, rootUri, keys,
-         dvSet = statDirtySet(store, table, view, keys)))
-        .toMap
+      hourWalk(store, keys, statDirtySet(store, table, view, keys)).toMap
     val tornKeys = byHour.collect { case (h, ks) if meta(h).isEmpty => ks }.flatten
     val scanned: Map[java.time.Instant, StatsSummary] =
       if (tornKeys.isEmpty) Map.empty
@@ -875,24 +796,13 @@ object LakeReader {
       }
   }
 
-  /** One object's stats as a single-object [[StatsSummary]] — the unit of
-    * [[mergeSummaries]]'s associative fold, matching [[mergeObjectStats]]'
-    * lattice: a column with non-null values but no recorded bounds
-    * (string-typed, NaN-poisoned) is inexact; an all-null column keeps
-    * exact absent bounds that defer to the other side on merge. */
-  private def objectSummary(s: ZoneMaps.ObjectStats): StatsSummary =
-    StatsSummary(1L, s.records, s.cols.map { case (c, cs) =>
-      val poisoned = cs.min.isEmpty && cs.nulls < s.records
-      c -> StatsColumn(cs.min, cs.max, cs.nulls, boundsExact = !poisoned)
-    })
-
   /** Order-independent min/max over BigDecimal bounds.
     * java.math.BigDecimal equality is SCALE-sensitive ("3" ≠ "3.0" under
-    * equals, 0 under compareTo) and the distributed walk's reduceByKey
-    * combines partials in nondeterministic order — a plain
-    * first-operand-wins tie-break would let a lake with mixed-boxed
-    * bounds of equal value produce run-to-run-different summaries,
-    * flaking the spec-pinned "distributed walk ≡ driver walk
+    * equals, 0 under compareTo) and the executor walk combines its
+    * per-task partials in a different grouping than the driver walk's
+    * one flat merge — a plain first-operand-wins tie-break would let a
+    * lake with mixed-boxed bounds of equal value answer differently per
+    * task count, breaking the spec-pinned "executor walk ≡ driver walk
     * bit-identical" requires. Ties collapse to the canonical
     * zero-stripped form, which both operands share, so the result never
     * depends on combine order (render uses toPlainString, so the
@@ -967,21 +877,16 @@ object LakeReader {
     * silently dropping its rows (`ignoreMissing = false`). Schedule
     * pruned reads off maintenance windows, or retry on failure.
     *
-    * Sidecar-consult cost: one ~100-byte read per candidate object. Up to
-    * `sidecarDistributeAbove` candidates the driver walks them directly
-    * (no job overhead for interactive small-range reads); above it the
-    * consult ships to executors as a small RDD — the same arrangement as
-    * [[statsSummaryDistributed]] — so a million-object prune decision is
-    * a few hundred parallel tasks, not a serial driver loop. Both walks
-    * share one predicate ([[keepsObject]]), so the kept-set is identical
-    * by construction and spec-pinned. */
+    * Sidecar-consult cost: one ~100-byte read per candidate object,
+    * walked by [[KeyWalk]]: on the driver for interactive small-range
+    * reads, on executors for a million-object prune decision. Both
+    * branches apply one predicate ([[keepsObject]]), so the kept-set is
+    * identical by construction and spec-pinned. */
   def readPruned(spark: SparkSession, rootUri: String, table: String,
                  column: String, lo: java.math.BigDecimal, hi: java.math.BigDecimal,
-                 hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-                 sidecarDistributeAbove: Int = DefaultSidecarDistributeAbove)
+                 hourRange: Option[(java.time.Instant, java.time.Instant)] = None)
       : (DataFrame, PruneReport) =
-    readPrunedMulti(spark, rootUri, table, Seq((column, lo, hi)), hourRange,
-      sidecarDistributeAbove)
+    readPrunedMulti(spark, rootUri, table, Seq((column, lo, hi)), hourRange)
 
   /** [[readPruned]] over a CONJUNCTION of per-column bands: an object is
     * opened only if EVERY band can intersect its recorded bounds. This is
@@ -993,14 +898,13 @@ object LakeReader {
     * keep the object), so the conjunction is too. */
   def readPrunedMulti(spark: SparkSession, rootUri: String, table: String,
                       bands: Seq[(String, java.math.BigDecimal, java.math.BigDecimal)],
-                      hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-                      sidecarDistributeAbove: Int = DefaultSidecarDistributeAbove)
+                      hourRange: Option[(java.time.Instant, java.time.Instant)] = None)
       : (DataFrame, PruneReport) = {
     require(bands.nonEmpty, "at least one (column, lo, hi) band")
     val store = new HadoopStore(rootUri)
     val keys = listTableKeys(store, table, hourRange)
     require(keys.nonEmpty, s"no lake objects for table $table under $rootUri")
-    val kept = prunedKeys(spark, rootUri, keys, bands, sidecarDistributeAbove)
+    val kept = prunedKeys(store, keys, bands)
     prunedResult(spark, store, table, keys, kept)
   }
 
@@ -1018,11 +922,9 @@ object LakeReader {
     * as [[readPrunedMulti]]. */
   def readPrunedEq(spark: SparkSession, rootUri: String, table: String,
                    column: String, value: Any,
-                   hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-                   sidecarDistributeAbove: Int = DefaultSidecarDistributeAbove)
+                   hourRange: Option[(java.time.Instant, java.time.Instant)] = None)
       : (DataFrame, PruneReport) =
-    readPrunedEqMulti(spark, rootUri, table, Seq((column, value)), hourRange,
-      sidecarDistributeAbove)
+    readPrunedEqMulti(spark, rootUri, table, Seq((column, value)), hourRange)
 
   /** [[readPrunedEq]] over a CONJUNCTION of point probes (`c1 = v1 AND
     * c2 = v2 AND …`): an object is opened only if EVERY probe's bloom
@@ -1032,8 +934,7 @@ object LakeReader {
     * probe is conservative independently, so the conjunction is too. */
   def readPrunedEqMulti(spark: SparkSession, rootUri: String, table: String,
                         probes: Seq[(String, Any)],
-                        hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-                        sidecarDistributeAbove: Int = DefaultSidecarDistributeAbove)
+                        hourRange: Option[(java.time.Instant, java.time.Instant)] = None)
       : (DataFrame, PruneReport) = {
     require(probes.nonEmpty, "at least one (column, value) probe")
     probes.foreach { case (c, v) => require(v != null && v != "",
@@ -1048,7 +949,7 @@ object LakeReader {
         throw new IllegalArgumentException(s"no column '$column' in table $table"))
       (column, probeWires(colType, value), probeBand(colType, value))
     }
-    val kept = walkKeys(spark, rootUri, keys, sidecarDistributeAbove) { (st, k) =>
+    val kept = KeyWalk.filter(store, keys) { (st, k) =>
       // ONE read per sidecar kind for the whole conjunction
       lazy val blooms = BloomMaps.read(st, k)
       lazy val stats = ZoneMaps.read(st, k)
@@ -1076,11 +977,9 @@ object LakeReader {
     * or torn sidecar keeps, a skip is always provably correct. */
   def readPrunedEqAny(spark: SparkSession, rootUri: String, table: String,
                       column: String, values: Seq[Any],
-                      hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-                      sidecarDistributeAbove: Int = DefaultSidecarDistributeAbove)
+                      hourRange: Option[(java.time.Instant, java.time.Instant)] = None)
       : (DataFrame, PruneReport) =
-    readPrunedEqAnyMulti(spark, rootUri, table, Seq((column, values)), hourRange,
-      sidecarDistributeAbove)
+    readPrunedEqAnyMulti(spark, rootUri, table, Seq((column, values)), hourRange)
 
   /** [[readPrunedEqAny]] over a CONJUNCTION of per-column disjunctions
     * (`c1 IN (…) AND c2 IN (…)`): an object is opened only if EVERY
@@ -1095,12 +994,10 @@ object LakeReader {
     * value's seed-hashes precomputed once on the driver. */
   def readPrunedEqAnyMulti(spark: SparkSession, rootUri: String, table: String,
                            probes: Seq[(String, Seq[Any])],
-                           hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-                           sidecarDistributeAbove: Int = DefaultSidecarDistributeAbove)
+                           hourRange: Option[(java.time.Instant, java.time.Instant)] = None)
       : (DataFrame, PruneReport) = {
     val store = new HadoopStore(rootUri)
-    val (keys, kept) = prunedEqAnyMultiKeys(spark, store, table, probes,
-      hourRange, sidecarDistributeAbove)
+    val (keys, kept) = prunedEqAnyMultiKeys(store, table, probes, hourRange)
     prunedResult(spark, store, table, keys, kept)
   }
 
@@ -1108,10 +1005,9 @@ object LakeReader {
     * keys, conservatively kept keys) without building the DataFrame, so
     * callers that REWRITE rather than read (row-level delete) share the
     * exact same probe decision. */
-  private[lake] def prunedEqAnyMultiKeys(spark: SparkSession, store: Store,
+  private[lake] def prunedEqAnyMultiKeys(store: Store,
       table: String, probes: Seq[(String, Seq[Any])],
       hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-      sidecarDistributeAbove: Int = DefaultSidecarDistributeAbove,
       // EVOLVED table: probe column TYPES resolve against the declared
       // schema (the probed column may not exist in the first object's
       // header at all; sidecar probes on objects lacking it keep
@@ -1125,7 +1021,6 @@ object LakeReader {
         s"equality probe on '$c' is null/empty " +
           "(\"\" round-trips as null in the wire format — probe IS NULL by scanning)") }
     }
-    val rootUri = store.rootUri
     val keys = listTableKeys(store, table, hourRange)
     // an hour range admitting ZERO objects on a table that EXISTS is a
     // legitimate no-op (a DELETE whose misaligned `_event_hour = t`
@@ -1134,7 +1029,7 @@ object LakeReader {
     if (keys.isEmpty && hourRange.isDefined &&
         firstTableKey(store, table).isDefined)
       return (Seq.empty, Seq.empty)
-    require(keys.nonEmpty, s"no lake objects for table $table under $rootUri")
+    require(keys.nonEmpty, s"no lake objects for table $table under ${store.rootUri}")
     val colTypes = declared.getOrElse(
       peekSchema(store, keys.head, table)).columns.toMap
     // hash every plausible wire form of every value ONCE, on the driver —
@@ -1148,7 +1043,7 @@ object LakeReader {
             probeBand(colType, v))
         }
       }
-    val kept = walkKeys(spark, rootUri, keys, sidecarDistributeAbove) { (st, k) =>
+    val kept = KeyWalk.filter(store, keys) { (st, k) =>
       lazy val blooms = BloomMaps.read(st, k)
       lazy val stats = ZoneMaps.read(st, k)
       plans.forall { case (column, vals) =>
@@ -1199,11 +1094,10 @@ object LakeReader {
                    column: String, dim: DataFrame, dimColumn: String,
                    maxDimKeys: Int = 250000,
                    broadcastKeysUpTo: Int = 10000,
-                   hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-                   sidecarDistributeAbove: Int = DefaultSidecarDistributeAbove)
+                   hourRange: Option[(java.time.Instant, java.time.Instant)] = None)
       : (DataFrame, PruneReport) =
     lakeSemiJoinMulti(spark, rootUri, table, Seq((column, dimColumn)), dim,
-      maxDimKeys, broadcastKeysUpTo, hourRange, sidecarDistributeAbove)
+      maxDimKeys, broadcastKeysUpTo, hourRange)
 
   /** COMPOSITE-KEY [[lakeSemiJoin]]: the exact semi-join matches on a
     * conjunction of equal column pairs (`lake.c1 = dim.d1 AND lake.c2 =
@@ -1222,8 +1116,7 @@ object LakeReader {
                         joinCols: Seq[(String, String)], dim: DataFrame,
                         maxDimKeys: Int = 250000,
                         broadcastKeysUpTo: Int = 10000,
-                        hourRange: Option[(java.time.Instant, java.time.Instant)] = None,
-                        sidecarDistributeAbove: Int = DefaultSidecarDistributeAbove)
+                        hourRange: Option[(java.time.Instant, java.time.Instant)] = None)
       : (DataFrame, PruneReport) = {
     import org.apache.spark.sql.functions.{broadcast, col}
     require(joinCols.nonEmpty, "at least one (lakeColumn, dimColumn) pair")
@@ -1267,7 +1160,7 @@ object LakeReader {
       lakeCol -> keyRows.map(_.get(i)).distinct.toSeq
     }
     val (pruned, report) = readPrunedEqAnyMulti(spark, rootUri, table, probes,
-      hourRange, sidecarDistributeAbove)
+      hourRange)
     val semiNames = joinCols.indices.map(i => s"__graft_semi_key$i")
     def conj(probe: DataFrame) = joinCols.zipWithIndex
       .map { case ((lakeCol, _), i) => pruned(lakeCol) === probe(semiNames(i)) }
@@ -1388,21 +1281,6 @@ object LakeReader {
     }
   }
 
-  /** Candidate count above which the pruned-read sidecar consult ships to
-    * executors instead of walking on the driver. Below it (interactive
-    * hour-range reads, tests) a Spark job would cost more than it saves;
-    * above it the driver loop IS the bottleneck — at a million objects a
-    * serial walk of ~100-byte sidecar reads is minutes of driver time that
-    * a few hundred tasks absorb in seconds. */
-  val DefaultSidecarDistributeAbove = 4096
-
-  /** One task sizing for EVERY distributed metadata walk (sidecar
-    * consults, per-hour partials, retention deletes): ~64 objects per
-    * task, capped at 256 tasks — shared so the walks the specs pin as
-    * "the same arrangement" cannot drift apart one call site at a
-    * time. */
-  private[lake] def walkPartitions(n: Int): Int = math.min(256, 1 + n / 64)
-
   /** The single consult predicate BOTH walks share: conservative keep on
     * missing/torn/poisoned stats, conjunction across bands, one sidecar
     * read per object regardless of band count. */
@@ -1410,40 +1288,16 @@ object LakeReader {
       bands: Seq[(String, java.math.BigDecimal, java.math.BigDecimal)]): Boolean =
     bands.forall { case (c, lo, hi) => ZoneMaps.mayContain(stats, c, lo, hi) }
 
-  /** Kept-key list for a pruned read: driver walk up to
-    * `distributeAbove` candidates, executor-distributed above (the
-    * [[statsSummaryDistributed]] arrangement — per-partition stores, a
-    * few hundred tasks for a million-object listing). Key order is
-    * preserved either way, and the two walks apply [[keepsObject]] to the
+  /** Kept-key list for a pruned read, walked by [[KeyWalk]]. Key order
+    * is preserved on either branch, and both apply [[keepsObject]] to the
     * same per-object sidecar reads, so kept-sets are identical —
     * spec-pinned in ZoneMapsSpec including torn-sidecar and stat-less
     * objects. */
-  private[lake] def prunedKeys(spark: SparkSession, rootUri: String,
-      keys: Seq[String],
-      bands: Seq[(String, java.math.BigDecimal, java.math.BigDecimal)],
-      distributeAbove: Int): Seq[String] =
-    walkKeys(spark, rootUri, keys, distributeAbove) { (st, k) =>
+  private[lake] def prunedKeys(store: Store, keys: Seq[String],
+      bands: Seq[(String, java.math.BigDecimal, java.math.BigDecimal)])
+      : Seq[String] =
+    KeyWalk.filter(store, keys) { (st, k) =>
       keepsObject(ZoneMaps.read(st, k), bands)
-    }
-
-  /** The ONE driver-or-distributed key-filter arrangement every sidecar
-    * consult shares (band prune, bloom probe): driver walk up to
-    * `distributeAbove` keys, executor fan-out above, key order preserved
-    * either way. `keep` receives a per-walker [[Store]] (the driver's or
-    * a per-executor one) and must be serializable with its captures. */
-  private[lake] def walkKeys(spark: SparkSession, rootUri: String, keys: Seq[String],
-      distributeAbove: Int)(keep: (Store, String) => Boolean): Seq[String] =
-    if (keys.length <= distributeAbove) {
-      val store = new HadoopStore(rootUri)
-      keys.filter(keep(store, _))
-    } else {
-      val parts = walkPartitions(keys.length)
-      spark.sparkContext.parallelize(keys.zipWithIndex, parts)
-        .mapPartitions { it =>
-          val st = new HadoopStore(rootUri) // per-executor store
-          it.filter { case (k, _) => keep(st, k) }
-        }
-        .collect().sortBy(_._2).map(_._1).toSeq
     }
 
   private def readPaths(spark: SparkSession, store: Store, table: String,

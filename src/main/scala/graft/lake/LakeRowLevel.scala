@@ -362,14 +362,14 @@ object LakeRowLevel {
       val hr = Some((from.getOrElse(Instant.EPOCH),
         to.getOrElse(Instant.parse("9999-01-01T00:00:00Z"))))
       val doomed = LakeReader.listTableKeys(store, table, hr)
-      if (doomed.nonEmpty) dmlRetire(spark, store, table, doomed)
+      if (doomed.nonEmpty) dmlRetire(store, table, doomed)
     case DeleteByKeys(ks) =>
       // only THIS table's parse-able EXISTING keys: a foreign/garbage
       // key names no row of this table, and a re-run of the same DELETE
       // must stay a no-op, not a validation failure
       val mine = ks.filter(k => LakeKeys.parseKey(k).exists(_._2 == table))
         .filter(store.exists)
-      if (mine.nonEmpty) dmlRetire(spark, store, table, mine)
+      if (mine.nonEmpty) dmlRetire(store, table, mine)
   }
 
   /** The EQUALITY-DELETE write (see [[LakeEqDeletes]]): freeze the
@@ -440,11 +440,11 @@ object LakeRowLevel {
     * FIRST (CAS-serialized against every racing mutation; the keys
     * tombstone atomically), then the physical retire — SKIPPED when the
     * table retains history, exactly like the copy-on-write paths. */
-  private def dmlRetire(spark: SparkSession, store: Store, table: String,
+  private def dmlRetire(store: Store, table: String,
                         doomed: Seq[String]): Unit = {
     LakeVersions.commit(store, table, op = "delete", removed = doomed)
     if (!LakeVersions.isRetained(store, table)) {
-      LakeMaintenance.physicalRetireDistributed(spark, store.rootUri, doomed)
+      LakeMaintenance.physicalRetire(store, doomed)
       LakeVersions.pruneChainIfLarge(store, table, doomed.size)
     }
   }
@@ -634,11 +634,10 @@ final class LakeCowWrite(rootUri: String, lakeSchema: TableSchema,
       }
       // originals retire AFTER the commit (their tombstones already
       // hide them; a crash here is finished by the next commit), kept
-      // on disk when the table retains time-travel history; the
-      // distributed variant absorbs broad rewrites
+      // on disk when the table retains time-travel history; a broad
+      // rewrite's deletes fan out (a KeyWalk delete walk)
       if (retired.nonEmpty && !LakeVersions.isRetained(store, table)) {
-        LakeMaintenance.physicalRetireDistributed(
-          SparkSession.active, rootUri, retired)
+        LakeMaintenance.physicalRetire(store, retired)
         LakeVersions.pruneChainIfLarge(store, table, retired.size)
       }
       if (hours.nonEmpty)

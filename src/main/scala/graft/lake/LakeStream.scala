@@ -5,7 +5,6 @@ import graft.types.TableSchema
 import java.time.Instant
 import java.time.temporal.ChronoUnit
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.Filter
@@ -343,13 +342,12 @@ final class LakeMicroBatchStream(rootUri: String, table: String,
     // scan's decision ([[LakePrune.Compiled.keeps]] — torn/missing
     // sidecar KEEPS). Keys stay in the ledger either way; only delivery
     // is skipped, and only for objects provably holding no matching row.
-    // Distributes above the same threshold as every pruned batch read.
+    // A [[KeyWalk]], like every pruned batch read.
     val p = pred
     val inKey = fresh.filter(p.keepsKeyItself)
     val kept =
       if (p.trivial) inKey
-      else LakeReader.walkKeys(SparkSession.active, rootUri, inKey,
-        LakeReader.DefaultSidecarDistributeAbove)(p.keeps)
+      else KeyWalk.filter(store, inKey)(p.keeps)
     prunedCount += (fresh.size - kept.size).toLong
     // merge-on-read: an undelivered object that acquired a delete vector
     // BEFORE delivery delivers only its live rows (value-at-delivery

@@ -371,7 +371,7 @@ object ZoneMaps {
       // header-only objects yield no rows — seed every listed key so each
       // gets a sidecar (the BloomMaps.buildIndex zero-seed, same reason)
       val seeds = spark.sparkContext
-        .parallelize(keys.map(_.split('/').last), LakeReader.walkPartitions(keys.length))
+        .parallelize(keys.map(_.split('/').last), KeyWalk.tasks(keys.length))
         .map(name => name -> (null: org.apache.spark.sql.Row))
       rows
         .map(r => r.getString(0).split('/').last -> r)

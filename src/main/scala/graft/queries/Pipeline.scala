@@ -2768,15 +2768,15 @@ object Pipeline {
     // rollups of COUNT(*)/nulls/MIN/MAX answered from zone-map sidecars
     // alone, no data object opened. Three flush hours land disjoint
     // event thirds; the in-query require()s pin the contract: (a) the
-    // distributed walk returns bit-identical per-hour summaries to the
-    // driver walk, (b) tearing one sidecar nulls ONLY its own hour —
+    // executor walk (pinned through KeyWalk's seam) returns bit-identical
+    // per-hour summaries to the driver walk, (b) tearing one sidecar nulls ONLY its own hour —
     // the other hours stay exact (per-hour exact-or-absent, so a
     // dashboard falls back to scanning one hour, not the lake). The
     // oracle recomputes the same per-hour aggregates from the original
     // parquet via the event_id % 3 routing.
     "l11_lake_stats_by_hour" -> QueryDef(
       (s, dir) => {
-        import graft.lake.{LakeReader, LakeWriter}
+        import graft.lake.{KeyWalk, LakeReader, LakeWriter}
         import graft.types.{ColType, TableSchema}
         import java.time.Instant
         val schema = TableSchema("events_h", Seq(
@@ -2793,9 +2793,9 @@ object Pipeline {
         require(hours.map(_._1) == (0 until 3).map(hourOf) &&
             hours.forall(_._2.nonEmpty),
           s"three exact hour buckets expected, got $hours")
-        require(LakeReader.statsByHourDistributed(s, root, "events_h",
-            partitions = 2) == hours,
-          "distributed hour walk must equal the driver walk bit-identically")
+        require(KeyWalk.pinned(KeyWalk.OnExecutors(2)) {
+            LakeReader.statsByHour(store, "events_h") } == hours,
+          "executor hour walk must equal the driver walk bit-identically")
         // tear ONE sidecar in hour 1: only that hour's answer may vanish
         tearSidecar(store, LakeReader.listTableKeys(store, "events_h",
           Some((hourOf(1), hourOf(1)))).head)
@@ -2804,8 +2804,9 @@ object Pipeline {
           "the torn hour must fall to None (scan that one hour)")
         require(after(0) == hours(0) && after(2) == hours(2),
           "hours with healthy sidecars must stay exact")
-        require(LakeReader.statsByHourDistributed(s, root, "events_h") == after,
-          "distributed walk must agree after the tear too")
+        require(KeyWalk.pinned(KeyWalk.OnExecutors()) {
+            LakeReader.statsByHour(store, "events_h") } == after,
+          "executor walk must agree after the tear too")
         val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH")
           .withZone(java.time.ZoneOffset.UTC)
         import s.implicits._

@@ -35,7 +35,7 @@ import org.apache.spark.sql.execution.datasources.v2.StreamingDataSourceV2ScanRe
   * that one branch still needs — the exact hazard that keeps Spark
   * itself from pushing filters into streaming sources. Multi-occurrence
   * plans simply read unpruned, row-level filters intact. Registered by
-  * `graft.GraftExtensions` and `graft.Sessions.local`.
+  * `graft.GraftExtensions`, which `graft.Sessions.builder` installs.
   */
 object StreamLakePrune extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan = {

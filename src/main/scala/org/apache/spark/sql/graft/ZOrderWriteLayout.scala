@@ -25,16 +25,16 @@ import org.apache.spark.sql.types.LongType
   * [[exprs.ZInterleave]]. `writePartitions` caps the exchange's
   * partition count (≈ object count).
   *
-  * The z-request is read from EITHER face, because the two registration
-  * paths see the plan at different times: the built [[LakeWrite]]
-  * (`Sessions.local`'s extraOptimizations — the "User Provided
-  * Optimizers" batch runs after `V2Writes`) or the lake relation's raw
-  * options (`spark.sql.extensions` — injected operator rules run BEFORE
-  * `V2Writes`, when `AppendData.write` is still None). Advisory and
+  * The z-request is read from EITHER face, because the two ways to
+  * register a rule see the plan at different times: the built
+  * [[LakeWrite]] (a session's `experimental.extraOptimizations` — the
+  * "User Provided Optimizers" batch runs after `V2Writes`) or the lake
+  * relation's raw options (session extensions — injected operator rules
+  * run BEFORE `V2Writes`, when `AppendData.write` is still None). Advisory and
   * idempotent: the rewrite fires once (guarded by the z-sort already on
   * the query) and never changes WHAT is written, only the row→task
-  * layout. Registered by `graft.GraftExtensions` and
-  * `graft.Sessions.local`; without the rule the option degrades to an
+  * layout. Registered by `graft.GraftExtensions`, which
+  * `graft.Sessions.builder` installs; without the rule the option degrades to an
   * unclustered write (documented on the option), never a wrong one. */
 object ZOrderWriteLayout extends Rule[LogicalPlan] {
 

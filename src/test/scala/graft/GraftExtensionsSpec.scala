@@ -4,13 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The extensions path must yield the same SQL surface as the imperative
-  * exprs.register: build a session WITH the extensions installed and
-  * evaluate each function. `spark.sql.extensions` is a STATIC conf — read
-  * from the SparkContext at its creation — so a suite run with a
-  * pre-existing context must install through `builder.withExtensions`
-  * (the same code path getOrCreate feeds config-loaded classes into).
-  * The prior default session is cleared first and restored after; the
-  * underlying SparkContext is shared. */
+  * exprs.register: build a session through `Sessions.builder` — the one
+  * registration path, which installs the extensions with
+  * `builder.withExtensions` — and evaluate each function.
+  * (`spark.sql.extensions` is a STATIC conf, read from the SparkContext
+  * at its creation, so it could not install them on this suite's shared
+  * context.) The prior default session is cleared first and restored
+  * after; the underlying SparkContext is shared. */
 class GraftExtensionsSpec extends AnyFunSuite with TempDirs {
 
   test("GraftExtensions installs the SQL functions via SparkSessionExtensions") {
@@ -18,7 +18,6 @@ class GraftExtensionsSpec extends AnyFunSuite with TempDirs {
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {
       val r = spark.sql(
@@ -71,7 +70,6 @@ class GraftExtensionsSpec extends AnyFunSuite with TempDirs {
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {
       import spark.implicits._

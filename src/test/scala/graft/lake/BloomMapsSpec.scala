@@ -96,8 +96,8 @@ class BloomMapsSpec extends SparkSuite {
     // t3's own object + the two conservatively-kept ones
     assert(rep.kept == 3, s"missing+torn blooms must keep their objects: $rep")
     // the distributed walk (forced) must keep the identical set
-    val (_, repD) = LakeReader.readPrunedEq(spark, root, "bt", "tag", "t3",
-      sidecarDistributeAbove = 0)
+    val (_, repD) = KeyWalk.pinned(KeyWalk.OnExecutors())(
+      LakeReader.readPrunedEq(spark, root, "bt", "tag", "t3"))
     assert(repD == rep, s"walks must agree: $rep vs $repD")
   }
 
@@ -322,8 +322,8 @@ class BloomMapsSpec extends SparkSuite {
       Seq("nope", "also-nope"))
     assert(none.kept == 0)
     // distributed walk keeps the identical set
-    val (_, repD) = LakeReader.readPrunedEqAny(spark, root, "bt", "tag",
-      Seq("t1", "t3"), sidecarDistributeAbove = 0)
+    val (_, repD) = KeyWalk.pinned(KeyWalk.OnExecutors())(
+      LakeReader.readPrunedEqAny(spark, root, "bt", "tag", Seq("t1", "t3")))
     assert(repD == rep, s"walks must agree: $rep vs $repD")
     // a torn bloom keeps its object under the disjunction too
     val store = new HadoopStore(root)

@@ -279,9 +279,9 @@ class LakeCatalogSpec extends SparkSuite {
     assert(r1.getInt(3) == 5 && r1.getInt(4) == 5, s"full coverage: $r1")
     assert(r1.isNullAt(5), "no seal yet")
     // the distributed walk returns the SAME report
-    val direct = LakeMaintenance.tableStats(spark, root, "ev")
-    assert(LakeMaintenance.tableStats(spark, root, "ev",
-      distributeAbove = 2) == direct, "fan-out ≡ driver walk")
+    val direct = LakeMaintenance.tableStats(root, "ev")
+    assert(KeyWalk.pinned(KeyWalk.OnExecutors())(
+      LakeMaintenance.tableStats(root, "ev")) == direct, "fan-out ≡ driver walk")
     // a torn sidecar makes rows NULL (exact-or-absent), coverage drops
     val k = LakeReader.listTableKeys(store, "ev", None).head
     store.delete(ZoneMaps.statsKey(k))

@@ -92,9 +92,8 @@ class LakeDataSourceSpec extends SparkSuite {
     // can intersect
     val q = dsv2(root).where(col("id") >= 600L && col("id") < 800L)
     val planned = lakeScan(q).plannedKeys
-    val expected = LakeReader.prunedKeys(spark, root, keys,
-      Seq(("id", java.math.BigDecimal.valueOf(600), java.math.BigDecimal.valueOf(800))),
-      LakeReader.DefaultSidecarDistributeAbove)
+    val expected = LakeReader.prunedKeys(store, keys,
+      Seq(("id", java.math.BigDecimal.valueOf(600), java.math.BigDecimal.valueOf(800))))
     assert(planned == expected, s"$planned vs $expected")
     assert(planned.size == 2, s"band must prune to two objects: $planned")
     // and the rows are exact (post-scan filter re-applies row-level)
@@ -109,6 +108,28 @@ class LakeDataSourceSpec extends SparkSuite {
     assert(lakeScan(q2).plannedKeys.contains(victim),
       "torn sidecar must conservatively keep its object")
     assert(q2.count() == 98) // ids 0..99 minus the null id (13) and the huge id (14)
+  }
+
+  test("the planned scan's executor walk keeps the driver walk's objects and equals prunedKeys (torn + stat-less included)") {
+    val root = freshRoot()
+    fixture(root) // id objects [0,249] [250,499] [500,749] [750,huge]
+    val store = new HadoopStore(root)
+    val keys = LakeReader.listTableKeys(store, "dt", None)
+    def minId(k: String) = ZoneMaps.read(store, k).get.cols("id").min.get.longValueExact()
+    val byBand = keys.sortBy(minId)
+    // out of the band [800, 900): [250,499] gets a TORN sidecar and
+    // [0,249] none at all (stat-less) — both must be kept; the intact
+    // [500,749] object is pruned
+    tearSidecarText(store, byBand(1))
+    store.delete(ZoneMaps.statsKey(byBand(0)))
+    def planned(branch: KeyWalk.Branch) = KeyWalk.pinned(branch)(
+      lakeScan(dsv2(root).where(col("id") >= 800L && col("id") < 900L)).plannedKeys)
+    val driver = planned(KeyWalk.OnDriver)
+    assert(driver.toSet == Set(byBand(0), byBand(1), byBand(3)), s"$driver")
+    assert(planned(KeyWalk.OnExecutors()) == driver,
+      "the executor walk must keep the driver walk's objects, in order")
+    assert(driver == LakeReader.prunedKeys(store, keys, Seq(("id",
+      java.math.BigDecimal.valueOf(800), java.math.BigDecimal.valueOf(900)))))
   }
 
   private def tearSidecarText(store: Store, dataKey: String): Unit = {

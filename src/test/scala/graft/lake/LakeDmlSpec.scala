@@ -373,8 +373,8 @@ class LakeDmlSpec extends SparkSuite {
       land(root, "2024-07-01T09:00:00Z", 1000, 1000)
     Manifests.seal(store, "ev", Instant.parse("2024-07-01T09:00:00Z"))
     val doomed = keys.take(6)
-    val n = LakeMaintenance.retireObjectsDistributed(spark, root, doomed,
-      distributeAbove = 4) // force the executor fan-out at spec scale
+    val n = KeyWalk.pinned(KeyWalk.OnExecutors())( // force the executor fan-out at spec scale
+      LakeMaintenance.retireObjects(store, doomed))
     assert(n == 6)
     assert(doomed.forall(!store.exists(_)))
     assert(!store.exists(Manifests.manifestKey("ev")),

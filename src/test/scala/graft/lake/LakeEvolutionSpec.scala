@@ -266,10 +266,10 @@ class LakeEvolutionSpec extends SparkSuite {
          |FROM range(30)""".stripMargin)
     val keys = LakeReader.listTableKeys(store, "ev2", None)
     assert(keys.size >= 4)
-    val driver = LakeReader.groupKeysByHeader(spark, store, "ev2", keys,
-      distributeAbove = Int.MaxValue)
-    val dist = LakeReader.groupKeysByHeader(spark, store, "ev2", keys,
-      distributeAbove = 1)
+    val driver = KeyWalk.pinned(KeyWalk.OnDriver)(
+      LakeReader.groupKeysByHeader(store, "ev2", keys))
+    val dist = KeyWalk.pinned(KeyWalk.OnExecutors(1))(
+      LakeReader.groupKeysByHeader(store, "ev2", keys))
     assert(driver.map { case (s, ks) => (s.columns, ks) } ==
       dist.map { case (s, ks) => (s.columns, ks) },
       "executor fan-out must group exactly like the driver walk")

@@ -551,6 +551,42 @@ class LakeStreamSpec extends SparkSuite {
         "torn-sidecar conservatism included")
   }
 
+  test("the stream prune's executor walk keeps exactly the driver walk's objects (torn + stat-less included)") {
+    val root = freshRoot()
+    val keys = (for (h <- Seq("2024-06-10T08:00:00Z", "2024-06-10T09:00:00Z",
+                              "2024-06-10T10:00:00Z");
+                     tg <- Seq("t0", "t1"))
+      yield (h, tg) -> landTagged(root, h, tg, 0 until 10)).toMap
+    val store = new HadoopStore(root)
+    // 08 t0: both sidecars TORN to a valid prefix; 09 t0: no sidecars at
+    // all (stat-less writer). Neither can be refuted, so both are kept;
+    // the intact 10 t0 object is bloom-refuted
+    val torn = keys(("2024-06-10T08:00:00Z", "t0"))
+    for (sk <- Seq(BloomMaps.bloomKey(torn), ZoneMaps.statsKey(torn))) {
+      val text = new String(store.open(sk).readAllBytes(), "UTF-8")
+      val out = store.create(sk)
+      out.write(text.take(text.length / 2).getBytes("UTF-8")); out.close()
+    }
+    val statless = keys(("2024-06-10T09:00:00Z", "t0"))
+    store.delete(BloomMaps.bloomKey(statless))
+    store.delete(ZoneMaps.statsKey(statless))
+    def planned(branch: KeyWalk.Branch): (Seq[String], Long) = {
+      val s = new LakeMicroBatchStream(root, "st", schema,
+        LakeDataSource.outputStruct(schema), None, None, startFromLatest = false,
+        pushed = Array(org.apache.spark.sql.sources.EqualTo("tag", "t1")))
+      val start = s.initialOffset()
+      val end = s.latestOffset(start, ReadLimit.allAvailable())
+      (KeyWalk.pinned(branch)(keysOfParts(s.planInputPartitions(start, end))),
+        s.objectsPruned)
+    }
+    val driver = planned(KeyWalk.OnDriver)
+    assert(driver == ((keys - (("2024-06-10T10:00:00Z", "t0"))).values.toSeq.sorted, 1L),
+      s"3×t1 matching + torn + stat-less kept, intact 10 t0 pruned: $driver")
+    assert(planned(KeyWalk.OnExecutors()) == driver,
+      "the executor walk must keep the driver walk's objects")
+    assert(planned(KeyWalk.OnExecutors(3)) == driver, "at any task count")
+  }
+
   test("a self-union with per-branch WHEREs never loses rows: the shared stream is left unpruned") {
     // MicroBatchExecution deduplicates the shared source into ONE stream
     // instance; conjoining the branches' different filters there would

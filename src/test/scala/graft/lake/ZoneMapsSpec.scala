@@ -231,29 +231,32 @@ class ZoneMapsSpec extends SparkSuite {
     // band [0,100]: healthy object 1 kept by stats; 2 (torn) and 3
     // (stat-less) kept conservatively; healthy object 4 pruned
     val bands = Seq(("id", dec(0), dec(100)))
-    val driver = LakeReader.prunedKeys(spark, root, keys, bands,
-      distributeAbove = Int.MaxValue)
-    val dist = LakeReader.prunedKeys(spark, root, keys, bands,
-      distributeAbove = 0) // force the RDD walk
+    val driver = KeyWalk.pinned(KeyWalk.OnDriver)(
+      LakeReader.prunedKeys(store, keys, bands))
+    val dist = KeyWalk.pinned(KeyWalk.OnExecutors())( // force the RDD walk
+      LakeReader.prunedKeys(store, keys, bands))
     assert(driver == dist, s"walks must agree:\ndriver=$driver\ndist=$dist")
     assert(driver.size == 3 && !driver.contains(band(3)),
       s"torn+stat-less keep, healthy out-of-band prunes: $driver")
     // multi-band conjunction agrees too (id × v, v = id/3)
     val bands2 = Seq(("id", dec(0), dec(600)), ("v", dec(90), dec(110)))
-    val d2 = LakeReader.prunedKeys(spark, root, keys, bands2, Int.MaxValue)
-    val x2 = LakeReader.prunedKeys(spark, root, keys, bands2, 0)
+    val d2 = KeyWalk.pinned(KeyWalk.OnDriver)(
+      LakeReader.prunedKeys(store, keys, bands2))
+    val x2 = KeyWalk.pinned(KeyWalk.OnExecutors())(
+      LakeReader.prunedKeys(store, keys, bands2))
     assert(d2 == x2, s"multi-band walks must agree:\ndriver=$d2\ndist=$x2")
     // and the public read path over the distributed walk stays exact
-    val (df, rep) = LakeReader.readPrunedMulti(spark, root, "zt", bands,
-      sidecarDistributeAbove = 0)
+    val (df, rep) = KeyWalk.pinned(KeyWalk.OnExecutors())(
+      LakeReader.readPrunedMulti(spark, root, "zt", bands))
     assert(rep == LakeReader.PruneReport(4, 3))
     assert(df.filter(col("id") <= 100).count() == 101)
     // the torn sidecar that PRUNING survives (conservative keep) must
     // collapse the exact-or-absent DISTRIBUTED aggregate to None — the
     // strict parse refuses the prefix, never merges garbage into an
     // "exact" COUNT (the driver walk agrees)
-    assert(LakeReader.statsSummaryDistributed(spark, root, "zt",
-      partitions = 4).isEmpty, "torn sidecar must poison the distributed summary")
+    assert(KeyWalk.pinned(KeyWalk.OnExecutors(4))(
+      LakeReader.statsSummary(store, "zt")).isEmpty,
+      "torn sidecar must poison the distributed summary")
     assert(LakeReader.statsSummary(store, "zt").isEmpty)
   }
 
@@ -279,15 +282,17 @@ class ZoneMapsSpec extends SparkSuite {
            s0.cols("id").max.get.longValueExact() == 399 &&
            s1.cols("id").min.get.longValueExact() == 400 &&
            s1.cols("id").max.get.longValueExact() == 999)
-    assert(LakeReader.statsByHourDistributed(spark, root, "zt",
-      partitions = 3) == hours, "distributed hour walk must equal driver")
+    assert(KeyWalk.pinned(KeyWalk.OnExecutors(3))(
+      LakeReader.statsByHour(store, "zt")) == hours,
+      "distributed hour walk must equal driver")
     // tear one sidecar in hour 0: hour 0 → None, hour 1 untouched
     val k0 = LakeReader.listTableKeys(store, "zt", Some((h0, h0))).head
     tear(store, k0)
     val after = LakeReader.statsByHour(store, "zt")
     assert(after.head._2.isEmpty, "torn hour must fall to None")
     assert(after(1) == hours(1), "healthy hour must stay exact")
-    assert(LakeReader.statsByHourDistributed(spark, root, "zt") == after)
+    assert(KeyWalk.pinned(KeyWalk.OnExecutors())(
+      LakeReader.statsByHour(store, "zt")) == after)
     // hour-range scoping composes
     assert(LakeReader.statsByHour(store, "zt", Some((h1, h1))) == Seq(after(1)))
   }
@@ -312,8 +317,8 @@ class ZoneMapsSpec extends SparkSuite {
     val (rootA, rootB) = (build(), build())
     val (storeA, storeB) = (new HadoopStore(rootA), new HadoopStore(rootB))
     val repA = LakeMaintenance.expire(storeA, "zt", cutoff)
-    val repB = LakeMaintenance.expireDistributed(spark, rootB, "zt", cutoff,
-      partitions = 2)
+    val repB = KeyWalk.pinned(KeyWalk.OnExecutors(2))(
+      LakeMaintenance.expire(storeB, "zt", cutoff))
     assert(repA == repB, s"reports must agree: $repA vs $repB")
     assert(repA.deleted == 3, s"hour 01's three objects retire: $repA")
     def state(st: HadoopStore) =
@@ -509,8 +514,8 @@ class ZoneMapsSpec extends SparkSuite {
     // the per-partition merge + pairwise summary merge must be exactly
     // the flat lattice, however the 4 objects split across partitions
     for (p <- Seq(1, 2, 3, 4))
-      assert(LakeReader.statsSummaryDistributed(spark, root, "zt",
-          partitions = p) == driverSide,
+      assert(KeyWalk.pinned(KeyWalk.OnExecutors(p))(
+          LakeReader.statsSummary(store, "zt")) == driverSide,
         s"distributed($p partitions) must equal the driver walk")
     // a poisoned column in ONE partition demotes bounds globally while
     // null counts stay exact — same as the flat merge
@@ -519,14 +524,16 @@ class ZoneMapsSpec extends SparkSuite {
     ZoneMaps.write(store, k, orig.copy(cols = orig.cols.updated("v",
       ZoneMaps.ColStats(None, None, 0))))
     for (p <- Seq(1, 4))
-      assert(LakeReader.statsSummaryDistributed(spark, root, "zt", partitions = p)
+      assert(KeyWalk.pinned(KeyWalk.OnExecutors(p))(
+          LakeReader.statsSummary(store, "zt"))
         == LakeReader.statsSummary(store, "zt"),
         s"poison must merge identically at $p partitions")
     // a lost sidecar anywhere yields None, whichever partition holds it
     store.delete(ZoneMaps.statsKey(k))
     for (p <- Seq(1, 4))
-      assert(LakeReader.statsSummaryDistributed(spark, root, "zt",
-        partitions = p).isEmpty, "loss must poison the distributed answer too")
+      assert(KeyWalk.pinned(KeyWalk.OnExecutors(p))(
+        LakeReader.statsSummary(store, "zt")).isEmpty,
+        "loss must poison the distributed answer too")
   }
 
   test("boxed-representation drift still tracks: Integer as CInteger, Float as CFloat") {
@@ -683,7 +690,8 @@ class ZoneMapsSpec extends SparkSuite {
     // and the distributed walk is BIT-IDENTICAL (case-class equality runs
     // BigDecimal.equals — scale-sensitive), at several partitionings
     for (p <- Seq(1, 2, 7))
-      assert(LakeReader.statsSummaryDistributed(spark, root, "mx",
-        partitions = p).contains(drv), s"partitions=$p must be bit-identical")
+      assert(KeyWalk.pinned(KeyWalk.OnExecutors(p))(
+        LakeReader.statsSummary(store, "mx")).contains(drv),
+        s"partitions=$p must be bit-identical")
   }
 }
