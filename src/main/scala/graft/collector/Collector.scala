@@ -1,6 +1,6 @@
 package graft.collector
 
-import graft.lake.{LakeKeys, Store, TypedCsv}
+import graft.lake.{GzipOut, LakeKeys, Store, TypedCsv}
 import graft.types.{ColType, TableSchema, Wildcard}
 
 import java.io.{BufferedWriter, FileInputStream, FileOutputStream, OutputStreamWriter}
@@ -41,7 +41,9 @@ final case class FlushInfo(table: String, id: UUID, trigger: FlushTrigger,
   * detects pressure when its downstream `Writable` buffer fills
   * (`Collector.ts:19-20,278-280`); our spool is a synchronous local file, so
   * the equivalent pressure signal is the spooled-byte volume of the batch —
-  * a bound on local disk held per table. */
+  * a bound on local disk held per table. The spool is plain UTF-8 CSV
+  * whether or not `batchZip` is on (deflate runs in the upload), so the
+  * limit bounds the temp file exactly. */
 final case class CollectorConfig(
     columnTypes: Map[String, Map[String, ColType]] = Map.empty,
     schemas: Map[String, TableSchema] = Map.empty,
@@ -54,6 +56,10 @@ final case class CollectorConfig(
   * records spool straight to a local temp file (O(1) heap per record,
   * `Collector.ts:238-254`), one in-flight batch per resolved table name,
   * flush → one lake object under `YYYY/MM/DD/HH/table/uuid.csv[.gz]`.
+  * `track` only encodes: gzip runs on the flush thread while the store
+  * reads the spool ([[graft.lake.GzipOut.reading]]), as the reference's
+  * zlib pipeline stage runs off the caller's thread. Flushed batches wait
+  * for that thread in an unbounded queue.
   *
   * Scale note: this facade is the ingestion *edge* (the reference is a
   * single-process library embedded in an app server). The 100-TB path is
@@ -65,14 +71,23 @@ final class Collector(store: Store, config: CollectorConfig = CollectorConfig())
 
   private final class Batch(
       val id: UUID,
-      val schemaTable: String, // wildcard form, for override lookup
-      val table: String,       // resolved name → lake key
-      val schema: TableSchema,
+      val table: String, // resolved name → lake key
+      schema: TableSchema,
       val tempFile: java.io.File,
       val writer: BufferedWriter,
       val started: Long) {
     var records: Long = 0L
-    var bytes: Long = 0L // pre-compression spooled volume (backpressure gauge)
+    var bytes: Long = 0L // spooled UTF-8 bytes (backpressure gauge)
+    // the row encoder's state, reused for every record of the batch
+    val names: Array[String] = schema.columnNames.toArray
+    val types: Array[ColType] = schema.colTypes.toArray
+    // a schema inferred from a record that repeats a field repeats the
+    // column: every copy takes the value of its name's first column
+    val first: Array[Int] = names.map(names.indexOf(_))
+    val repeats: Boolean = first.indices.exists(j => first(j) != j)
+    val position: Map[String, Int] = Map.from(names.zip(first))
+    val values = new Array[Any](names.length)
+    val line = new StringBuilder(256)
   }
 
   private val batches = mutable.HashMap.empty[String, Batch]
@@ -110,17 +125,22 @@ final class Collector(store: Store, config: CollectorConfig = CollectorConfig())
     if (stopped) { emitError(new IllegalStateException(s"track('$table') after stop()")); return }
     try {
       val resolved = Wildcard.resolve(table, token)
-      // A resolved name with a '/' (or other non-segment character) would
-      // land keys whose positional parse attributes the data to a DIFFERENT
-      // table — unreadable as written. Signal, never throw (the error
-      // contract), and drop the record.
-      if (!graft.lake.LakeKeys.isValidTableName(resolved)) {
-        emitError(new IllegalArgumentException(
-          s"resolved table name '$resolved' is not a valid lake key segment " +
-            s"(table='$table', token=$token)"))
-        return
+      var batch = batches.getOrElse(resolved, null)
+      if (batch == null) {
+        // A resolved name with a '/' (or other non-segment character) would
+        // land keys whose positional parse attributes the data to a DIFFERENT
+        // table — unreadable as written. Signal, never throw (the error
+        // contract), and drop the record. Checked only here: a batch is
+        // opened for valid names only.
+        if (!LakeKeys.isValidTableName(resolved)) {
+          emitError(new IllegalArgumentException(
+            s"resolved table name '$resolved' is not a valid lake key segment " +
+              s"(table='$table', token=$token)"))
+          return
+        }
+        batch = createBatch(table, resolved, record)
+        batches(resolved) = batch
       }
-      val batch = batches.getOrElseUpdate(resolved, createBatch(table, resolved, record))
       writeRecord(batch, record)
       // Trigger checks in the reference's priority order (backpressure →
       // record limit → age; age is lazy — only examined when the next record
@@ -137,15 +157,13 @@ final class Collector(store: Store, config: CollectorConfig = CollectorConfig())
   private def createBatch(schemaTable: String, resolved: String, first: Seq[(String, Any)]): Batch = {
     val schema = config.schemas.getOrElse(schemaTable, inferSchema(schemaTable, resolved, first))
     val id = UUID.randomUUID()
-    val ext = if (config.batchZip) ".csv.gz" else ".csv"
-    val tmp = Files.createTempFile(s"graft-analytics-$id", ext).toFile
-    val raw = new FileOutputStream(tmp)
+    // the spool is plain CSV; with batchZip the upload deflates it
+    val tmp = Files.createTempFile(s"graft-analytics-$id", ".csv").toFile
     val out = new BufferedWriter(new OutputStreamWriter(
-      if (config.batchZip) graft.lake.GzipOut(raw) else raw,
-      StandardCharsets.UTF_8), 64 * 1024)
+      new FileOutputStream(tmp), StandardCharsets.UTF_8), 64 * 1024)
     out.write(schema.typesHeader); out.write("\n")
     out.write(schema.namesHeader); out.write("\n")
-    new Batch(id, schemaTable, resolved, schema, tmp, out, System.currentTimeMillis())
+    new Batch(id, resolved, schema, tmp, out, System.currentTimeMillis())
   }
 
   /** First-record inference: column order = record field order, type = per
@@ -157,14 +175,31 @@ final class Collector(store: Store, config: CollectorConfig = CollectorConfig())
     })
   }
 
+  /** Project `record` onto the batch's columns in one walk — a field
+    * usually sits at its schema position, else its name is looked up; a
+    * later duplicate overwrites an earlier one, unknown names are
+    * ignored, missing columns stay null — and spool it as one CSV line. */
   private def writeRecord(batch: Batch, record: Seq[(String, Any)]): Unit = {
-    val byName = record.toMap
-    val vals = batch.schema.columnNames.map(n => byName.getOrElse(n, null))
-    val row = TypedCsv.formatRow(vals, batch.schema.colTypes)
-    batch.writer.write(row)
-    batch.writer.write("\n")
+    val vals = batch.values
+    java.util.Arrays.fill(vals.asInstanceOf[Array[AnyRef]], null)
+    val it = record.iterator
+    var k = 0
+    while (it.hasNext) {
+      val (name, v) = it.next()
+      val i =
+        if (k < vals.length && batch.names(k) == name) batch.first(k)
+        else batch.position.getOrElse(name, -1)
+      if (i >= 0) vals(i) = v
+      k += 1
+    }
+    if (batch.repeats) vals.indices.foreach(j => vals(j) = vals(batch.first(j)))
+    val line = batch.line
+    line.setLength(0)
+    TypedCsv.appendRow(line, vals, batch.types)
+    line.append('\n')
+    batch.writer.append(line)
     batch.records += 1
-    batch.bytes += utf8Length(row) + 1
+    batch.bytes += utf8Length(line) // the row and its '\n'
   }
 
   /** UTF-8 encoded length without allocating (the spool is UTF-8, so the
@@ -172,7 +207,7 @@ final class Collector(store: Store, config: CollectorConfig = CollectorConfig())
     * non-ASCII text up to 3×). A well-formed surrogate pair encodes in 4
     * bytes; an UNPAIRED surrogate is written as the 1-byte replacement
     * char by the JDK encoder and is counted as such. */
-  private def utf8Length(s: String): Long = {
+  private def utf8Length(s: CharSequence): Long = {
     var n = 0L
     var i = 0
     while (i < s.length) {
@@ -211,7 +246,10 @@ final class Collector(store: Store, config: CollectorConfig = CollectorConfig())
           // re-run AFTER the put so a seal racing the upload heals
           graft.lake.Manifests.invalidateIfCovers(store, batch.table,
             LakeKeys.datePrefix(flushedAt))
-          store.put(key, new FileInputStream(batch.tempFile))
+          // deflate runs here, on the flush thread, as the store reads
+          val spool = new FileInputStream(batch.tempFile)
+          val in = if (config.batchZip) GzipOut.reading(spool) else spool
+          try store.put(key, in) finally in.close() // not every Store closes it
           graft.lake.Manifests.invalidateIfCovers(store, batch.table,
             LakeKeys.datePrefix(flushedAt))
           val info = FlushInfo(batch.table, batch.id, trigger, batch.records, age, key)

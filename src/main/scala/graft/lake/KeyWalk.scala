@@ -66,21 +66,25 @@ object KeyWalk {
 
   /** `f` over `keys`: one partial on the driver (with `store`), or one
     * per executor task (each with its own store on `store.rootUri`), in
-    * key order. `f` must consume its iterator before returning and be
-    * serializable with its captures. */
+    * key order. With no active or default Spark session there are no
+    * executors to fan out to, and the walk runs on the driver. `f` must
+    * consume its iterator before returning and be serializable with its
+    * captures. */
   private[lake] def partials[A: ClassTag](store: Store, keys: Seq[String],
-      kind: Kind = Read)(f: (Store, Iterator[String]) => A): Seq[A] =
-    if (!fansOut(keys.length, kind)) Seq(f(store, keys.iterator))
+      kind: Kind = Read)(f: (Store, Iterator[String]) => A): Seq[A] = {
+    lazy val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    if (!fansOut(keys.length, kind) || session.isEmpty) Seq(f(store, keys.iterator))
     else {
       val rootUri = store.rootUri
       val n = pin.get match {
         case Some(OnExecutors(t)) if t > 0 => t
         case _ => tasks(keys.length)
       }
-      SparkSession.active.sparkContext.parallelize(keys, n)
+      session.get.sparkContext.parallelize(keys, n)
         .mapPartitions(it => Iterator.single(f(new HadoopStore(rootUri), it)))
         .collect().toSeq
     }
+  }
 
   /** The keys `keep` holds, in key order (a read walk). */
   private[lake] def filter(store: Store, keys: Seq[String])(

@@ -348,7 +348,14 @@ object LakeVersions {
   final case class TableView(excl: Set[String], dvs: Map[String, DvRef],
                              eqdels: Seq[LakeEqDeletes.EqRef] = Nil)
 
-  def tableView(store: Store, table: String): TableView = {
+  def tableView(store: Store, table: String): TableView = tableView(store, table, relist = true)
+
+  /** An intent the listing named but that no longer reads was deleted
+    * by a commit that landed after the listing, whose record the
+    * listing therefore lacks: with `relist`, list once more. A torn
+    * intent reads the same the second time and hides nothing, as
+    * before. */
+  private def tableView(store: Store, table: String, relist: Boolean): TableView = {
     val st = listDir(store, table)
     if (st.gens.isEmpty && st.intents.isEmpty)
       return TableView(Set.empty, Map.empty)
@@ -363,8 +370,9 @@ object LakeVersions {
         val committed = h.flatMap(_.intent).toSet ++
           h.flatMap(r => readRecord(store, table, r.parent))
             .flatMap(_.intent).toSet
-        st.intents.filterNot(committed)
-          .flatMap(id => readIntent(store, table, id)).flatten.toSet
+        val reads = st.intents.filterNot(committed).map(readIntent(store, table, _))
+        if (relist && reads.contains(None)) return tableView(store, table, relist = false)
+        reads.flatten.flatten.toSet
       }
     TableView(h.map(_.tombstones.toSet).getOrElse(Set.empty) ++ pending,
       h.map(_.dvs).getOrElse(Map.empty),
@@ -426,8 +434,12 @@ object LakeVersions {
       * filter a DATA listing through `view.excl` must list the data
       * FIRST and refresh AFTER: an uncommitted publish writes its
       * intent before its renames, so any renamed key old enough to make
-      * the data listing is visible to this newer chain snapshot. */
-    def refresh(): CachedChain = synchronized {
+      * the data listing is visible to this newer chain snapshot. An
+      * intent that vanishes between the listing and its read lists
+      * once more, as in [[tableView]]. */
+    def refresh(): CachedChain = synchronized(refresh(relist = true))
+
+    private def refresh(relist: Boolean): CachedChain = {
       val st = listDir(store, table)
       st.gens.foreach { g =>
         // only VISIBLE records enter the cache: committed records are
@@ -449,7 +461,7 @@ object LakeVersions {
           val committed = h.flatMap(_.intent).toSet ++
             h.flatMap(r => records.get(r.parent)
               .orElse(readRecord(store, table, r.parent))).flatMap(_.intent).toSet
-          st.intents.filterNot(committed).flatMap { id =>
+          val reads = st.intents.filterNot(committed).map { id =>
             // AUDIT intents are MUTABLE — a WAP branch DML rewrites the
             // file in place (scrubs swap batch keys; cross-branch DML
             // adds replacements) — so they are re-read every refresh:
@@ -462,7 +474,9 @@ object LakeVersions {
               read.foreach(intentCache.update(id, _)) // torn stays uncached
               read
             }
-          }.flatten.toSet
+          }
+          if (relist && reads.contains(None)) return refresh(relist = false)
+          reads.flatten.flatten.toSet
         }
       // drop intent cache entries whose files are gone (healed commits)
       intentCache.keys.filterNot(st.intents.contains).toSeq

@@ -137,7 +137,8 @@ object LakeWriter {
       bloomColumns: Seq[String],
       bloomBits: Int = BloomMaps.DefaultBits,
       bloomHashes: Int = BloomMaps.DefaultHashes) {
-    private val types = schema.colTypes
+    private val types = schema.colTypes.toArray
+    private val line = new StringBuilder(256)
     private val written = Seq.newBuilder[WrittenObject]
     private var id: UUID = null
     private var key: String = null
@@ -175,7 +176,9 @@ object LakeWriter {
       }
       if (tracker != null) tracker.observe(vals)
       if (blooms != null) blooms.observe(vals)
-      out.write(TypedCsv.formatRow(vals.toSeq, types)); out.write("\n")
+      line.setLength(0)
+      TypedCsv.appendRow(line, vals, types)
+      out.append(line.append('\n'))
       n += 1
     }
 

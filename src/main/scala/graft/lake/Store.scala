@@ -1,11 +1,16 @@
 package graft.lake
 
-import java.io.{BufferedOutputStream, InputStream, OutputStream}
+import java.io.{BufferedOutputStream, ByteArrayInputStream, ByteArrayOutputStream, InputStream,
+  OutputStream, SequenceInputStream}
 import java.net.URI
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{AtomicMoveNotSupportedException, FileVisitOption, FileVisitResult,
   Files, NoSuchFileException, SimpleFileVisitor, StandardCopyOption, StandardOpenOption,
   Path => JPath}
 import java.nio.file.attribute.BasicFileAttributes
+import java.util.zip.{CRC32, CheckedInputStream, Deflater, DeflaterInputStream, GZIPOutputStream}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CommonConfigurationKeysPublic, FileSystem, Path, RawLocalFileSystem}
@@ -42,8 +47,37 @@ object GzipOut {
         s"-Dgraft.gzip.level must be in -1..9 (java.util.zip.Deflater levels), got $n")
       n
   }
-  def apply(raw: OutputStream): java.util.zip.GZIPOutputStream =
-    new java.util.zip.GZIPOutputStream(raw) { `def`.setLevel(level) }
+  def apply(raw: OutputStream): GZIPOutputStream =
+    new GZIPOutputStream(raw) { `def`.setLevel(level) }
+
+  /** The 10 header bytes `GZIPOutputStream` writes on this JDK. */
+  private lazy val header: Array[Byte] = {
+    val b = new ByteArrayOutputStream
+    new GZIPOutputStream(b).finish()
+    b.toByteArray.take(10)
+  }
+
+  /** The pull form of [[apply]]: reading it yields the bytes [[apply]]
+    * writes for the bytes of `raw` (header, raw deflate at [[level]],
+    * CRC32 + ISIZE trailer). Deflate runs on the thread that reads it,
+    * so a Store upload compresses as it goes. `close` ends the `Deflater`
+    * and closes `raw`. */
+  def reading(raw: InputStream): InputStream = {
+    val deflater = new Deflater(level, true)
+    val checked = new CheckedInputStream(raw, new CRC32)
+    val body = new DeflaterInputStream(checked, deflater, 64 * 1024)
+    // built only once the body is drained: CRC and size of all of `raw`
+    def trailer = {
+      val b = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
+      b.putInt(checked.getChecksum.getValue.toInt).putInt(deflater.getBytesRead.toInt)
+      new ByteArrayInputStream(b.array)
+    }
+    val parts = Iterator[InputStream](new ByteArrayInputStream(header), body) ++
+      Iterator.continually(trailer).take(1)
+    new SequenceInputStream(parts.asJavaEnumeration) {
+      override def close(): Unit = try super.close() finally deflater.end()
+    }
+  }
 }
 
 trait Store extends Serializable {

@@ -33,10 +33,37 @@ object TypedCsv {
     * indistinguishable from a header line and silently vanish on read. */
   def quoteField(s: String): String =
     if (s == null) ""
-    else if (s.indexOf(',') >= 0 || s.indexOf('"') >= 0 || s.indexOf('\n') >= 0 ||
-             s.indexOf('\r') >= 0 || s.startsWith("#"))
-      "\"" + s.replace("\"", "\"\"") + "\""
-    else s
+    else {
+      val sb = new StringBuilder(s.length + 2)
+      appendField(sb, s)
+      sb.toString
+    }
+
+  /** Append `s` to `sb` under [[quoteField]]'s rule (null appends
+    * nothing): one scan decides whether to quote, a second copies with
+    * quotes doubled only if so. */
+  private def appendField(sb: StringBuilder, s: String): Unit = if (s != null) {
+    val n = s.length
+    var quote = n > 0 && s.charAt(0) == '#'
+    var i = 0
+    while (!quote && i < n) {
+      val c = s.charAt(i)
+      quote = c == ',' || c == '"' || c == '\n' || c == '\r'
+      i += 1
+    }
+    if (!quote) sb.append(s)
+    else {
+      sb.append('"')
+      i = 0
+      while (i < n) {
+        val c = s.charAt(i)
+        if (c == '"') sb.append('"')
+        sb.append(c)
+        i += 1
+      }
+      sb.append('"')
+    }
+  }
 
   /** Serialize one value of the given logical type to its wire form
     * (SURVEY.md §1.2 wire-format column). Nulls are empty fields. */
@@ -60,13 +87,20 @@ object TypedCsv {
 
   def formatRow(values: Seq[Any], types: Seq[ColType]): String = {
     val sb = new StringBuilder(64)
+    appendRow(sb, values.toArray, types.toArray)
+    sb.toString
+  }
+
+  /** Append one row (values in schema order, null for a missing value)
+    * to `sb`, without a line terminator: the encoder the Collector spool
+    * and the lake writers run per row. */
+  def appendRow(sb: StringBuilder, values: Array[Any], types: Array[ColType]): Unit = {
     var i = 0
     while (i < values.length) {
       if (i > 0) sb.append(',')
-      sb.append(quoteField(formatValue(values(i), types(i))))
+      appendField(sb, formatValue(values(i), types(i)))
       i += 1
     }
-    sb.toString
   }
 
   /** Full object text: types header + names header + rows. */

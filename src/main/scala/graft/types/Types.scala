@@ -104,18 +104,20 @@ final case class TableSchema(name: String, columns: Seq[(String, ColType)]) {
     s"table $name: _event_hour, _object_key, _row_pos and _change_type " +
       "are reserved (derived on lake reads / the changes feed)")
 
-  def columnNames: Seq[String] = columns.map(_._1)
-  def colTypes: Seq[ColType]   = columns.map(_._2)
+  // computed once: the row encoders and the sidecar trackers read these
+  // per row or per column
+  val columnNames: Seq[String] = columns.map(_._1)
+  val colTypes: Seq[ColType]   = columns.map(_._2)
 
   def structType: StructType =
     StructType(columns.map { case (n, t) => StructField(n, t.sparkType, nullable = true) })
 
   /** The `#`-prefixed type line written as line 1 of every lake object
     * (`Collector.ts:307`). */
-  def typesHeader: String = colTypes.map(_.wire).mkString("#", ",", "")
+  val typesHeader: String = colTypes.map(_.wire).mkString("#", ",", "")
 
   /** Line 2: RFC-4180 column-name header. */
-  def namesHeader: String = columnNames.mkString(",")
+  val namesHeader: String = columnNames.mkString(",")
 }
 
 object TableSchema {

@@ -1,11 +1,15 @@
 package graft.collector
 
-import graft.lake.{HadoopStore, LakeReader}
-import graft.types.ColType
+import graft.lake.{GzipOut, HadoopStore, LakeReader, TypedCsv}
+import graft.types.{ColType, TableSchema}
 import graft.SparkSuite
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPInputStream
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Port of the reference's two test scenarios
   * (`/root/reference/tests/Collector-test.ts:28-117`) plus lake read-back.
@@ -109,27 +113,43 @@ class CollectorSpec extends SparkSuite {
     assert(flushes.map(_.records).sum == 100L)
   }
 
+  /** The Collector's spool files now in the temp directory. */
+  private def spools(): Set[String] = {
+    val s = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+    try s.iterator.asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("graft-analytics-")).toSet
+    finally s.close()
+  }
+
   test("store failure during async flush surfaces on onError, temp file disposed") {
-    val failing = new graft.lake.Store {
-      def put(key: String, data: java.io.InputStream): Unit = {
-        data.close(); throw new java.io.IOException("store down")
+    for (zip <- Seq(false, true)) {
+      val before = spools()
+      val spooledDuringPut = mutable.Buffer.empty[String]
+      val failing = new graft.lake.Store {
+        def put(key: String, data: java.io.InputStream): Unit = {
+          spooledDuringPut ++= spools() -- before
+          data.close(); throw new java.io.IOException("store down")
+        }
+        def create(key: String) = throw new java.io.IOException("store down")
+        def open(key: String) = throw new java.io.IOException("store down")
+        def list(prefix: String) = Seq.empty
+        def exists(key: String) = false
+        def delete(key: String): Unit = ()
+        def listDirs(prefix: String) = Seq.empty
+        def rootUri = "memory://failing"
       }
-      def create(key: String) = throw new java.io.IOException("store down")
-      def open(key: String) = throw new java.io.IOException("store down")
-      def list(prefix: String) = Seq.empty
-      def exists(key: String) = false
-      def delete(key: String): Unit = ()
-      def listDirs(prefix: String) = Seq.empty
-      def rootUri = "memory://failing"
+      val c = new Collector(failing, CollectorConfig(batchZip = zip))
+      val errors = mutable.Buffer.empty[Throwable]
+      val flushes = mutable.Buffer.empty[FlushInfo]
+      c.onError(errors += _); c.onFlush(flushes += _)
+      c.track("t", Collector.rec("a" -> 1L))
+      c.stop() // awaits the async flush and its error
+      assert(flushes.isEmpty)
+      assert(errors.nonEmpty && errors.head.getMessage == "store down")
+      // the spool is a plain .csv, gzip on or off, and gone after the failure
+      assert(spooledDuringPut.size == 1 && spooledDuringPut.head.endsWith(".csv"), s"zip=$zip")
+      assert(spools() -- before == Set.empty, s"zip=$zip: temp file left behind")
     }
-    val c = new Collector(failing, CollectorConfig(batchZip = false))
-    val errors = mutable.Buffer.empty[Throwable]
-    val flushes = mutable.Buffer.empty[FlushInfo]
-    c.onError(errors += _); c.onFlush(flushes += _)
-    c.track("t", Collector.rec("a" -> 1L))
-    c.stop() // awaits the async flush and its error
-    assert(flushes.isEmpty)
-    assert(errors.nonEmpty && errors.head.getMessage == "store down")
   }
 
   test("wildcard token with '/' surfaces on onError; record dropped, no object") {
@@ -215,5 +235,134 @@ class CollectorSpec extends SparkSuite {
     val r42 = back.filter(col("id") === 42).collect()(0)
     assert(r42.getAs[String]("tag") == "x,42\"q\"")
     assert(r42.getAs[java.sql.Timestamp]("at").toInstant == t0.plusMillis(42 * 250L))
+  }
+
+  private val EncSchema = TableSchema("enc", Seq("s" -> ColType.CString,
+    "n" -> ColType.CInteger, "t" -> ColType.CString, "f" -> ColType.CFloat))
+
+  /** Record shapes and field texts the spool encoder must project and
+    * quote exactly as `toMap` + `TypedCsv.formatRow` do. */
+  private val EncCorpus: Seq[Seq[(String, Any)]] = Seq(
+    Collector.rec("s" -> "plain", "n" -> 1L, "t" -> "x", "f" -> 0.5), // schema order
+    Collector.rec("f" -> 1.5, "t" -> "y", "n" -> 2L, "s" -> "permuted"),
+    Collector.rec("s" -> "first", "n" -> 3L, "s" -> "last"), // last wins
+    Collector.rec("n" -> 4L), // missing fields
+    Collector.rec("s" -> "e", "zz" -> "extra", "n" -> 5L, "t" -> "z"),
+    Collector.rec("s" -> "", "n" -> 6L, "t" -> ""),
+    Collector.rec("s" -> "#not a header", "t" -> "a#b"),
+    Collector.rec("s" -> "say \"hi\"", "t" -> "\""),
+    Collector.rec("s" -> "a,b", "t" -> ","),
+    Collector.rec("s" -> "cr\rhere", "t" -> "lf\nhere", "f" -> 2.25),
+    Collector.rec("s" -> "crlf\r\n", "t" -> "\n"),
+    Collector.rec("s" -> "na\u00efve \u2013 \u6771\u4eac", "t" -> "\u00e9"),
+    Collector.rec("s" -> "pair \uD83D\uDE00", "t" -> "\uD83D\uDE00"),
+    Collector.rec("s" -> "lone \uD83D", "t" -> "x\uDE00y", "n" -> 7L))
+
+  /** An object's full text with each row encoded as `TypedCsv.formatRow`
+    * of its `toMap` projection. */
+  private def projectedText(schema: TableSchema, recs: Seq[Seq[(String, Any)]]): String = {
+    val rows = recs.map { r =>
+      val byName = r.toMap
+      TypedCsv.formatRow(schema.columnNames.map(byName.getOrElse(_, null)), schema.colTypes)
+    }
+    // through the UTF-8 encoder, as the spool is: an unpaired surrogate
+    // becomes '?'
+    new String((Seq(schema.typesHeader, schema.namesHeader) ++ rows)
+      .map(_ + "\n").mkString.getBytes(UTF_8), UTF_8)
+  }
+
+  test("every spooled row equals formatRow of the toMap projection, gzip on and off") {
+    // a schema inferred from a record that repeats a field repeats the column
+    val repeated = Seq(Collector.rec("a" -> 1L, "b" -> "x", "a" -> 2L),
+      Collector.rec("b" -> "y", "a" -> 3L))
+    val repSchema = TableSchema("rep",
+      Seq("a" -> ColType.CInteger, "b" -> ColType.CString, "a" -> ColType.CInteger))
+    for (zip <- Seq(false, true)) {
+      val (store, _) = freshStore()
+      val c = new Collector(store, CollectorConfig(schemas = Map("enc" -> EncSchema),
+        batchZip = zip))
+      val flushes = mutable.Buffer.empty[FlushInfo]
+      val errors = mutable.Buffer.empty[Throwable]
+      c.onFlush(flushes += _); c.onError(errors += _)
+      EncCorpus.foreach(c.track("enc", _))
+      repeated.foreach(c.track("rep", _))
+      c.stop()
+      assert(errors.isEmpty)
+      def text(table: String): String = {
+        val in = store.open(flushes.find(_.table == table).get.key)
+        val raw = if (zip) new GZIPInputStream(in) else in
+        try new String(raw.readAllBytes(), UTF_8) finally raw.close()
+      }
+      assert(text("enc") == projectedText(EncSchema, EncCorpus), s"zip=$zip")
+      assert(text("rep") == projectedText(repSchema, repeated), s"zip=$zip")
+    }
+  }
+
+  test("GzipOut.reading yields the bytes GzipOut writes") {
+    val random = new Array[Byte](1 << 20)
+    new scala.util.Random(11).nextBytes(random)
+    val csv = {
+      val sb = new StringBuilder
+      var i = 0
+      while (sb.length < (1 << 20)) {
+        sb.append(s"$i,user-$i,\"q,$i\",${i * 0.25},\u6771\n"); i += 1
+      }
+      sb.toString.getBytes(UTF_8).take(1 << 20)
+    }
+    for ((what, bytes) <- Seq("empty" -> Array.emptyByteArray, "1 byte" -> Array[Byte](42),
+        "1 MiB random" -> random, "1 MiB CSV" -> csv)) {
+      // pushed in the 8 KiB chunks the spool's UTF-8 encoder writes
+      val pushed = new ByteArrayOutputStream
+      val gz = GzipOut(pushed)
+      bytes.grouped(8192).foreach(gz.write)
+      gz.close()
+      val in = GzipOut.reading(new ByteArrayInputStream(bytes))
+      val pulled = try in.readAllBytes() finally in.close()
+      assert(java.util.Arrays.equals(pulled, pushed.toByteArray), what)
+      val back = new GZIPInputStream(new ByteArrayInputStream(pulled)).readAllBytes()
+      assert(java.util.Arrays.equals(back, bytes), what)
+    }
+  }
+
+  test("backpressure counts UTF-8 bytes of multi-byte text") {
+    val (store, _) = freshStore()
+    val c = new Collector(store, CollectorConfig(batchByteLimit = 300,
+      batchRecordLimit = 10000))
+    val flushes = mutable.Buffer.empty[FlushInfo]
+    val errors = mutable.Buffer.empty[Throwable]
+    c.onFlush(flushes += _); c.onError(errors += _)
+    val texts = Seq("\u00e9", "\u6771\u4eac", "\uD83D\uDE00", "\uD83D", "a,\"\u00e9\"")
+    for (i <- 0 until 200)
+      c.track("mb", Collector.rec("i" -> i.toLong, "txt" -> texts(i % 5) * (i % 7)))
+    c.stop()
+    assert(errors.isEmpty)
+    // the record counts at which a gauge of utf8Length(formatRow of the
+    // toMap projection) + 1 per record flushes this stream
+    assert(flushes.map(_.records) == Seq(20, 19, 17, 19, 20, 16, 19, 16, 19, 16, 19))
+    assert(flushes.forall(_.trigger == FlushTrigger.Backpressure))
+  }
+
+  test("track's thread only encodes: no gzip in the Collector, no per-row formatRow or toMap, one quoting scan") {
+    def source(path: String): String = {
+      val p = Paths.get("src", "main", "scala", "graft").resolve(path)
+      assert(Files.isRegularFile(p), s"run from the repo root; no $p")
+      new String(Files.readAllBytes(p), UTF_8)
+    }
+    val collector = source("collector/Collector.scala")
+    val writer = source("lake/LakeWriter.scala")
+    val csv = source("lake/TypedCsv.scala")
+    val hits = Seq(
+      "Collector.scala constructs a gzip stream (deflate belongs in the upload)" ->
+        Seq("GzipOut(", "GZIPOutputStream").exists(collector.contains),
+      "Collector.scala calls formatRow( or .toMap (rows go through TypedCsv.appendRow)" ->
+        Seq("formatRow(", ".toMap").exists(collector.contains),
+      "LakeWriter.scala calls formatRow( or .toMap (rows go through TypedCsv.appendRow)" ->
+        Seq("formatRow(", ".toMap").exists(writer.contains),
+      "TypedCsv.scala holds a second quoting scan (quoteField's rule lives in appendField)" ->
+        (Seq("indexOf(','", "indexOf('\"'", "indexOf('\\n'", "indexOf('\\r'",
+          "replace(\"\\\"\"").exists(csv.contains) ||
+          "== ','".r.findAllMatchIn(csv).size != 1)
+    ).collect { case (what, true) => what }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

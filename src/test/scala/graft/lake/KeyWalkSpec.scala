@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
 import graft.SparkSuite
+import org.apache.spark.sql.SparkSession
 
 /** [[KeyWalk]] is the one place a lake metadata walk chooses driver or
   * executors and sizes its tasks. The branch rules are pinned here; the
@@ -25,12 +26,15 @@ class KeyWalkSpec extends SparkSuite {
   }
 
   test("partials: one over every key on the driver with the caller's store, per task in key order on executors") {
-    assert(spark.sparkContext.defaultParallelism > 0) // executors run the walk
     val store = new HadoopStore(tempUri("graft-keywalk"))
     val keys = (0 until 10).map(i => f"k$i%02d")
     val driver = KeyWalk.pinned(KeyWalk.OnDriver)(
       KeyWalk.partials(store, keys)((st, it) => (st eq store, it.toVector)))
     assert(driver == Seq((true, keys.toVector)))
+    // the executor half fans out on the suite's session (with none, the
+    // walk stays on the driver: next test)
+    val session = spark
+    assert(SparkSession.getDefaultSession.contains(session))
     val tasks = KeyWalk.pinned(KeyWalk.OnExecutors(3))(
       KeyWalk.partials(store, keys)((st, it) => (st.rootUri, it.toVector)))
     assert(tasks.size == 3 && tasks.forall(_._1 == store.rootUri))
@@ -38,6 +42,23 @@ class KeyWalkSpec extends SparkSuite {
     assert(KeyWalk.pinned(KeyWalk.OnExecutors(4))(
       KeyWalk.filter(store, keys)((_, k) => k.last.asDigit % 3 == 0)) ==
       Seq("k00", "k03", "k06", "k09"))
+  }
+
+  test("with no active or default session a fanned-out walk runs on the driver") {
+    val store = new HadoopStore(tempUri("graft-keywalk-nosession"))
+    val keys = (0 until 10).map(i => f"k$i%02d")
+    val session = spark // a session exists; it is neither active nor default below
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      assert(SparkSession.getActiveSession.isEmpty && SparkSession.getDefaultSession.isEmpty)
+      val walked = KeyWalk.pinned(KeyWalk.OnExecutors())(
+        KeyWalk.partials(store, keys)((st, it) => (st eq store, it.toVector)))
+      assert(walked == Seq((true, keys.toVector)))
+    } finally {
+      SparkSession.setDefaultSession(session)
+      SparkSession.setActiveSession(session)
+    }
   }
 
   private def mainSources(under: Path): Seq[Path] = {

@@ -197,6 +197,53 @@ class LakeVersionsSpec extends SparkSuite {
       s"only the uncommitted intent survives (janitor's job): ${st.intents}")
   }
 
+  test("an intent deleted between a reader's listing and its read: the reader lists again and sees the commit that deleted it") {
+    type Seen = (Set[String], Map[String, Seq[String]]) // excluded keys, provenance
+    val readers = Seq[(String, Store => Seen)](
+      "tableView" -> (s => (LakeVersions.tableView(s, "vt").excl, Map.empty)),
+      "ChainCache.refresh" -> { s =>
+        val c = new LakeVersions.ChainCache(s, "vt").refresh()
+        (c.view.excl, c.provenance)
+      })
+    for ((name, read) <- readers) {
+      val (_, root, store) = fixture()
+      val replaced = land(root).min
+      import spark.implicits._
+      val fresh = LakeWriter.write(Seq((9999L, 1L)).toDF("id", "vc").coalesce(1),
+        schema, root, Instant.parse("2024-07-01T08:00:00Z")).map(_.key)
+      LakeVersions.writeIntent(store, "vt", "racing", fresh)
+      val intent = LakeVersions.intentKey("vt", "racing")
+      // the statement commits (and deletes its intent) after the reader's
+      // listing named the intent, right before the reader opens it
+      var landed = false
+      val racing = new Store {
+        def put(key: String, data: java.io.InputStream): Unit = store.put(key, data)
+        def create(key: String): java.io.OutputStream = store.create(key)
+        def open(key: String): java.io.InputStream = {
+          if (key == intent && !landed) {
+            landed = true
+            LakeVersions.commit(store, "vt", op = "update", removed = Seq(replaced),
+              added = fresh, intentId = Some("racing"))
+          }
+          store.open(key)
+        }
+        def list(prefix: String): Seq[String] = store.list(prefix)
+        def exists(key: String): Boolean = store.exists(key)
+        def delete(key: String): Unit = store.delete(key)
+        def listDirs(prefix: String): Seq[String] = store.listDirs(prefix)
+        def rootUri: String = store.rootUri
+      }
+      val (excl, provenance) = read(racing)
+      assert(landed && !store.exists(intent), name)
+      // neither pending nor committed would publish both the replaced
+      // object and its replacement
+      assert(excl.contains(replaced), s"$name: the committed record retires the replaced object")
+      if (name == "ChainCache.refresh")
+        assert(fresh.forall(provenance.get(_).contains(Seq(replaced))),
+          s"$name: the replacement carries its provenance")
+    }
+  }
+
   test("sweep_staging reclaims an ORPHANED intent: its hidden keys and the intent leave, fresh and committed intents survive") {
     val (cat, root, store) = fixture()
     land(root)

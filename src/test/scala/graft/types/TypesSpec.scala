@@ -53,6 +53,13 @@ class TypesSpec extends AnyFunSuite {
       TableSchema("t", Seq("_object_key" -> ColType.CString)))
   }
 
+  test("TableSchema derives its column lists and headers once") {
+    val s = TableSchema("t", Seq("a" -> ColType.CInteger, "b" -> ColType.CString))
+    assert((s.columnNames eq s.columnNames) && (s.colTypes eq s.colTypes))
+    assert((s.typesHeader eq s.typesHeader) && (s.namesHeader eq s.namesHeader))
+    assert(s == TableSchema("t", Seq("a" -> ColType.CInteger, "b" -> ColType.CString)))
+  }
+
   test("RFC-4180 quote round-trip (deterministic fuzz)") {
     val rnd = new scala.util.Random(42)
     val alphabet = "ab,\"\n\r x"
