@@ -537,6 +537,15 @@ object LakeMaintenance {
     ZoneMaps.deleteSidecarSignaled(store, k, "graft.LakeMaintenance")
   }
 
+  /** One candidate's `(rows, rows matching)` in ONE aggregate job — the
+    * figures both [[deleteWhereMulti]] runs decide on. */
+  private def rowAndMatchCounts(df: DataFrame,
+                                matches: org.apache.spark.sql.Column): (Long, Long) = {
+    import org.apache.spark.sql.functions.{count, lit, sum, when}
+    val r = df.agg(count(lit(1)), sum(when(matches, 1L).otherwise(0L))).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
   final case class DeleteReport(candidates: Int, objectsRewritten: Int,
                                 objectsRetired: Int, rowsDeleted: Long,
                                 rowsKept: Long, objectsSkipped: Int)
@@ -618,38 +627,26 @@ object LakeMaintenance {
     // every per-object job), so a rewrite never resurrects vector-deleted
     // rows; the commit's basis check aborts on a racing MOR statement
     val dvMap = Some(LakeVersions.currentDvs(store, table))
-    // equality deletes: the rewrite reads live rows (filters applied via
-    // readKeys) and CAS-validates the list it read under (eqBasis)
-    val eqList2 = LakeVersions.currentEqdels(store, table)
-    val eqMap2 = Some(LakeEqDeletes.compile(store, table, eqList2))
-    // equality deletes fold the same way: the snapshot reads with the
-    // live filters applied, and a FULL compact (no hour range — every
-    // object rewritten) drops the list at its commit; a partial compact
-    // keeps it (replacements re-filter idempotently — an equality match
-    // already removed stays removed). Resolved once, CAS-validated via
-    // eqBasis like the vector basis.
+    // equality deletes: both runs read live rows (filters applied via
+    // readKeys) resolved once here; the real run CAS-validates the list
+    // it read under (eqBasis)
     val eqList = LakeVersions.currentEqdels(store, table)
     val eqMap = Some(LakeEqDeletes.compile(store, table, eqList))
+    def read(key: String): DataFrame = declared.fold(
+      LakeReader.readKeys(spark, store, table, Seq(key), dvMap, eqMap))(d =>
+      LakeReader.readKeysAligned(spark, store, table, Seq(key), d, dvMap, eqMap))
+      .drop("_event_hour")
     if (dryRun) {
       // the GDPR dry run: the SAME probe decision, the SAME per-object
-      // match rule, nothing mutated — one aggregate job per candidate
+      // match rule, nothing mutated — one aggregate per candidate
       // reports what the real run WOULD do (a bloom false positive
       // shows up as a candidate with zero matches, exactly as the real
       // run would skip it). Sequential: a dry run is an operator
       // reading a report, not a fleet rewriting a key's history.
-      import org.apache.spark.sql.functions.{count => fcount, sum, when}
       var rewritten = 0; var retired = 0
       var nDel = 0L; var nKeep = 0L
       kept.foreach { key =>
-        val df = declared.fold(
-          LakeReader.readKeys(spark, store, table, Seq(key), dvMap))(d =>
-          LakeReader.readKeysAligned(spark, store, table, Seq(key), d, dvMap)
-            .drop("_event_hour"))
-        val matches = matchRule
-        val r = df.agg(fcount(lit(1)), sum(when(matches, 1L).otherwise(0L)))
-          .head()
-        val n = r.getLong(0)
-        val d = if (r.isNullAt(1)) 0L else r.getLong(1)
+        val (n, d) = rowAndMatchCounts(read(key), matchRule)
         if (d > 0L && d == n) retired += 1
         else if (d > 0L) rewritten += 1
         nDel += d; nKeep += (if (d > 0L) n - d else 0L)
@@ -674,22 +671,16 @@ object LakeMaintenance {
           spark.sparkContext.setJobGroup(jobGroup,
             s"delete_where $table $key", interruptOnCancel = true)
           val hour = LakeKeys.parseKey(key).get._1
-          // snapshot the object once; the match count and the rewrite
-          // both run off the checkpoint, not a second object read
-          val df = declared.fold(
-            LakeReader.readKeys(spark, store, table, Seq(key), dvMap, eqMap2))(d =>
-            LakeReader.readKeysAligned(spark, store, table, Seq(key), d,
-              dvMap, eqMap2))
-            .drop("_event_hour").localCheckpoint()
+          // snapshot the object once; the counts and the rewrite both
+          // run off the checkpoint, not a second object read
+          val df = read(key).localCheckpoint()
           try {
-            val n = df.count()
-            val matches = matchRule
-            val keepDf = df.filter(not(matches)) // NULL rows never match: kept
-            val nKeep = keepDf.count()
-            val nDel = n - nKeep
+            val (n, nDel) = rowAndMatchCounts(df, matchRule)
+            val nKeep = n - nDel
             if (nDel == 0L) (key, nDel, nKeep, Seq.empty[(String, String)])
             else if (nKeep == 0L) (key, nDel, nKeep, Seq.empty[(String, String)])
             else {
+              val keepDf = df.filter(not(matchRule)) // NULL rows never match: kept
               val staged = LakeWriter.write(keepDf.coalesce(1), schema,
                 store.rootUri, hour, gzip, maxRecordsPerObject = 0L,
                 keyPrefix = s"$staging/", zoneMaps = zoneMaps,
@@ -731,7 +722,7 @@ object LakeMaintenance {
         try LakeVersions.commit(store, table, op = "delete_where",
           removed = removed, added = added, intentId = Some(intentId),
           dvBasis = removed.map(k => k -> dvMap.get.get(k).map(_.key)).toMap,
-          eqBasis = Some(eqList2.map(_.key)))
+          eqBasis = Some(eqList.map(_.key)))
         catch { case e: Throwable =>
           added.foreach(deleteWithSidecar(store, _))
           store.delete(LakeVersions.intentKey(table, intentId))

@@ -156,9 +156,12 @@ object StoreOps {
   * returns. Those forks were a third of a Collector pass of 135 objects
   * (perfbench `ingest`, 4-core VM: `pass_s` 1.42 → 0.97 s). Keys, bytes,
   * listing order and [[StoreOps]] counts are the same on both branches;
-  * every other scheme takes the Hadoop branch. */
+  * every other scheme takes the Hadoop branch.
+  *
+  * Every instance, including the copies executors deserialize, resolves
+  * its filesystem through the one [[HadoopStore.conf]] of its JVM. */
 final class HadoopStore(val rootUri: String) extends Store {
-  @transient private lazy val conf = new Configuration()
+  @transient private[lake] lazy val conf: Configuration = HadoopStore.conf
   @transient private lazy val fs = {
     val f = FileSystem.get(new URI(rootUri), conf)
     f match {
@@ -369,4 +372,19 @@ final class HadoopStore(val rootUri: String) extends Store {
     }
     stamp.map(java.time.Instant.ofEpochMilli)
   }
+}
+
+object HadoopStore {
+  /** The Hadoop configuration every [[HadoopStore]] in this JVM resolves
+    * its filesystem with: loaded once, never mutated. A fresh
+    * `Configuration` re-parses `core-default.xml` and searches every jar
+    * for a `core-site.xml` (~10 ms on a 4-core VM), and a perfbench
+    * `lake` pass built 116 stores: one per scanned object, write task and
+    * rewrite. All a store reads from it is what `FileSystem.get` looks up
+    * (`fs.defaultFS`, the filesystem class, its cache switch) and the
+    * buffer size, and that cache already handed every store of one
+    * scheme, authority and user the same `FileSystem`. Sharing it is safe
+    * because no store writes to it: a store that needed its own settings
+    * would need a conf of its own, not a change to this one. */
+  private[lake] lazy val conf: Configuration = new Configuration()
 }

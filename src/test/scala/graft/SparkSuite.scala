@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,6 +41,22 @@ trait TempDirs extends BeforeAndAfterAll { this: Suite =>
 trait SparkSuite extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = Sessions.local("4")
   def sf(name: String): String = s"/root/testdata/$name"
+
+  /** Spark jobs started while `body` runs, counted once the listener bus
+    * has delivered every event from before and during it. */
+  protected def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
 
   /** Replay-style lake tests compare object keys across separate land
     * calls, and each call stamps its own flushTime into the key's

@@ -219,4 +219,50 @@ class DeleteWhereSpec extends SparkSuite {
     assert(dry == real, s"dry=$dry real=$real")
   }
 
+  test("dry run reads under the live equality deletes, as the real run does") {
+    val root = freshRoot()
+    val store = new HadoopStore(root)
+    land(root, "2024-07-01T08:00:00Z",
+      (0L until 5L).map(i => (i, "uA")) ++ (5L until 20L).map(i => (i, "uB")))
+    land(root, "2024-07-01T09:00:00Z",
+      (20L until 25L).map(i => (i, "uA")) ++ (25L until 30L).map(i => (i, "uB")) ++
+        (30L until 40L).map(i => (i, "uC")))
+    val cat = s"lakedry${math.abs(root.hashCode)}"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    spark.sql(s"CALL $cat.system.set_dml_mode(table => 'dw', " +
+      "mode => 'merge-on-read')").collect()
+    spark.sql(s"DELETE FROM $cat.dw WHERE user = 'uB'")
+    assert(LakeVersions.currentEqdels(store, "dw").size == 1, "a live equality delete")
+
+    val dry = LakeMaintenance.deleteWhere(spark, store, "dw", "user",
+      Seq("uA"), zoneMaps = true, bloomColumns = Seq("user"), dryRun = true)
+    // uB's rows are already dead: the 08 object holds only matches (it
+    // retires), the 09 object keeps its 10 uC rows
+    assert(dry == LakeMaintenance.DeleteReport(2, 1, 1, 10L, 10L, 0), s"$dry")
+    val real = LakeMaintenance.deleteWhere(spark, store, "dw", "user",
+      Seq("uA"), zoneMaps = true, bloomColumns = Seq("user"))
+    assert(dry == real, s"dry=$dry real=$real")
+    assert(readAll(root).count() == 10L)
+  }
+
+  test("a rewrite runs one count aggregate per candidate") {
+    val root = freshRoot()
+    val store = new HadoopStore(root)
+    val hours = Seq("08", "09", "10")
+    hours.zipWithIndex.foreach { case (h, i) =>
+      land(root, s"2024-07-01T$h:00:00Z", (0L until 20L).map(j =>
+        (i * 20L + j, if (j < 5) "uA" else "uB")))
+    }
+    val jobs = jobsDuring {
+      val rep = LakeMaintenance.deleteWhere(spark, store, "dw", "user",
+        Seq("uA"), zoneMaps = true, bloomColumns = Seq("user"))
+      assert(rep == LakeMaintenance.DeleteReport(3, 3, 0, 15L, 45L, 0), s"$rep")
+    }
+    // per candidate: the snapshot, the (rows, matches) aggregate (a map
+    // and a result job under adaptive execution) and the replacement's
+    // write; a second count would add two more
+    assert(jobs == 4 * 3, s"$jobs Spark jobs for 3 rewritten candidates")
+  }
+
 }

@@ -13,7 +13,8 @@ import graft.TempDirs
 /** [[HadoopStore]]'s java.nio branches on a `file://` root: they list,
   * stamp, create and rename exactly as the Hadoop local filesystem does,
   * start no `chmod`/`ls` process, and stay the only place `src/main`
-  * reaches the Hadoop calls that start one. */
+  * reaches the Hadoop calls that start one. Every store shares one
+  * Hadoop `Configuration`. */
 class HadoopStoreLocalSpec extends AnyFunSuite with TempDirs {
 
   private def write(f: JPath, s: String, mtime: Long): Unit = {
@@ -129,18 +130,48 @@ class HadoopStoreLocalSpec extends AnyFunSuite with TempDirs {
       s"the probe needed a shell command (exit $code):\n$output")
   }
 
+  test("every store, and a copy deserialized as executors receive it, shares the JVM's one Configuration") {
+    val a = new HadoopStore(tempDir("graft-conf-a").toUri.toString)
+    val b = new HadoopStore(tempDir("graft-conf-b").toUri.toString)
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(a); out.close()
+    val copy = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+      .readObject().asInstanceOf[HadoopStore]
+    assert(copy ne a)
+    for (s <- Seq(a, b, copy)) assert(s.conf eq HadoopStore.conf, s.rootUri)
+    a.put("k", new java.io.ByteArrayInputStream("v".getBytes(UTF_8)))
+    assert(read(copy, "k") == "v")
+  }
+
+  test("src/main/scala/graft/lake builds a Hadoop Configuration only in object HadoopStore") {
+    val lake = Paths.get("src", "main", "scala", "graft", "lake")
+    assert(Files.isDirectory(lake), s"run from the repo root; no $lake")
+    val hits = for {
+      file <- scalaSources(lake)
+      lines = new String(Files.readAllBytes(file), UTF_8).split("\n").toSeq
+      (line, n) <- lines.zipWithIndex if line.contains("new Configuration(")
+      owner = lines.take(n + 1).reverseIterator.find(l =>
+        l.startsWith("object ") || l.startsWith("final class ") || l.startsWith("class "))
+      if !(file.getFileName.toString == "Store.scala" && owner.exists(_.startsWith("object HadoopStore")))
+    } yield s"$file:${n + 1}: ${line.trim}"
+    assert(hits.isEmpty, "each new Configuration re-parses Hadoop's XML defaults; " +
+      s"use HadoopStore.conf:\n${hits.mkString("\n")}")
+  }
+
+  private def scalaSources(dir: JPath): Seq[JPath] = {
+    val s = Files.walk(dir)
+    try s.filter(_.toString.endsWith(".scala")).toArray.toSeq.map(_.asInstanceOf[JPath])
+    finally s.close()
+  }
+
   test("src/main calls Hadoop's create, mkdirs and listFiles only in Store's non-local branches") {
     val main = Paths.get("src", "main", "scala")
     assert(Files.isDirectory(main), s"run from the repo root; no $main")
     // java.io.File#listFiles() takes no arguments; Hadoop's takes a path
     val banned = """\bfs\.create\(|\bfs\.mkdirs\(|\blistFiles\(\s*[^)\s]""".r
-    val sources = {
-      val s = Files.walk(main)
-      try s.filter(_.toString.endsWith(".scala")).toArray.toSeq.map(_.asInstanceOf[JPath])
-      finally s.close()
-    }
     val hits = for {
-      file <- sources
+      file <- scalaSources(main)
       lines = new String(Files.readAllBytes(file), UTF_8).split("\n").toSeq
       (line, n) <- lines.zipWithIndex if banned.findFirstIn(line).isDefined
       // inside Store.scala the call must sit in the branch of a `local`

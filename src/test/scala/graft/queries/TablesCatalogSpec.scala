@@ -1,27 +1,12 @@
 package graft.queries
 
 import graft.{Fs, SparkSuite}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** The session schema catalog behind [[Tables.t]]: a warm read runs no
   * inference job, and a cached schema never outlives the files or the
   * session confs it was inferred from. */
 class TablesCatalogSpec extends SparkSuite {
-
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
 
   private def withTempDir(body: String => Unit): Unit = {
     val d = tempDir("graft-catalog")
