@@ -3,13 +3,16 @@ package graft.collector
 import graft.lake.{GzipOut, LakeKeys, Store, TypedCsv}
 import graft.types.{ColType, TableSchema, Wildcard}
 
-import java.io.{BufferedWriter, FileInputStream, FileOutputStream, OutputStreamWriter}
+import java.io.{BufferedOutputStream, FileInputStream, FileOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.time.Instant
 import java.util.UUID
+import java.util.concurrent.{CompletableFuture, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
 /** Flush trigger taxonomy, matching the reference's `FlushTrigger` enum
@@ -56,10 +59,13 @@ final case class CollectorConfig(
   * records spool straight to a local temp file (O(1) heap per record,
   * `Collector.ts:238-254`), one in-flight batch per resolved table name,
   * flush → one lake object under `YYYY/MM/DD/HH/table/uuid.csv[.gz]`.
-  * `track` only encodes: gzip runs on the flush thread while the store
+  * `track` only encodes: gzip runs on an upload thread while the store
   * reads the spool ([[graft.lake.GzipOut.reading]]), as the reference's
-  * zlib pipeline stage runs off the caller's thread. Flushed batches wait
-  * for that thread in an unbounded queue.
+  * zlib pipeline stage runs off the caller's thread. Up to
+  * [[Collector.UploadThreads]] uploads overlap, as the reference's
+  * fire-and-forget flushes do; further flushed batches wait in an
+  * unbounded queue. `onFlush`/`onError` callbacks of flushes run one at a
+  * time, on an upload thread, in the order the flushes were triggered.
   *
   * Scale note: this facade is the ingestion *edge* (the reference is a
   * single-process library embedded in an app server). The 100-TB path is
@@ -74,7 +80,7 @@ final class Collector(store: Store, config: CollectorConfig = CollectorConfig())
       val table: String, // resolved name → lake key
       schema: TableSchema,
       val tempFile: java.io.File,
-      val writer: BufferedWriter,
+      val out: OutputStream,
       val started: Long) {
     var records: Long = 0L
     var bytes: Long = 0L // spooled UTF-8 bytes (backpressure gauge)
@@ -87,23 +93,30 @@ final class Collector(store: Store, config: CollectorConfig = CollectorConfig())
     val repeats: Boolean = first.indices.exists(j => first(j) != j)
     val position: Map[String, Int] = Map.from(names.zip(first))
     val values = new Array[Any](names.length)
-    val line = new StringBuilder(256)
   }
 
   private val batches = mutable.HashMap.empty[String, Batch]
+  // track's scratch space, reused for every record (track holds the
+  // monitor): the row's text, its chars, its UTF-8 bytes
+  private val line = new StringBuilder(256)
+  private var lineChars = new Array[Char](256)
+  private var lineBytes = new Array[Byte](3 * 256)
   private var stopped = false
   private val flushListeners = mutable.ArrayBuffer.empty[FlushInfo => Unit]
   private val errorListeners = mutable.ArrayBuffer.empty[Throwable => Unit]
 
   /** Store uploads run off the caller thread (the reference's flush is
-    * fire-and-forget from `track`, `Collector.ts:280-286`): a single daemon
-    * flush thread keeps `track` non-blocking while preserving emission
-    * order (documented delta: the reference allows concurrent per-table
-    * flushes; the scale path for parallel uploads is
-    * [[graft.streaming.LakeSink]]). */
-  private val flushPool = java.util.concurrent.Executors.newSingleThreadExecutor(
-    (r: Runnable) => { val t = new Thread(r, "graft-collector-flush"); t.setDaemon(true); t })
-  private val pending = mutable.ArrayBuffer.empty[java.util.concurrent.Future[_]]
+    * fire-and-forget from `track`, `Collector.ts:280-286`) on daemon
+    * threads, so `track` never waits for deflate or the store. */
+  private val uploadPool = Executors.newFixedThreadPool(Collector.UploadThreads, {
+    val n = new AtomicInteger(0)
+    (r: Runnable) => {
+      val t = new Thread(r, s"graft-collector-upload-${n.incrementAndGet()}")
+      t.setDaemon(true); t
+    }
+  })
+  /** Completes once the last triggered flush has run its callbacks. */
+  private var published: CompletableFuture[Unit] = CompletableFuture.completedFuture(())
 
   def onFlush(f: FlushInfo => Unit): Unit = synchronized { flushListeners += f }
   def onError(f: Throwable => Unit): Unit = synchronized { errorListeners += f }
@@ -159,10 +172,8 @@ final class Collector(store: Store, config: CollectorConfig = CollectorConfig())
     val id = UUID.randomUUID()
     // the spool is plain CSV; with batchZip the upload deflates it
     val tmp = Files.createTempFile(s"graft-analytics-$id", ".csv").toFile
-    val out = new BufferedWriter(new OutputStreamWriter(
-      new FileOutputStream(tmp), StandardCharsets.UTF_8), 64 * 1024)
-    out.write(schema.typesHeader); out.write("\n")
-    out.write(schema.namesHeader); out.write("\n")
+    val out = new BufferedOutputStream(new FileOutputStream(tmp), 64 * 1024)
+    out.write(s"${schema.typesHeader}\n${schema.namesHeader}\n".getBytes(StandardCharsets.UTF_8))
     new Batch(id, resolved, schema, tmp, out, System.currentTimeMillis())
   }
 
@@ -193,96 +204,133 @@ final class Collector(store: Store, config: CollectorConfig = CollectorConfig())
       k += 1
     }
     if (batch.repeats) vals.indices.foreach(j => vals(j) = vals(batch.first(j)))
-    val line = batch.line
     line.setLength(0)
     TypedCsv.appendRow(line, vals, batch.types)
     line.append('\n')
-    batch.writer.append(line)
+    batch.bytes += spoolLine(batch.out) // the row and its '\n'
     batch.records += 1
-    batch.bytes += utf8Length(line) // the row and its '\n'
   }
 
-  /** UTF-8 encoded length without allocating (the spool is UTF-8, so the
-    * backpressure gauge must count encoded bytes — char count undercounts
-    * non-ASCII text up to 3×). A well-formed surrogate pair encodes in 4
-    * bytes; an UNPAIRED surrogate is written as the 1-byte replacement
-    * char by the JDK encoder and is counted as such. */
-  private def utf8Length(s: CharSequence): Long = {
-    var n = 0L
+  /** Write [[line]] to `out` as UTF-8 and return the bytes written (the
+    * backpressure gauge counts encoded bytes: a char count undercounts
+    * non-ASCII text up to 3×). The bytes are the JDK UTF-8 encoder's: a
+    * well-formed surrogate pair takes 4 bytes, an UNPAIRED surrogate
+    * becomes the 1-byte replacement '?'. */
+  private def spoolLine(out: OutputStream): Int = {
+    val n = line.length
+    if (lineChars.length < n) {
+      lineChars = new Array[Char](2 * n)
+      lineBytes = new Array[Byte](3 * lineChars.length) // ≤ 3 bytes a char
+    }
+    val cs = lineChars
+    val bs = lineBytes
+    line.underlying.getChars(0, n, cs, 0)
     var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c < 0x80) n += 1
-      else if (c < 0x800) n += 2
-      else if (Character.isHighSurrogate(c) &&
-               i + 1 < s.length && Character.isLowSurrogate(s.charAt(i + 1))) {
-        n += 4; i += 1 // consume the pair
+    var j = 0
+    while (i < n) {
+      val c = cs(i)
+      if (c < 0x80) { bs(j) = c.toByte; j += 1 }
+      else if (c < 0x800) {
+        bs(j) = (0xc0 | c >> 6).toByte
+        bs(j + 1) = (0x80 | c & 0x3f).toByte
+        j += 2
+      } else if (Character.isHighSurrogate(c) && i + 1 < n && Character.isLowSurrogate(cs(i + 1))) {
+        val cp = Character.toCodePoint(c, cs(i + 1))
+        bs(j) = (0xf0 | cp >> 18).toByte
+        bs(j + 1) = (0x80 | cp >> 12 & 0x3f).toByte
+        bs(j + 2) = (0x80 | cp >> 6 & 0x3f).toByte
+        bs(j + 3) = (0x80 | cp & 0x3f).toByte
+        j += 4; i += 1 // consume the pair
+      } else if (Character.isSurrogate(c)) { bs(j) = '?'; j += 1 }
+      else {
+        bs(j) = (0xe0 | c >> 12).toByte
+        bs(j + 1) = (0x80 | c >> 6 & 0x3f).toByte
+        bs(j + 2) = (0x80 | c & 0x3f).toByte
+        j += 3
       }
-      else if (Character.isSurrogate(c)) n += 1 // unpaired → '?' (1 byte)
-      else n += 3
       i += 1
     }
-    n
+    out.write(bs, 0, j)
+    j
   }
 
   private def flushBatch(batch: Batch, trigger: FlushTrigger): Unit = {
     // Remove first: the next track() opens a fresh batch (`Collector.ts:315`).
     batches.remove(batch.table)
     // The flush TIME (→ the object's hour prefix) and the batch age are
-    // captured at trigger time, not upload time — under flush-thread
+    // captured at trigger time, not upload time — under an upload
     // backlog the upload may run in a later hour, and the key must reflect
     // when the batch was flushed (reference: key composed in flushBatch,
     // `Collector.ts:341-350`).
     val flushedAt = Instant.now()
     val age = System.currentTimeMillis() - batch.started
-    pending.filterInPlace(!_.isDone)
-    pending += flushPool.submit(new Runnable {
-      def run(): Unit =
-        try {
-          batch.writer.close()
-          val key = LakeKeys.objectKey(batch.table, flushedAt, batch.id, config.batchZip)
-          // flushes land in the current hour — above any legal manifest
-          // seal point — but the guard is one exists() probe per flush,
-          // re-run AFTER the put so a seal racing the upload heals
-          graft.lake.Manifests.invalidateIfCovers(store, batch.table,
-            LakeKeys.datePrefix(flushedAt))
-          // deflate runs here, on the flush thread, as the store reads
-          val spool = new FileInputStream(batch.tempFile)
-          val in = if (config.batchZip) GzipOut.reading(spool) else spool
-          try store.put(key, in) finally in.close() // not every Store closes it
-          graft.lake.Manifests.invalidateIfCovers(store, batch.table,
-            LakeKeys.datePrefix(flushedAt))
-          val info = FlushInfo(batch.table, batch.id, trigger, batch.records, age, key)
-          Collector.this.synchronized(flushListeners.toList).foreach(_.apply(info))
-        } catch { case NonFatal(e) => emitError(e) }
-        finally { batch.tempFile.delete(); () } // always dispose (`Collector.ts:352-362`)
-    })
+    // Chained before the upload starts, so the callbacks run on the upload
+    // thread that completes the later of this upload and the previous
+    // flush's callbacks: one flush at a time, in trigger order. A failed
+    // upload completes too (its error is the outcome) and releases the next.
+    val uploaded = new CompletableFuture[Try[FlushInfo]]
+    published = published.handle((_, _) => ())
+      .thenCombine(uploaded, (_: Unit, outcome: Try[FlushInfo]) => publish(outcome))
+    uploadPool.execute { () =>
+      try { uploaded.complete(upload(batch, trigger, flushedAt, age)); () }
+      finally if (!uploaded.isDone) // a fatal error escaped the upload
+        uploaded.complete(Failure(new IllegalStateException(s"upload of batch ${batch.id} aborted")))
+    }
   }
 
+  /** Deflate (with `batchZip`) and put one flushed batch; the spool is
+    * always disposed (`Collector.ts:352-362`). */
+  private def upload(batch: Batch, trigger: FlushTrigger, flushedAt: Instant, age: Long): Try[FlushInfo] =
+    try Try {
+      batch.out.close()
+      val key = LakeKeys.objectKey(batch.table, flushedAt, batch.id, config.batchZip)
+      // flushes land in the current hour — above any legal manifest
+      // seal point — but the guard is one exists() probe per flush,
+      // re-run AFTER the put so a seal racing the upload heals
+      graft.lake.Manifests.invalidateIfCovers(store, batch.table,
+        LakeKeys.datePrefix(flushedAt))
+      // deflate runs here, on the upload thread, as the store reads
+      val spool = new FileInputStream(batch.tempFile)
+      val in = if (config.batchZip) GzipOut.reading(spool) else spool
+      try store.put(key, in) finally in.close() // not every Store closes it
+      graft.lake.Manifests.invalidateIfCovers(store, batch.table,
+        LakeKeys.datePrefix(flushedAt))
+      FlushInfo(batch.table, batch.id, trigger, batch.records, age, key)
+    } finally { batch.tempFile.delete(); () }
+
+  private def publish(outcome: Try[FlushInfo]): Unit =
+    try outcome match {
+      case Success(info) => synchronized(flushListeners.toList).foreach(_.apply(info))
+      case Failure(e) => emitError(e)
+    } catch { case NonFatal(e) => emitError(e) }
+
   /** Graceful drain: disable intake, flush every pending batch with trigger
-    * `Stop`, await every in-flight upload (the reference's
-    * `Promise.allSettled`, `Collector.ts:182-200`), then detach listeners.
-    * The await happens OUTSIDE the monitor — flush tasks briefly take it to
-    * snapshot listeners. */
+    * `Stop`, await every in-flight upload and its callbacks (the
+    * reference's `Promise.allSettled`, `Collector.ts:182-200`), then detach
+    * listeners. The await happens OUTSIDE the monitor — callbacks briefly
+    * take it to snapshot listeners. */
   def stop(): Unit = {
-    val toAwait = synchronized {
+    val last = synchronized {
       if (stopped) return
       stopped = true
       batches.values.toList.foreach(b => flushBatch(b, FlushTrigger.Stop))
-      pending.toList
+      published
     }
-    toAwait.foreach(f => try { f.get(); () } catch { case NonFatal(e) => emitError(e) })
+    try { last.get(); () } catch { case NonFatal(e) => emitError(e) }
     synchronized {
       // listeners purged after drain, like the reference's signal purge
       flushListeners.clear()
       errorListeners.clear()
-      pending.clear()
     }
-    flushPool.shutdown()
+    uploadPool.shutdown()
   }
 }
 
 object Collector {
+  /** Upload threads per Collector: how many flushed batches deflate and
+    * put at once. */
+  val UploadThreads: Int = math.min(4, Runtime.getRuntime.availableProcessors)
+
   /** Convenience for literal records: `rec("a" -> 1, "b" -> "x")`. */
   def rec(fields: (String, Any)*): Seq[(String, Any)] = fields
 }

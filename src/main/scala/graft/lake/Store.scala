@@ -11,6 +11,7 @@ import java.nio.file.attribute.BasicFileAttributes
 import java.util.zip.{CRC32, CheckedInputStream, Deflater, DeflaterInputStream, GZIPOutputStream}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CommonConfigurationKeysPublic, FileSystem, Path, RawLocalFileSystem}
@@ -210,14 +211,23 @@ final class HadoopStore(val rootUri: String) extends Store {
     }
   }
 
-  override def put(key: String, data: InputStream): Unit = {
-    val out = create(key)
+  /** A put whose stream or write fails deletes the key (best effort)
+    * before rethrowing: the bytes written so far would otherwise stay
+    * behind as a truncated object that fails every later read. */
+  override def put(key: String, data: InputStream): Unit =
     try {
-      val buf = new Array[Byte](64 * 1024)
-      var n = data.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = data.read(buf) }
-    } finally { out.close(); data.close() }
-  }
+      val out = create(key)
+      try {
+        try {
+          val buf = new Array[Byte](64 * 1024)
+          var n = data.read(buf)
+          while (n >= 0) { out.write(buf, 0, n); n = data.read(buf) }
+        } finally out.close()
+      } catch { case NonFatal(e) =>
+        try delete(key) catch { case NonFatal(d) => e.addSuppressed(d) }
+        throw e
+      }
+    } finally data.close()
 
   override def open(key: String): InputStream = {
     StoreOps.reads.incrementAndGet()

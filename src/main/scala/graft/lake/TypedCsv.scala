@@ -93,14 +93,66 @@ object TypedCsv {
 
   /** Append one row (values in schema order, null for a missing value)
     * to `sb`, without a line terminator: the encoder the Collector spool
-    * and the lake writers run per row. */
+    * and the lake writers run per row. The text is exactly
+    * [[formatValue]] + [[quoteField]] joined by `,`, built without a
+    * String per value: numbers and booleans (whose text never needs
+    * quotes, whatever the column type) and times are appended in place. */
   def appendRow(sb: StringBuilder, values: Array[Any], types: Array[ColType]): Unit = {
     var i = 0
     while (i < values.length) {
       if (i > 0) sb.append(',')
-      appendField(sb, formatValue(values(i), types(i)))
+      values(i) match {
+        case null =>
+        case l: Long => sb.append(l)
+        case n: Int => sb.append(n)
+        case b: Boolean => sb.append(b)
+        case d: Double => sb.append(d)
+        // a java.sql.Timestamp's toInstant keeps its nanos
+        case d: java.util.Date if types(i) == ColType.CTime => appendTime(sb, d.toInstant)
+        case t: Instant if types(i) == ColType.CTime        => appendTime(sb, t)
+        case v => appendField(sb, formatValue(v, types(i)))
+      }
       i += 1
     }
+  }
+
+  // 0001-01-01T00:00:00Z and 10000-01-01T00:00:00Z in epoch seconds: the
+  // years whose `yyyy` form is four plain digits
+  private final val MinFastSecond = -62135596800L
+  private final val EndFastSecond = 253402300800L
+
+  /** Append [[formatTime]]`(t)` to `sb`: civil-from-days arithmetic on
+    * the epoch day (H. Hinnant's `civil_from_days`) inside years
+    * 0001–9999, the formatter outside them (`yyyy` signs and pads there). */
+  private def appendTime(sb: StringBuilder, t: Instant): Unit = {
+    val sec = t.getEpochSecond
+    if (sec < MinFastSecond || sec >= EndFastSecond) sb.append(formatTime(t))
+    else {
+      val days = Math.floorDiv(sec, 86400L)
+      val secOfDay = (sec - days * 86400L).toInt
+      val z = days + 719468L // days since 0000-03-01
+      val era = Math.floorDiv(z, 146097L)
+      val doe = (z - era * 146097L).toInt // day of the 400-year era
+      val yoe = (doe - doe / 1460 + doe / 36524 - doe / 146096) / 365
+      val doy = doe - (365 * yoe + yoe / 4 - yoe / 100) // from March 1st
+      val mp = (5 * doy + 2) / 153
+      val day = doy - (153 * mp + 2) / 5 + 1
+      val month = if (mp < 10) mp + 3 else mp - 9
+      val year = (yoe + era * 400L).toInt + (if (month <= 2) 1 else 0)
+      append2(sb, year / 100); append2(sb, year % 100); sb.append('-')
+      append2(sb, month); sb.append('-')
+      append2(sb, day); sb.append('T')
+      append2(sb, secOfDay / 3600); sb.append(':')
+      append2(sb, secOfDay / 60 % 60); sb.append(':')
+      append2(sb, secOfDay % 60); sb.append('.')
+      val milli = t.getNano / 1000000
+      sb.append(('0' + milli / 100).toChar); append2(sb, milli % 100); sb.append('Z')
+    }
+  }
+
+  /** Append `n` (0 ≤ n < 100) as two decimal digits. */
+  private def append2(sb: StringBuilder, n: Int): Unit = {
+    sb.append(('0' + n / 10).toChar); sb.append(('0' + n % 10).toChar)
   }
 
   /** Full object text: types header + names header + rows. */

@@ -7,6 +7,8 @@ import graft.SparkSuite
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.GZIPInputStream
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -150,6 +152,118 @@ class CollectorSpec extends SparkSuite {
       assert(spooledDuringPut.size == 1 && spooledDuringPut.head.endsWith(".csv"), s"zip=$zip")
       assert(spools() -- before == Set.empty, s"zip=$zip: temp file left behind")
     }
+  }
+
+  /** An in-memory Store whose `put` runs `beforePut(key)` on the upload
+    * thread before it reads the bytes. */
+  private class MemStore(beforePut: String => Unit = _ => ()) extends graft.lake.Store {
+    val objects = new ConcurrentHashMap[String, Array[Byte]]()
+    def put(key: String, data: java.io.InputStream): Unit = {
+      beforePut(key)
+      try objects.put(key, data.readAllBytes()) finally data.close()
+      ()
+    }
+    def create(key: String) = throw new UnsupportedOperationException("put only")
+    def open(key: String) = new ByteArrayInputStream(objects.get(key))
+    def list(prefix: String) = objects.keySet.asScala.filter(_.startsWith(prefix)).toSeq.sorted
+    def exists(key: String) = objects.containsKey(key)
+    def delete(key: String): Unit = { objects.remove(key); () }
+    def listDirs(prefix: String) = Seq.empty
+    def rootUri = "memory://collector-spec"
+  }
+
+  /** The table segment of a lake key. */
+  private def tableOf(key: String): String = key.split('/')(4)
+
+  test("uploads overlap: a second put starts while the first is still in flight") {
+    assume(Collector.UploadThreads >= 2, "one upload thread on a one-core host")
+    val bothInFlight = new CountDownLatch(2)
+    val store = new MemStore(_ => {
+      bothInFlight.countDown()
+      // serialized uploads never get here twice before the wait ends
+      if (!bothInFlight.await(20, TimeUnit.SECONDS))
+        throw new java.io.IOException("the second put never started while the first was in flight")
+    })
+    val c = new Collector(store, CollectorConfig(batchRecordLimit = 1))
+    val flushes = new ConcurrentLinkedQueue[FlushInfo]()
+    val errors = new ConcurrentLinkedQueue[Throwable]()
+    c.onFlush(flushes.add(_)); c.onError(errors.add(_))
+    c.track("first", Collector.rec("a" -> 1L))
+    c.track("second", Collector.rec("a" -> 2L))
+    c.stop()
+    assert(errors.isEmpty, errors.asScala.mkString("\n"))
+    assert(flushes.asScala.map(_.table).toSeq == Seq("first", "second"))
+    assert(store.objects.size == 2)
+  }
+
+  test("callbacks run one at a time, on an upload thread, in trigger order even when an earlier put ends last") {
+    assume(Collector.UploadThreads >= 2, "one upload thread on a one-core host")
+    val fastStored = new CountDownLatch(1)
+    @volatile var slowWaited = false
+    val rnd = new scala.util.Random(5)
+    val delays = Seq.fill(12)(rnd.nextInt(15).toLong)
+    val store = new MemStore(key => tableOf(key) match {
+      // the first flush's put waits until the second's has stored
+      case "slow" => slowWaited = fastStored.await(20, TimeUnit.SECONDS)
+      case "fast" => ()
+      case t => Thread.sleep(delays(t.stripPrefix("t").toInt))
+    }) {
+      override def put(key: String, data: java.io.InputStream): Unit = {
+        super.put(key, data)
+        if (tableOf(key) == "fast") fastStored.countDown()
+      }
+    }
+    val c = new Collector(store, CollectorConfig(batchRecordLimit = 1, batchZip = false))
+    val seen = mutable.Buffer.empty[String] // appended by callbacks only
+    val inCallback = new AtomicInteger(0)
+    val overlaps = new AtomicInteger(0)
+    val threads = new ConcurrentLinkedQueue[String]()
+    c.onFlush { f =>
+      if (inCallback.incrementAndGet() != 1) overlaps.incrementAndGet()
+      threads.add(Thread.currentThread.getName)
+      Thread.sleep(1) // widen the window a concurrent callback would hit
+      seen += f.table
+      inCallback.decrementAndGet(); ()
+    }
+    c.onError(e => seen += s"error: $e")
+    val tables = Seq("slow", "fast") ++ delays.indices.map(i => s"t$i")
+    tables.foreach(t => c.track(t, Collector.rec("a" -> 1L)))
+    c.stop()
+    assert(slowWaited, "the second put did not finish while the first was held")
+    assert(seen == tables)
+    assert(overlaps.get == 0, "two callbacks ran at once")
+    assert(threads.asScala.forall(_.startsWith("graft-collector-upload-")), threads)
+  }
+
+  test("a failed put reaches onError once, in its turn, and later flushes still emit") {
+    val store = new MemStore(key =>
+      if (tableOf(key) == "bad") throw new java.io.IOException("put failed"))
+    val c = new Collector(store, CollectorConfig(batchRecordLimit = 1))
+    val events = mutable.Buffer.empty[String] // appended by callbacks only
+    c.onFlush(f => events += s"flush ${f.table}")
+    c.onError(e => events += s"error ${e.getMessage}")
+    Seq("a", "bad", "b", "c").foreach(t => c.track(t, Collector.rec("a" -> 1L)))
+    c.stop()
+    assert(events == Seq("flush a", "error put failed", "flush b", "flush c"))
+    assert(store.objects.keySet.asScala.map(tableOf) == Set("a", "b", "c"))
+  }
+
+  test("stop() returns after every upload and its callback, with no spool file left") {
+    val before = spools()
+    val puts = new AtomicInteger(0)
+    val store = new MemStore(_ => { Thread.sleep(30); puts.incrementAndGet(); () })
+    val c = new Collector(store, CollectorConfig(batchRecordLimit = 50))
+    val flushes = new ConcurrentLinkedQueue[FlushInfo]()
+    c.onFlush(flushes.add(_))
+    for (i <- 0 until 500) c.track(s"t${i % 10}", Collector.rec("i" -> i.toLong))
+    for (i <- 0 until 10) c.track(s"open$i", Collector.rec("i" -> i.toLong))
+    c.stop()
+    // 10 tables × 50 records = 10 record-limit flushes, then 10 open batches
+    assert(puts.get == 20 && store.objects.size == 20)
+    assert(flushes.size == 20)
+    assert(flushes.asScala.count(_.trigger == FlushTrigger.Stop) == 10)
+    assert(flushes.asScala.map(_.records).sum == 510L)
+    assert(spools() -- before == Set.empty, "a spool file outlived stop()")
   }
 
   test("wildcard token with '/' surfaces on onError; record dropped, no object") {
@@ -336,8 +450,8 @@ class CollectorSpec extends SparkSuite {
       c.track("mb", Collector.rec("i" -> i.toLong, "txt" -> texts(i % 5) * (i % 7)))
     c.stop()
     assert(errors.isEmpty)
-    // the record counts at which a gauge of utf8Length(formatRow of the
-    // toMap projection) + 1 per record flushes this stream
+    // the record counts at which a gauge of the UTF-8 length of formatRow
+    // of the toMap projection, plus 1 per record, flushes this stream
     assert(flushes.map(_.records) == Seq(20, 19, 17, 19, 20, 16, 19, 16, 19, 16, 19))
     assert(flushes.forall(_.trigger == FlushTrigger.Backpressure))
   }

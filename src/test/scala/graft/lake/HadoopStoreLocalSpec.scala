@@ -102,6 +102,25 @@ class HadoopStoreLocalSpec extends AnyFunSuite with TempDirs {
     assert(read(store, "x/y.txt") == "put")
   }
 
+  test("a put whose stream fails midway leaves no object at the key") {
+    val root = tempDir("graft-local-torn")
+    val store = new HadoopStore(root.toUri.toString)
+    var closed = false
+    // 100 KB of data, then the stream fails
+    val failing = new java.io.InputStream {
+      private var left = 100 * 1024
+      def read(): Int =
+        if (left == 0) throw new java.io.IOException("stream broke")
+        else { left -= 1; 'x' }
+      override def close(): Unit = closed = true
+    }
+    val e = intercept[java.io.IOException](store.put("2024/06/10/00/ev/torn.csv.gz", failing))
+    assert(e.getMessage == "stream broke")
+    assert(closed, "put closes its stream on failure too")
+    assert(!store.exists("2024/06/10/00/ev/torn.csv.gz"), "a torn object was left at the key")
+    assert(store.list("").isEmpty)
+  }
+
   test("rename onto an existing key replaces it, into a missing parent creates it") {
     val root = tempDir("graft-local-rename")
     val store = new HadoopStore(root.toUri.toString)
