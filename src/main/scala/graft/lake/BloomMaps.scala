@@ -33,8 +33,9 @@ import scala.util.hashing.MurmurHash3
   * object (pruning is an optimization, never a correctness gate); a
   * present bloom may wrongly KEEP (false positive, bounded by the m/k
   * sizing) but can never wrongly SKIP. Immutability caveat: an epoch
-  * replay rewrites the same key with fresh bytes — the streaming sink
-  * deletes any bloom under a key it republishes (exactly as it handles
+  * replay rewrites the same key with fresh bytes — the epoch publish
+  * ([[StagedPublish.publishEpoch]]) deletes any bloom under a key it
+  * republishes (exactly as it handles
   * stale stats sidecars), so a stale bloom can never skip rows a
   * rewrite added. */
 object BloomMaps {

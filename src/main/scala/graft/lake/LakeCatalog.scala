@@ -707,11 +707,7 @@ private[lake] object LakeProcedures {
         .getOrElse(throw new IllegalArgumentException(
           s"graft-lake: no staged audit '$id' on table '$table' — it " +
             "was never written, already published, or aborted"))
-      keys.foreach { k =>
-        store.delete(k)
-        ZoneMaps.deleteSidecarSignaled(store, k, "graft-lake abort_audit")
-        store.delete(BloomMaps.bloomKey(k))
-      }
+      keys.foreach(StagedPublish.remove(store, _, "graft-lake abort_audit"))
       store.delete(LakeVersions.intentKey(table, s"audit-$id"))
       // a seal that ran while this audit PENDED captured the staged keys
       // (Manifests.seal lists raw keys): after the delete above such a

@@ -658,7 +658,7 @@ final class LakeWrite(rootUri: String, lakeSchema: TableSchema,
                       auditId: Option[String] = None)
     extends Write with BatchWrite
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-  private val staging = s"_staging/dsv2-${java.util.UUID.randomUUID()}"
+  private val staging = StagedPublish.stagingPrefix("dsv2")
 
   // what the writers ACTUALLY wrote (overwrite modes may probe the
   // table's sidecar convention) — the commit's renames must follow it
@@ -824,23 +824,15 @@ final class LakeWrite(rootUri: String, lakeSchema: TableSchema,
         LakeVersions.writeIntent(store, lakeSchema.name, s"audit-$id", dsts)
       }
       staged.foreach { k =>
-        val dst = k.stripPrefix(s"$staging/")
-        store.rename(k, dst)
-        if (effectivePolicy.zoneMaps)
-          store.rename(ZoneMaps.statsKey(k), ZoneMaps.statsKey(dst))
-        if (effectivePolicy.bloomColumns.nonEmpty)
-          store.rename(BloomMaps.bloomKey(k), BloomMaps.bloomKey(dst))
+        StagedPublish.move(store, k, k.stripPrefix(s"$staging/"),
+          effectivePolicy.zoneMaps, effectivePolicy.bloomColumns.nonEmpty)
       }
       if (versioned) {
         try LakeVersions.commit(store, lakeSchema.name, op = "overwrite",
           removed = doomed, inserted = dsts, intentId = Some(intentId),
           dropEqdels = dropsEqdels)
         catch { case e: Throwable =>
-          dsts.foreach { dst =>
-            store.delete(dst)
-            ZoneMaps.deleteSidecarSignaled(store, dst, "graft-lake overwrite abort")
-            store.delete(BloomMaps.bloomKey(dst))
-          }
+          dsts.foreach(StagedPublish.remove(store, _, "graft-lake overwrite abort"))
           store.delete(LakeVersions.intentKey(lakeSchema.name, intentId))
           throw e
         }
@@ -852,34 +844,23 @@ final class LakeWrite(rootUri: String, lakeSchema: TableSchema,
       }
       // again AFTER the renames: a seal racing the commit heals
       Manifests.invalidateIfCovers(store, lakeSchema.name, hours.min)
-    } finally cleanupStaging(store)
+    } finally StagedPublish.sweep(store, staging)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    cleanupStaging(new HadoopStore(rootUri))
-
-  private def cleanupStaging(store: Store): Unit = {
-    // no unpublished attempt output may linger — data or sidecars
-    try store.deletePrefix(staging) catch { case _: Throwable => () }
-    try store.deletePrefix(ZoneMaps.Prefix + staging) catch { case _: Throwable => () }
-  }
+    StagedPublish.sweep(new HadoopStore(rootUri), staging)
 }
 
 final case class LakeCommitMessage(keys: Seq[String]) extends WriterCommitMessage
 
-/** `df.writeStream.format("graft-lake")` — the [[graft.streaming
-  * .LakeSink]] epoch protocol on the DSv2 surface, sharing its key
-  * SEED FORMAT so both sinks speak one replay discipline: tasks write
-  * rolled objects under an epoch-scoped `_staging/` prefix; commit
-  * renames the successful attempts' objects to DETERMINISTIC names
-  * seeded `sinkId:table:epoch:index` (sinkId defaults to the streaming
-  * QUERY id — stable across restarts — so a replayed epoch REWRITES its
-  * keys instead of duplicating), then probe-deletes contiguous
-  * higher-index leftovers from a fatter first attempt. Stale sidecars
-  * under rewritten keys are removed, never swallowed (the LakeSink
-  * contract, [[graft.streaming.LakeSink.landBatch]]). Same caveat too:
-  * a replay that crosses the UTC hour boundary re-lands under the new
-  * hour — compaction/upsert are the recovery. */
+/** `df.writeStream.format("graft-lake")`: tasks write rolled objects
+  * under an epoch-scoped `_staging/` prefix, and commit publishes the
+  * successful attempts' objects through [[StagedPublish.publishEpoch]],
+  * the epoch publish [[graft.streaming.LakeSink]] runs too. Names are
+  * seeded `sinkId:table:epoch:index`; sinkId defaults to the streaming
+  * QUERY id, stable across restarts, so a replayed epoch REWRITES its
+  * keys instead of duplicating, and a replay over a key a committed DML
+  * statement has since tombstoned or vectored refuses. */
 final class LakeStreamingWrite(rootUri: String, lakeSchema: TableSchema,
                                inSchema: StructType, gzip: Boolean,
                                maxRecordsPerObject: Long, zoneMaps: Boolean,
@@ -896,7 +877,7 @@ final class LakeStreamingWrite(rootUri: String, lakeSchema: TableSchema,
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     val flushTime = Instant.now()
-    val staging = s"_staging/dsv2s-${lakeSchema.name}-${java.util.UUID.randomUUID()}"
+    val staging = StagedPublish.stagingPrefix(s"dsv2s-${lakeSchema.name}")
     current = (flushTime, staging)
     new LakeStreamingWriterFactory(rootUri, lakeSchema, inSchema,
       s"$staging/", flushTime, gzip, maxRecordsPerObject, zoneMaps)
@@ -905,54 +886,14 @@ final class LakeStreamingWrite(rootUri: String, lakeSchema: TableSchema,
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val (flushTime, staging) = current
     val store = new HadoopStore(rootUri)
-    try {
-      // epochs land in the current hour — above any legal seal point —
-      // but the guard is one exists() probe, so run it unconditionally
-      Manifests.invalidateIfCovers(store, lakeSchema.name,
-        LakeKeys.datePrefix(flushTime))
-      val staged = messages.flatMap { case LakeCommitMessage(keys) => keys }.sorted
-      def epochKey(i: Int): String = {
-        val seed = s"$sinkId:${lakeSchema.name}:$epochId:$i"
-        val id = java.util.UUID.nameUUIDFromBytes(
-          seed.getBytes(StandardCharsets.UTF_8))
-        LakeKeys.objectKey(lakeSchema.name, flushTime, id, gzip)
-      }
-      staged.zipWithIndex.foreach { case (k, i) =>
-        val dst = epochKey(i)
-        store.rename(k, dst)
-        if (zoneMaps) store.rename(ZoneMaps.statsKey(k), ZoneMaps.statsKey(dst))
-        // a rewritten epoch is not byte-identical: stale sidecars under
-        // dst would prune wrongly — delete, never swallow (a real store
-        // fault must fail the epoch so the replay heals)
-        else store.delete(ZoneMaps.statsKey(dst))
-        store.delete(BloomMaps.bloomKey(dst))
-      }
-      // a replay that produced FEWER objects than the first attempt:
-      // leftovers are index-contiguous — probe until the first miss
-      var i = staged.length
-      var more = true
-      while (more) {
-        val k = epochKey(i)
-        if (store.exists(k)) {
-          store.delete(k)
-          ZoneMaps.deleteSidecarSignaled(store, k,
-            "graft-lake streaming leftover-cleanup")
-          i += 1
-        } else more = false
-      }
-      // again AFTER the epoch publish: a seal racing the commit heals
-      Manifests.invalidateIfCovers(store, lakeSchema.name,
-        LakeKeys.datePrefix(flushTime))
-    } finally cleanup(store, staging)
+    try StagedPublish.publishEpoch(store, lakeSchema.name, sinkId, epochId,
+      flushTime, gzip, zoneMaps,
+      messages.toSeq.flatMap { case LakeCommitMessage(keys) => keys })
+    finally StagedPublish.sweep(store, staging)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    if (current != null) cleanup(new HadoopStore(rootUri), current._2)
-
-  private def cleanup(store: Store, staging: String): Unit = {
-    try store.deletePrefix(staging) catch { case _: Throwable => () }
-    try store.deletePrefix(ZoneMaps.Prefix + staging) catch { case _: Throwable => () }
-  }
+    if (current != null) StagedPublish.sweep(new HadoopStore(rootUri), current._2)
 }
 
 final class LakeStreamingWriterFactory(rootUri: String, lakeSchema: TableSchema,

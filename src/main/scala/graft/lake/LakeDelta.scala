@@ -449,7 +449,7 @@ final class LakeDeltaWrite(rootUri: String, lakeSchema: TableSchema,
                            mor: Boolean = false)
     extends DeltaWrite with DeltaBatchWrite {
 
-  private val staging = s"_staging/delta-${java.util.UUID.randomUUID()}"
+  private val staging = StagedPublish.stagingPrefix("delta")
   @volatile private var policy: LakeRowLevel.SidecarPolicy = _
 
   override def toBatch: DeltaBatchWrite = this
@@ -508,7 +508,7 @@ final class LakeDeltaWrite(rootUri: String, lakeSchema: TableSchema,
           "graft-lake delta: update-row objects staged outside merge-on-read")
         commitRewrite(store, table, p, stagedIns.toSeq, stagedPatch.toSeq)
       }
-    } finally cleanupStaging(store)
+    } finally StagedPublish.sweep(store, staging)
   }
 
   /** CROSS-BRANCH DML (round 18, the full `spark.wap.branch`
@@ -594,17 +594,10 @@ final class LakeDeltaWrite(rootUri: String, lakeSchema: TableSchema,
     val tempId = java.util.UUID.randomUUID().toString
     LakeVersions.writeIntent(store, table, tempId, dsts)
     (rewrites.flatMap(_._2) ++ stagedIns).foreach { k =>
-      val dst = dstOf(k)
-      store.rename(k, dst)
-      if (p.zoneMaps) store.rename(ZoneMaps.statsKey(k), ZoneMaps.statsKey(dst))
-      if (p.bloomColumns.nonEmpty)
-        store.rename(BloomMaps.bloomKey(k), BloomMaps.bloomKey(dst))
+      StagedPublish.move(store, k, dstOf(k), p.zoneMaps, p.bloomColumns.nonEmpty)
     }
-    (touchedBatch ++ touchedRepl).map(_._1).foreach { k =>
-      store.delete(k)
-      ZoneMaps.deleteSidecarSignaled(store, k, "graft-lake branch dml")
-      store.delete(BloomMaps.bloomKey(k))
-    }
+    (touchedBatch ++ touchedRepl).map(_._1)
+      .foreach(StagedPublish.remove(store, _, "graft-lake branch dml"))
     val newState = LakeVersions.BranchState(
       batch = (prev.batch.filterNot(touchedBatch.map(_._1).toSet) ++
         touchedBatch.flatMap(_._2).map(dstOf) ++ insDsts).distinct,
@@ -650,11 +643,7 @@ final class LakeDeltaWrite(rootUri: String, lakeSchema: TableSchema,
     val intentId = java.util.UUID.randomUUID().toString
     LakeVersions.writeIntent(store, table, intentId, added ++ inserted)
     (stagedRw ++ stagedIns).foreach { k =>
-      val dst = dstOf(k)
-      store.rename(k, dst)
-      if (p.zoneMaps) store.rename(ZoneMaps.statsKey(k), ZoneMaps.statsKey(dst))
-      if (p.bloomColumns.nonEmpty)
-        store.rename(BloomMaps.bloomKey(k), BloomMaps.bloomKey(dst))
+      StagedPublish.move(store, k, dstOf(k), p.zoneMaps, p.bloomColumns.nonEmpty)
     }
     try LakeVersions.commit(store, table, op = "merge",
       removed = removed, added = added, inserted = inserted,
@@ -662,11 +651,7 @@ final class LakeDeltaWrite(rootUri: String, lakeSchema: TableSchema,
       dvBasis = removed.map(k => k -> basis.get(k).map(_.key)).toMap,
       eqBasis = Some(scanEqdels))
     catch { case e: Throwable =>
-      (added ++ inserted).foreach { dst =>
-        store.delete(dst)
-        ZoneMaps.deleteSidecarSignaled(store, dst, "graft-lake merge abort")
-        store.delete(BloomMaps.bloomKey(dst))
-      }
+      (added ++ inserted).foreach(StagedPublish.remove(store, _, "graft-lake merge abort"))
       store.delete(LakeVersions.intentKey(table, intentId))
       throw e
     }
@@ -716,11 +701,7 @@ final class LakeDeltaWrite(rootUri: String, lakeSchema: TableSchema,
     LakeVersions.writeIntent(store, table, intentId,
       added ++ inserted ++ dvDst.map(_._2))
     (stagedUpd ++ stagedIns).foreach { k =>
-      val dst = dstOf(k)
-      store.rename(k, dst)
-      if (p.zoneMaps) store.rename(ZoneMaps.statsKey(k), ZoneMaps.statsKey(dst))
-      if (p.bloomColumns.nonEmpty)
-        store.rename(BloomMaps.bloomKey(k), BloomMaps.bloomKey(dst))
+      StagedPublish.move(store, k, dstOf(k), p.zoneMaps, p.bloomColumns.nonEmpty)
     }
     val published = dvDst.map { case (v, dst) =>
       store.rename(v.stagedDvKey, dst)
@@ -742,11 +723,7 @@ final class LakeDeltaWrite(rootUri: String, lakeSchema: TableSchema,
       dvBasis = removed.map(k => k -> basis.get(k).map(_.key)).toMap,
       eqBasis = Some(scanEqdels))
     catch { case e: Throwable =>
-      (added ++ inserted).foreach { dst =>
-        store.delete(dst)
-        ZoneMaps.deleteSidecarSignaled(store, dst, "graft-lake mor abort")
-        store.delete(BloomMaps.bloomKey(dst))
-      }
+      (added ++ inserted).foreach(StagedPublish.remove(store, _, "graft-lake mor abort"))
       published.foreach { case (_, dst, _) => store.delete(dst) }
       store.delete(LakeVersions.intentKey(table, intentId))
       throw e
@@ -760,12 +737,7 @@ final class LakeDeltaWrite(rootUri: String, lakeSchema: TableSchema,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    cleanupStaging(new HadoopStore(rootUri))
-
-  private def cleanupStaging(store: Store): Unit = {
-    try store.deletePrefix(staging) catch { case _: Throwable => () }
-    try store.deletePrefix(ZoneMaps.Prefix + staging) catch { case _: Throwable => () }
-  }
+    StagedPublish.sweep(new HadoopStore(rootUri), staging)
 }
 
 final class LakeDeltaWriterFactory(rootUri: String, lakeSchema: TableSchema,

@@ -202,7 +202,7 @@ object LakeMaintenance {
     // on the raw walk, never on a manifest listing retired keys)
     Manifests.invalidateIfCovers(store, table,
       oldKeys.map(LakeKeys.hourPrefixOf).min)
-    val staging = s"_staging/${java.util.UUID.randomUUID()}"
+    val staging = StagedPublish.stagingPrefix()
     val schema = declared.getOrElse(
       LakeReader.peekSchema(store, oldKeys.head, table))
     // the re-cluster layout, validated EARLY against the rewrite schema
@@ -282,11 +282,8 @@ object LakeMaintenance {
       val intentId = java.util.UUID.randomUUID().toString
       LakeVersions.writeIntent(store, table, intentId, dsts.map(_.key))
       staged.foreach { w =>
-        val dst = w.key.stripPrefix(s"$staging/")
-        store.rename(w.key, dst)
-        if (zoneMaps) store.rename(ZoneMaps.statsKey(w.key), ZoneMaps.statsKey(dst))
-        if (bloomColumns.nonEmpty)
-          store.rename(BloomMaps.bloomKey(w.key), BloomMaps.bloomKey(dst))
+        StagedPublish.move(store, w.key, w.key.stripPrefix(s"$staging/"),
+          zoneMaps, bloomColumns.nonEmpty)
       }
       try LakeVersions.commit(store, table, op = "compact",
         removed = oldKeys, added = dsts.map(_.key), intentId = Some(intentId),
@@ -296,12 +293,12 @@ object LakeMaintenance {
       catch { case e: Throwable =>
         // un-publish: our keys never committed, so deleting them (and
         // the intent) restores the exact pre-statement table
-        dsts.foreach(w => deleteWithSidecar(store, w.key))
+        dsts.foreach(w => StagedPublish.remove(store, w.key, Context))
         store.delete(LakeVersions.intentKey(table, intentId))
         throw e
       }
       if (!LakeVersions.isRetained(store, table)) {
-        oldKeys.foreach(deleteWithSidecar(store, _))
+        oldKeys.foreach(StagedPublish.remove(store, _, Context))
         LakeVersions.pruneChainIfLarge(store, table, oldKeys.size)
       }
       // again AFTER the rewrites land: a seal racing the compaction heals
@@ -324,8 +321,7 @@ object LakeMaintenance {
       pool.shutdown()
       // Success or failure, no unpublished attempt output may linger —
       // including staged zone-map sidecars.
-      try store.deletePrefix(staging) catch { case _: Throwable => () }
-      try store.deletePrefix(ZoneMaps.Prefix + staging) catch { case _: Throwable => () }
+      StagedPublish.sweep(store, staging)
     }
   }
 
@@ -496,7 +492,7 @@ object LakeMaintenance {
     if (doomed.nonEmpty)
       Manifests.invalidateIfCovers(store, table,
         doomed.map(LakeKeys.hourPrefixOf).min)
-    KeyWalk.foreach(store, doomed, KeyWalk.Delete)(deleteWithSidecar)
+    KeyWalk.foreach(store, doomed, KeyWalk.Delete)(StagedPublish.remove(_, _, Context))
     if (doomed.nonEmpty) { // again after the deletes: a racing seal heals
       Manifests.invalidateIfCovers(store, table,
         doomed.map(LakeKeys.hourPrefixOf).min)
@@ -530,12 +526,9 @@ object LakeMaintenance {
     df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
       .foreach(_.unpersist(blocking = false))
 
-  /** Retire one data object and its zone-map sidecar (no-op when absent;
-    * a sidecar fault signals, never fails — [[ZoneMaps.deleteSidecarSignaled]]). */
-  private def deleteWithSidecar(store: Store, k: String): Unit = {
-    store.delete(k)
-    ZoneMaps.deleteSidecarSignaled(store, k, "graft.LakeMaintenance")
-  }
+  /** The signal context of a sidecar this object's retirements orphan
+    * ([[StagedPublish.remove]]). */
+  private val Context = "graft.LakeMaintenance"
 
   /** One candidate's `(rows, rows matching)` in ONE aggregate job — the
     * figures both [[deleteWhereMulti]] runs decide on. */
@@ -658,7 +651,7 @@ object LakeMaintenance {
       LakeReader.peekSchema(store, allKeys.head, table))
     Manifests.invalidateIfCovers(store, table,
       kept.map(LakeKeys.hourPrefixOf).min)
-    val staging = s"_staging/${java.util.UUID.randomUUID()}"
+    val staging = StagedPublish.stagingPrefix()
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -713,23 +706,19 @@ object LakeMaintenance {
         LakeVersions.writeIntent(store, table, intentId, added)
         results.foreach { case (_, _, _, pairs) => pairs.foreach {
           case (stagedKey, dst) =>
-            store.rename(stagedKey, dst)
-            if (zoneMaps)
-              store.rename(ZoneMaps.statsKey(stagedKey), ZoneMaps.statsKey(dst))
-            if (bloomColumns.nonEmpty)
-              store.rename(BloomMaps.bloomKey(stagedKey), BloomMaps.bloomKey(dst))
+            StagedPublish.move(store, stagedKey, dst, zoneMaps, bloomColumns.nonEmpty)
         } }
         try LakeVersions.commit(store, table, op = "delete_where",
           removed = removed, added = added, intentId = Some(intentId),
           dvBasis = removed.map(k => k -> dvMap.get.get(k).map(_.key)).toMap,
           eqBasis = Some(eqList.map(_.key)))
         catch { case e: Throwable =>
-          added.foreach(deleteWithSidecar(store, _))
+          added.foreach(StagedPublish.remove(store, _, Context))
           store.delete(LakeVersions.intentKey(table, intentId))
           throw e
         }
         if (!LakeVersions.isRetained(store, table)) {
-          removed.foreach(deleteWithSidecar(store, _))
+          removed.foreach(StagedPublish.remove(store, _, Context))
           LakeVersions.pruneChainIfLarge(store, table, removed.size)
         }
       }
@@ -750,8 +739,7 @@ object LakeMaintenance {
       throw e
     } finally {
       pool.shutdown()
-      try store.deletePrefix(staging) catch { case _: Throwable => () }
-      try store.deletePrefix(ZoneMaps.Prefix + staging) catch { case _: Throwable => () }
+      StagedPublish.sweep(store, staging)
     }
   }
 
@@ -803,7 +791,7 @@ object LakeMaintenance {
       Manifests.invalidateIfCovers(store, table,
         ks.map(t => LakeKeys.hourPrefixOf(t._2)).min)
     }
-    KeyWalk.foreach(store, keys, KeyWalk.Delete)(deleteWithSidecar)
+    KeyWalk.foreach(store, keys, KeyWalk.Delete)(StagedPublish.remove(_, _, Context))
     byTable.foreach { case (table, ks) => // again after: a racing seal heals
       Manifests.invalidateIfCovers(store, table,
         ks.map(t => LakeKeys.hourPrefixOf(t._2)).min)
@@ -863,7 +851,6 @@ object LakeMaintenance {
     * sweep with their data prefix. Published objects are out of scope by
     * construction. */
   def sweepStaging(store: HadoopStore, olderThan: Instant): StagingSweepReport = {
-    val Staging = "_staging"
     def firstLevel(root: String): Seq[String] =
       store.list(root).map { k =>
         val rest = k.stripPrefix(root + "/")
@@ -875,14 +862,13 @@ object LakeMaintenance {
     // the zone-map mirror of a data prefix sweeps with it; mirrors whose
     // data prefix is already gone (a crash between the two deletePrefix
     // calls of a normal cleanup) are swept on their own age below
-    val entries = firstLevel(Staging) ++
-      firstLevel(s"${ZoneMaps.Prefix}$Staging").map(_.stripPrefix(ZoneMaps.Prefix))
+    val entries = firstLevel(StagedPublish.Root) ++
+      firstLevel(ZoneMaps.Prefix + StagedPublish.Root).map(_.stripPrefix(ZoneMaps.Prefix))
     entries.distinct.foreach { prefix =>
       val newest = Seq(store.newestModification(prefix),
         store.newestModification(ZoneMaps.Prefix + prefix)).flatten
       if (newest.nonEmpty && newest.forall(_.isBefore(olderThan))) {
-        try store.deletePrefix(prefix) catch { case _: Throwable => () }
-        try store.deletePrefix(ZoneMaps.Prefix + prefix) catch { case _: Throwable => () }
+        StagedPublish.sweep(store, prefix)
         swept += 1
       } else kept += 1
     }
@@ -917,12 +903,8 @@ object LakeMaintenance {
           val ik = LakeVersions.intentKey(table, id)
           val old = store.newestModification(ik).exists(_.isBefore(olderThan))
           if (old) {
-            LakeVersions.readIntent(store, table, id).getOrElse(Nil).foreach { k =>
-              store.delete(k)
-              ZoneMaps.deleteSidecarSignaled(store, k,
-                "graft.LakeMaintenance.sweepStaging")
-              store.delete(BloomMaps.bloomKey(k))
-            }
+            LakeVersions.readIntent(store, table, id).getOrElse(Nil)
+              .foreach(StagedPublish.remove(store, _, "graft.LakeMaintenance.sweepStaging"))
             store.delete(ik)
             swept += 1
           } else kept += 1

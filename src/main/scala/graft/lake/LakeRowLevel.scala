@@ -546,7 +546,7 @@ final class LakeCowWrite(rootUri: String, lakeSchema: TableSchema,
                          inSchema: StructType, op: LakeRowLevelOperation)
     extends Write with BatchWrite {
 
-  private val staging = s"_staging/cow-${java.util.UUID.randomUUID()}"
+  private val staging = StagedPublish.stagingPrefix("cow")
   @volatile private var policy: LakeRowLevel.SidecarPolicy = _
 
   override def toBatch: BatchWrite = this
@@ -600,11 +600,7 @@ final class LakeCowWrite(rootUri: String, lakeSchema: TableSchema,
       val intentId = java.util.UUID.randomUUID().toString
       LakeVersions.writeIntent(store, table, intentId, added ++ inserted)
       staged.foreach { k =>
-        val dst = dstOf(k)
-        store.rename(k, dst)
-        if (p.zoneMaps) store.rename(ZoneMaps.statsKey(k), ZoneMaps.statsKey(dst))
-        if (p.bloomColumns.nonEmpty)
-          store.rename(BloomMaps.bloomKey(k), BloomMaps.bloomKey(dst))
+        StagedPublish.move(store, k, dstOf(k), p.zoneMaps, p.bloomColumns.nonEmpty)
       }
       try LakeVersions.commit(store, table,
         op = op.command().toString.toLowerCase(java.util.Locale.ROOT),
@@ -624,11 +620,7 @@ final class LakeCowWrite(rootUri: String, lakeSchema: TableSchema,
       catch { case e: Throwable =>
         // un-publish: nothing committed, so deleting our renamed keys
         // (and the intent) restores the exact pre-statement table
-        (added ++ inserted).foreach { dst =>
-          store.delete(dst)
-          ZoneMaps.deleteSidecarSignaled(store, dst, "graft-lake cow abort")
-          store.delete(BloomMaps.bloomKey(dst))
-        }
+        (added ++ inserted).foreach(StagedPublish.remove(store, _, "graft-lake cow abort"))
         store.delete(LakeVersions.intentKey(table, intentId))
         throw e
       }
@@ -642,17 +634,12 @@ final class LakeCowWrite(rootUri: String, lakeSchema: TableSchema,
       }
       if (hours.nonEmpty)
         Manifests.invalidateIfCovers(store, table, hours.min)
-    } finally cleanupStaging(store)
+    } finally StagedPublish.sweep(store, staging)
   }
 
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    cleanupStaging(new HadoopStore(rootUri))
-
-  private def cleanupStaging(store: Store): Unit = {
-    try store.deletePrefix(staging) catch { case _: Throwable => () }
-    try store.deletePrefix(ZoneMaps.Prefix + staging) catch { case _: Throwable => () }
-  }
+    StagedPublish.sweep(new HadoopStore(rootUri), staging)
 }
 
 final class LakeCowWriterFactory(rootUri: String, lakeSchema: TableSchema,

@@ -829,11 +829,7 @@ object LakeVersions {
           // present is logically dead on EVERY future chain — deleting
           // it is safe even if this CAS attempt loses
           val present = stillPresent(store, parentTombs)
-          present.foreach { k =>
-            store.delete(k)
-            ZoneMaps.deleteSidecarSignaled(store, k, "graft.LakeVersions")
-            store.delete(BloomMaps.bloomKey(k))
-          }
+          present.foreach(StagedPublish.remove(store, _, "graft.LakeVersions"))
           Nil
         }
       // RETAINED SNAPSHOT, delta-encoded (round 17, the scale fix for
@@ -1400,11 +1396,7 @@ object LakeVersions {
         .flatMap(r => resolveLiveOpt(store, table, r).getOrElse(Nil)).toSet ++
         LakeReader.listTableKeys(store, table, None)
     val reclaim = h.tombstones.filterNot(needed).filter(store.exists)
-    reclaim.foreach { k =>
-      store.delete(k)
-      ZoneMaps.deleteSidecarSignaled(store, k, "graft.LakeVersions")
-      store.delete(BloomMaps.bloomKey(k))
-    }
+    reclaim.foreach(StagedPublish.remove(store, _, "graft.LakeVersions"))
     // delete-vector files no kept generation references (superseded
     // vectors retention kept alive; crash-orphans of an aborted MOR
     // publish) reclaim on the same pass — one `_dv/<table>/` listing.

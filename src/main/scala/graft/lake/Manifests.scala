@@ -129,7 +129,7 @@ object Manifests {
     val keys = LakeReader.rawListTableKeys(store, table,
       Some((Instant.EPOCH, hour))).sorted
     val upToPfx = LakeKeys.datePrefix(hour)
-    val staging = s"_staging/manifest-${java.util.UUID.randomUUID()}"
+    val staging = StagedPublish.stagingPrefix("manifest")
     // any failure between create and the rename landing deletes the
     // staged key — no other job's staging sweep covers `_staging/
     // manifest-*`, so a leaked orphan would accumulate forever
@@ -164,8 +164,8 @@ object Manifests {
     *
     * The guard is CONVENTIONAL, not structural — it lives at every
     * data-object publish/retire site: `LakeWriter.write` (direct,
-    * non-staged), the Collector flush, `LakeSink.landBatch`,
-    * `LakeWrite.commit`, `LakeStreamingWrite.commit`,
+    * non-staged), the Collector flush, `StagedPublish.publishEpoch`
+    * (both streaming sinks), `LakeWrite.commit`,
     * `LakeMaintenance.compact`, and both expire variants. A NEW path
     * that lands or deletes a data object must call it too, or sealed
     * reads go quietly stale (ManifestSpec pins each existing site). */

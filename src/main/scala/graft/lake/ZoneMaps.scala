@@ -24,14 +24,15 @@ import java.nio.charset.StandardCharsets
   *
   * Writer coverage: the batch writer ([[LakeWriter.write]]), the
   * compactor ([[LakeMaintenance.compact]]) AND the streaming sink
-  * ([[graft.streaming.LakeSink]], `zoneMaps = true`) land sidecars. The
-  * sink stages and renames each sidecar exactly like its data object, so
-  * the replay-idempotent epoch publish (probe-deletes, heal paths,
-  * staging cleanup) carries sidecars for free — a streamed-then-pruned
-  * read skips objects without waiting for a compaction pass. With the
-  * sink's zone maps OFF, a replayed epoch deletes any sidecar a previous
-  * attempt left under a rewritten key (a stale sidecar under fresh bytes
-  * is the one configuration that could prune wrongly).
+  * ([[graft.streaming.LakeSink]], `zoneMaps = true`) land sidecars.
+  * Every writer stages each sidecar beside its data object, and
+  * [[StagedPublish]] moves, removes and sweeps them together, so the
+  * replay-idempotent epoch publish (leftover deletes, staging cleanup)
+  * carries sidecars for free — a streamed-then-pruned read skips objects
+  * without waiting for a compaction pass. With the sink's zone maps OFF,
+  * a replayed epoch deletes any sidecar a previous attempt left under a
+  * rewritten key (a stale sidecar under fresh bytes is the one
+  * configuration that could prune wrongly).
   *
   * Orderable columns: INTEGER (long order), FLOAT (IEEE order on finite
   * values; NaN observations poison the column's stats to "unknown" rather
@@ -253,22 +254,6 @@ object ZoneMaps {
       }
     }
   } catch { case _: Exception => None }
-
-  /** Delete `dataKey`'s sidecars — stats AND bloom — SIGNALING a fault
-    * instead of throwing or swallowing: every caller runs after the data
-    * key is already gone (epoch-replay cleanup, retention, compaction
-    * retire), where failing the operation over a sidecar is wrong —
-    * reads never consult orphan sidecars (they are driven by data-key
-    * listing) — but an unreported orphan is a silent storage leak. One
-    * implementation so the policy (and any future retry/metrics change)
-    * cannot drift per call site. */
-  def deleteSidecarSignaled(store: Store, dataKey: String, context: String): Unit =
-    Seq(statsKey(dataKey), BloomMaps.bloomKey(dataKey)).foreach { sk =>
-      try store.delete(sk) catch {
-        case e: Throwable => System.err.println(
-          s"[$context] orphaned sidecar $sk under deleted key (delete failed: $e)")
-      }
-    }
 
   def write(store: Store, objectKey: String, stats: ObjectStats): Unit = {
     val out = store.create(statsKey(objectKey))

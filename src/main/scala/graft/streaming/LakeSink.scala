@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.collector.{FlushInfo, FlushTrigger}
-import graft.lake.LakeWriter
+import graft.lake.{LakeWriter, StagedPublish}
 import graft.types.TableSchema
 
 import java.time.Instant
@@ -113,30 +113,18 @@ object LakeSink {
     * and write in one pass with exact per-object accounting.
     *
     * Commit protocol (the piece task-level delete-on-failure can't give):
-    * tasks write under a job-scoped `_staging/` prefix — invisible to
-    * readers, whose key parser rejects it — and only the keys the
-    * SUCCESSFUL attempts reported are renamed into the final layout, so a
-    * hard-killed executor's partial object or a speculative twin that ran
-    * to completion never reaches readable keys. Final object names are
-    * deterministic per (table, epoch, index): when the driver dies after
-    * publishing but before Spark commits the epoch, the replayed epoch
-    * REWRITES the same keys instead of duplicating — idempotent as long as
-    * the replay lands in the same UTC flush hour (a replay that crosses the
-    * hour boundary can duplicate; compaction / [[graft.operators.Upsert]]
-    * are the recovery). Two refinements to that determinism:
-    *
-    *  - `sinkId` folds into the name seed. Deterministic names mean two
-    *    CONCURRENT writers landing the same table (separate checkpoints,
-    *    both starting at epoch 0) would silently overwrite each other's
-    *    objects; distinct `sinkId`s (e.g. the checkpoint path) keep their
-    *    key spaces disjoint. It must be STABLE across restarts of the same
-    *    query — a per-run random id would break replay idempotence.
-    *  - A replay that produces FEWER objects than the first attempt would
-    *    leave the first attempt's higher-index objects behind as
-    *    duplicates; after publishing, the probe-delete loop below removes
-    *    same-(sinkId, table, epoch) keys at indices ≥ the published count
-    *    (leftovers are index-contiguous by construction, so probing stops
-    *    at the first missing key).
+    * tasks write under a job-scoped `_staging/` prefix, and only the keys
+    * the SUCCESSFUL attempts reported are published, so a hard-killed
+    * executor's partial object or a speculative twin that ran to
+    * completion never reaches readable keys. The publish is
+    * [[graft.lake.StagedPublish.publishEpoch]], the one both streaming
+    * sinks share: deterministic per-(sinkId, table, epoch, index) names
+    * that a replay rewrites, the merge-on-read × replay chain guard,
+    * stale-sidecar deletes and leftover cleanup. `sinkId` folds into the
+    * name seed: two CONCURRENT writers landing the same table (separate
+    * checkpoints, both starting at epoch 0) would otherwise overwrite
+    * each other's objects. It must be STABLE across restarts of the same
+    * query — a per-run random id would break replay idempotence.
     *
     * FlushInfo.ageMillis on this path is the epoch's
     * land-to-publish duration (streaming has no per-record arrival clock —
@@ -158,155 +146,27 @@ object LakeSink {
         if (n >= recordLimit) FlushTrigger.RecordLimit else FlushTrigger.AgeLimit
       val t0 = System.currentTimeMillis()
       val flushTime = Instant.now()
-      val staging = s"_staging/${schema.name}-$epochId-${java.util.UUID.randomUUID()}"
-      // publishStore is a test seam: the driver-side publish protocol
-      // (rename/exists/delete/deletePrefix) runs against an injectable
-      // Store so its behavior under S3-like semantics — copy+delete
-      // rename, transient put failures — is spec-pinned (FaultyStoreSpec)
-      // even though the sandbox has no real object store. Task-side
-      // object writes (LakeWriter) construct their own per-executor
-      // HadoopStore either way.
+      val staging = StagedPublish.stagingPrefix(s"${schema.name}-$epochId")
+      // publishStore is a test seam: the driver-side publish runs against
+      // an injectable Store so its behavior under S3-like semantics —
+      // copy+delete rename, transient put failures — is spec-pinned
+      // (FaultyStoreSpec) even though the sandbox has no real object
+      // store. Task-side object writes (LakeWriter) construct their own
+      // per-executor HadoopStore either way.
       val store = if (publishStore != null) publishStore
                   else new graft.lake.HadoopStore(rootUri)
       try {
-        // epochs land in the current hour — above any legal seal point —
-        // but the manifest guard is one exists() probe per epoch
-        graft.lake.Manifests.invalidateIfCovers(store, schema.name,
-          graft.lake.LakeKeys.datePrefix(flushTime))
         val written = LakeWriter.write(sized, schema, rootUri, flushTime, gzip,
           maxRecordsPerObject = recordLimit, keyPrefix = s"$staging/",
           zoneMaps = zoneMaps)
-        def epochKey(i: Int): (java.util.UUID, String) = {
-          // the default (no sinkId) seed must stay byte-identical to the
-          // pre-sinkId format: a stream that landed epochs under the old
-          // names and restarts on newer code must REWRITE those keys on
-          // replay, not write a disjoint second copy it would never clean
-          val seed = if (sinkId.isEmpty) s"${schema.name}:$epochId:$i"
-                     else s"$sinkId:${schema.name}:$epochId:$i"
-          val id = java.util.UUID.nameUUIDFromBytes(
-            seed.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          (id, graft.lake.LakeKeys.objectKey(schema.name, flushTime, id, gzip))
-        }
-        // MERGE-ON-READ × REPLAY guard (round 17): a replayed epoch
-        // REWRITES its deterministic keys — safe for plain appends and
-        // under equality deletes (value-based filters re-apply to the
-        // replayed rows identically), but NOT for keys a committed DML
-        // statement has since TOMBSTONED (the rewrite would resurrect a
-        // retired object) or VECTORED (positions were computed against
-        // the first attempt's bytes; a rewrite under them corrupts).
-        // One exists() probe detects the replay; only then is the chain
-        // consulted. Failing here is deliberate and loud — the remedy
-        // is compaction (which folds vectors and re-keys the data),
-        // never a silent rewrite.
-        val replayView: Option[graft.lake.LakeVersions.TableView] =
-          if (store.exists(epochKey(0)._2))
-            Some(graft.lake.LakeVersions.tableView(store, schema.name))
-          else None
-        def chainGuard(k: String, rewriting: Boolean): Unit =
-          replayView.foreach { view =>
-            // a rewrite is unsafe under EITHER mark; a leftover DELETE
-            // only under a vector (deleting a tombstoned leftover just
-            // finishes the interrupted retire)
-            require(!view.dvs.contains(k) &&
-                !(rewriting && view.excl.contains(k)),
-              s"graft-lake sink: replaying epoch $epochId would " +
-                s"${if (rewriting) "rewrite" else "delete"} $k, which a " +
-                "committed DML statement has since tombstoned or " +
-                "vectored — that would corrupt. CALL lake.system.compact " +
-                s"on '${schema.name}', then restart the stream.")
-          }
-        val published = written.sortBy(_.key).zipWithIndex.map { case (w, i) =>
-          val (id, dst) = epochKey(i)
-          chainGuard(dst, rewriting = true)
-          store.rename(w.key, dst)
-          // the sidecar is staged+renamed EXACTLY like its data object, so
-          // the whole replay/heal protocol below carries it for free. With
-          // zone maps off, any sidecar a PREVIOUS attempt left at this key
-          // must go: a replayed epoch is not guaranteed byte-identical, and
-          // a stale sidecar under a rewritten object would prune wrongly.
-          if (zoneMaps)
-            store.rename(graft.lake.ZoneMaps.statsKey(w.key),
-              graft.lake.ZoneMaps.statsKey(dst))
-          else
-            // NO failure-swallowing here: delete on a missing key is a
-            // no-op, so the only way this throws is a real store fault —
-            // and eating it would commit the epoch with a stale sidecar
-            // under rewritten bytes, permanently (no replay retries a
-            // committed epoch). Let it fail the batch; the replay heals.
-            store.delete(graft.lake.ZoneMaps.statsKey(dst))
-          // the sink never writes BLOOM sidecars, but a batch index pass
-          // (LakeWriter/compact with bloomColumns) may have landed one
-          // under this table — and this publish may be a replay REWRITING
-          // dst with different bytes, under which a stale bloom could
-          // wrongly SKIP. Same no-swallowing contract as the stats
-          // sidecar above. Cost: one guaranteed-miss delete per published
-          // object in the common no-bloom case — deliberately NOT gated
-          // on exists() (that is one RPC either way, and 2 on a hit; a
-          // blind delete is 1 always, and S3-class stores price DELETE
-          // requests at zero).
-          store.delete(graft.lake.BloomMaps.bloomKey(dst))
-          w.copy(key = dst, id = id)
-        }
-        // a replay that produced fewer objects than the first attempt must
-        // delete the first attempt's leftover higher-index keys (contiguous
-        // from the published count; stop at the first missing one) — each
-        // with its sidecar, which would otherwise orphan
-        var extra = published.length
-        var moreLeftovers = true
-        while (moreLeftovers) {
-          val (_, k) = epochKey(extra)
-          if (store.exists(k)) {
-            // deleting a VECTORED leftover would dangle its committed
-            // mapping (tombstoned is fine — deletion finishes the
-            // retire); the replay guard covers it
-            chainGuard(k, rewriting = false)
-            store.delete(k)
-            graft.lake.ZoneMaps.deleteSidecarSignaled(store, k,
-              "graft.LakeSink leftover-cleanup")
-            extra += 1
-          } else moreLeftovers = false
-        }
-        // heal objects landed by the short-lived intermediate seed format
-        // (":table:epoch:i" — sinkId folded in without the empty-default
-        // carve-out): same epoch, disjoint key space, so a replay would
-        // otherwise duplicate them instead of rewriting (same hour-boundary
-        // caveat as the loop above). Runs REGARDLESS of the configured
-        // sinkId — a stream that landed intermediate-format epochs and
-        // restarts with a sinkId newly configured must still clean them —
-        // and is a no-op (one exists() probe) when no such objects exist.
-        locally {
-          def interKey(i: Int): String = {
-            val id = java.util.UUID.nameUUIDFromBytes(
-              s":${schema.name}:$epochId:$i"
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            graft.lake.LakeKeys.objectKey(schema.name, flushTime, id, gzip)
-          }
-          var j = 0
-          var moreInter = true
-          while (moreInter) {
-            val k = interKey(j)
-            if (store.exists(k)) {
-              store.delete(k)
-              graft.lake.ZoneMaps.deleteSidecarSignaled(store, k,
-                "graft.LakeSink intermediate-seed-cleanup")
-              j += 1
-            } else moreInter = false
-          }
-        }
-        // again AFTER the epoch publish: a seal racing the commit heals
-        graft.lake.Manifests.invalidateIfCovers(store, schema.name,
-          graft.lake.LakeKeys.datePrefix(flushTime))
+        val published = StagedPublish.publishEpoch(store, schema.name, sinkId,
+          epochId, flushTime, gzip, zoneMaps, written.map(_.key))
+        val records = written.map(w => w.key -> w.records).toMap
         val age = System.currentTimeMillis() - t0
-        published.foreach { w =>
-          onFlush(FlushInfo(schema.name, w.id, trigger, w.records, age, w.key))
+        published.foreach { p =>
+          onFlush(FlushInfo(schema.name, p.id, trigger, records(p.staged), age, p.key))
         }
-      } finally {
-        // success or failure: no unpublished attempt output may linger —
-        // including staged zone-map sidecars
-        try store.deletePrefix(staging) catch { case _: Throwable => () }
-        try store.deletePrefix(graft.lake.ZoneMaps.Prefix + staging)
-        catch { case _: Throwable => () }
-      }
+      } finally StagedPublish.sweep(store, staging)
     }
 
   /** Start with availableNow semantics (drain whatever is buffered, then

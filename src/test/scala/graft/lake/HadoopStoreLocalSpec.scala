@@ -16,6 +16,7 @@ import graft.TempDirs
   * reaches the Hadoop calls that start one. Every store shares one
   * Hadoop `Configuration`. */
 class HadoopStoreLocalSpec extends AnyFunSuite with TempDirs {
+  import HadoopStoreLocalSpec.scalaSources
 
   private def write(f: JPath, s: String, mtime: Long): Unit = {
     Files.createDirectories(f.getParent)
@@ -178,12 +179,6 @@ class HadoopStoreLocalSpec extends AnyFunSuite with TempDirs {
       s"use HadoopStore.conf:\n${hits.mkString("\n")}")
   }
 
-  private def scalaSources(dir: JPath): Seq[JPath] = {
-    val s = Files.walk(dir)
-    try s.filter(_.toString.endsWith(".scala")).toArray.toSeq.map(_.asInstanceOf[JPath])
-    finally s.close()
-  }
-
   test("src/main calls Hadoop's create, mkdirs and listFiles only in Store's non-local branches") {
     val main = Paths.get("src", "main", "scala")
     assert(Files.isDirectory(main), s"run from the repo root; no $main")
@@ -201,6 +196,15 @@ class HadoopStoreLocalSpec extends AnyFunSuite with TempDirs {
     } yield s"$file:${n + 1}: ${line.trim}"
     assert(hits.isEmpty, "on file:// these fork chmod/ls per object without native Hadoop; " +
       s"go through HadoopStore or FileSystem.listStatus:\n${hits.mkString("\n")}")
+  }
+}
+
+object HadoopStoreLocalSpec {
+  /** Every `.scala` file under `dir`: the walk the source guards share. */
+  def scalaSources(dir: JPath): Seq[JPath] = {
+    val s = Files.walk(dir)
+    try s.filter(_.toString.endsWith(".scala")).toArray.toSeq.map(_.asInstanceOf[JPath])
+    finally s.close()
   }
 }
 

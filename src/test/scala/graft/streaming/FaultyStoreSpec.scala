@@ -7,10 +7,14 @@ import graft.types.{ColType, TableSchema}
 import java.io.{InputStream, OutputStream}
 import java.sql.Timestamp
 
-/** The epoch-publish protocol under S3-LIKE store semantics, with no S3
-  * in the sandbox: a wrapper [[Store]] forces rename to COPY+DELETE (the
-  * trait's object-store default — `Store.rename`'s own fallback) and
-  * injects transient put failures mid-publish. Pins the two claims the
+/** The epoch publish both streaming sinks share
+  * ([[graft.lake.StagedPublish.publishEpoch]]) under S3-LIKE store
+  * semantics, with no S3 in the sandbox: a wrapper [[Store]] forces
+  * rename to COPY+DELETE (the trait's object-store default —
+  * `Store.rename`'s own fallback) and injects transient put failures
+  * mid-publish. The publish cases run with both name seeds: LakeSink's
+  * default `table:epoch:i` and the `sinkId:table:epoch:i` form the
+  * `graft-lake` streaming write always uses. Pins the two claims the
   * real-S3 gap note (SURVEY §7.4.6) rests on:
   *
   *  1. nothing in the publish protocol depends on atomic rename — a full
@@ -78,13 +82,18 @@ class FaultyStoreSpec extends SparkSuite {
     "event_id" -> ColType.CInteger, "ts" -> ColType.CTime,
     "user_id" -> ColType.CInteger, "value" -> ColType.CFloat))
 
-  private def land(root: String, store: Store, n: Int): Unit = {
+  /** The two name seeds of epoch 0's object `i`, by sink id: LakeSink's
+    * default (no sink id) and the streaming write's `sinkId:` form. */
+  private val Seeds: Seq[(String, Int => String)] = Seq(
+    "" -> (i => s"s3_ev:0:$i"), "query-7" -> (i => s"query-7:s3_ev:0:$i"))
+
+  private def land(root: String, store: Store, n: Int, sinkId: String): Unit = {
     import spark.implicits._
     val df = (0 until n).map(i => Ev(i, ts("2024-07-01T00:00:00Z"), i % 3, i * 1.0))
       .toDF("event_id", "ts", "user_id", "value")
     LakeSink.landBatch(df, n.toLong, schema, root, gzip = true,
       recordLimit = 100L, writerFloor = 1, onFlush = _ => (), epochId = 0L,
-      publishStore = store)
+      sinkId = sinkId, publishStore = store)
   }
 
   test("sidecar faulting MID-READ collapses the metadata aggregate to None, never garbage") {
@@ -118,16 +127,34 @@ class FaultyStoreSpec extends SparkSuite {
   }
 
   test("a full epoch publishes exactly under copy+delete rename (no atomic rename anywhere)") {
-    val root = tempUri("graft-s3ish")
-    val faulty = new FaultyStore(new HadoopStore(root))
-    land(root, faulty, 250) // 3 objects, all renamed via copy+delete
-    assert(faulty.puts >= 3, "publish must have routed through copy+delete")
-    val store = new HadoopStore(root)
-    assert(LakeReader.read(spark, root, "s3_ev").count() == 250)
-    assert(store.list("_staging").isEmpty, "staging must be cleaned")
+    Seeds.foreach { case (sinkId, seed) =>
+      avoidHourBoundary()
+      val root = tempUri("graft-s3ish")
+      val faulty = new FaultyStore(new HadoopStore(root))
+      land(root, faulty, 250, sinkId) // 3 objects, all renamed via copy+delete
+      assert(faulty.puts >= 3, "publish must have routed through copy+delete")
+      val store = new HadoopStore(root)
+      assert(LakeReader.read(spark, root, "s3_ev").count() == 250)
+      val keys = ids(store)
+      assert(keys == (0 until keys.size).map(seed).map(uuidOf).toSet,
+        s"sinkId '$sinkId': keys must carry the epoch seed: $keys")
+      assert(store.list("_staging").isEmpty, "staging must be cleaned")
+    }
   }
 
   test("mid-publish put failure: replay heals the partial publish to exactly-once") {
+    Seeds.foreach { case (sinkId, seed) => healsMidPublishFailure(sinkId, seed) }
+  }
+
+  private def uuidOf(seed: String): String = java.util.UUID.nameUUIDFromBytes(
+    seed.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
+
+  /** The uuids of the table's readable objects. */
+  private def ids(store: Store): Set[String] =
+    LakeReader.listTableKeys(store, "s3_ev", None)
+      .map(_.split("/").last.stripSuffix(".csv.gz")).toSet
+
+  private def healsMidPublishFailure(sinkId: String, seed: Int => String): Unit = {
     avoidHourBoundary() // two land calls must share one UTC flush hour
     val root = tempUri("graft-s3ish-heal")
     val faulty = new FaultyStore(new HadoopStore(root))
@@ -135,7 +162,7 @@ class FaultyStoreSpec extends SparkSuite {
     // its destination began receiving bytes (the worst S3 partial state):
     // object 0 published, object 1 half-copied garbage, object 2 unmoved
     faulty.failPutIn = 1
-    val e = intercept[Exception] { land(root, faulty, 250) }
+    val e = intercept[Exception] { land(root, faulty, 250, sinkId) }
     assert(e.getMessage.contains("injected transient put failure"),
       s"the publish failure must propagate (the epoch must NOT commit): $e")
     val store = new HadoopStore(root)
@@ -144,17 +171,15 @@ class FaultyStoreSpec extends SparkSuite {
     // the replay a restarted query performs: same epoch, same data, now
     // healthy. Deterministic names REWRITE the published object AND the
     // half-copied garbage at object 1's final key; nothing duplicates.
-    land(root, faulty, 250)
+    land(root, faulty, 250, sinkId)
     val back = LakeReader.read(spark, root, "s3_ev")
     assert(back.count() == 250, "replay must heal to exactly-once")
     // exactly the replay's CONTIGUOUS deterministic epoch keys — the
     // published set must be ids 0..k-1 of the seed formula, nothing else
     // (no orphan from the failed attempt, however the rows split)
-    val keys = LakeReader.listTableKeys(store, "s3_ev", None)
-    val expect = keys.indices.map(i => java.util.UUID.nameUUIDFromBytes(
-      s"s3_ev:0:$i".getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString)
-    assert(keys.map(_.split("/").last.stripSuffix(".csv.gz")).toSet == expect.toSet,
-      s"published keys must be the contiguous deterministic set: $keys")
+    val keys = ids(store)
+    assert(keys == (0 until keys.size).map(seed).map(uuidOf).toSet,
+      s"sinkId '$sinkId': published keys must be the contiguous deterministic set: $keys")
     // row-level integrity: the garbage half-copy was fully rewritten
     assert(back.agg(org.apache.spark.sql.functions.sum("event_id"))
       .collect()(0).getLong(0) == (0 until 250).sum.toLong)

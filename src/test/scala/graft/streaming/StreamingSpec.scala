@@ -163,36 +163,6 @@ class StreamingSpec extends SparkSuite {
       s"the hybrid walk must scan the poisoned hour to exactness: $hybrid")
   }
 
-  test("intermediate-seed leftovers are healed even when a sinkId is newly configured") {
-    import spark.implicits._
-    val root = tempUri("graft-heal-spec")
-    val schema = TableSchema("heal_ev", Seq(
-      "event_id" -> ColType.CInteger, "ts" -> ColType.CTime,
-      "user_id" -> ColType.CInteger, "value" -> ColType.CFloat))
-    val store = new graft.lake.HadoopStore(root)
-    // the planted key and landBatch's internal flushTime must share a UTC
-    // hour (objectKey embeds YYYY/MM/DD/HH)
-    avoidHourBoundary()
-    // simulate an epoch landed by the short-lived intermediate seed format
-    // (":table:epoch:i") by an older build of this stream
-    val interId = java.util.UUID.nameUUIDFromBytes(
-      ":heal_ev:0:0".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val interKey = graft.lake.LakeKeys.objectKey("heal_ev",
-      java.time.Instant.now(), interId, gzip = true)
-    store.put(interKey, new java.io.ByteArrayInputStream(
-      Array[Byte](31, -117, 8, 0, 0, 0, 0, 0, 0, 0, 3, 0,
-        0, 0, 0, 0, 0, 0, 0, 0))) // minimal gzip stream — content irrelevant
-    // the stream restarts WITH a sinkId and replays the epoch: the replay
-    // must rewrite under the sinkId names AND clean the intermediate copy
-    val df = (0 until 50).map(i => Ev(i, ts("2024-07-01T00:00:00Z"), i % 3, i * 1.0))
-      .toDF("event_id", "ts", "user_id", "value")
-    LakeSink.landBatch(df, 50L, schema, root, gzip = true, recordLimit = 100L,
-      writerFloor = 1, onFlush = _ => (), epochId = 0L, sinkId = "ckpt-new")
-    assert(!store.exists(interKey),
-      "intermediate-format object must be swept on replay regardless of sinkId")
-    assert(LakeReader.read(spark, root, "heal_ev").count() == 50)
-  }
-
   test("concurrent writers with distinct sinkIds never overwrite each other") {
     avoidHourBoundary()
     import spark.implicits._
